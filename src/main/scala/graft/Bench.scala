@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark runner: times each registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Failed queries are reported in an `errors` map
   * (name → exception class) instead of being silently folded into the
@@ -37,6 +39,65 @@ object Bench {
 
   private def fmt(v: Double): String = f"$v%.3f"
 
+  /** Seconds for one `fn(spark, sfDir).count()`. The query's tracked
+    * intermediate caches ([[graft.ops.QueryCaches]]) are released in
+    * `finally`, outside the timed region: operators persist shared
+    * intermediates inside one query's plan, and a later run of the same
+    * query would otherwise re-derive the same plan and read the
+    * CacheManager entry instead of recomputing from the parquet inputs
+    * — a failed run included. */
+  private[graft] def timedCount(
+      spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+    finally graft.ops.QueryCaches.releaseAll()
+  }
+
+  /** The previous record's baselines for the regression gate. */
+  private[graft] final case class Baseline(
+      /** first-pass seconds per query */
+      queries: Map[String, Double],
+      /** box-control seconds, when recorded and positive */
+      control: Option[Double],
+      /** headline 3-run arrays: the warm-median baselines */
+      runs: Map[String, Seq[Double]],
+      /** isolated re-run seconds: the rerun-clearing baselines */
+      reruns: Map[String, Double])
+
+  private[graft] val noBaseline = Baseline(Map.empty, None, Map.empty, Map.empty)
+
+  /** Baselines from a previous BENCH_FULL.json text. A record from a
+    * DIFFERENT scale factor is no baseline at all — comparing sf0.1
+    * times against an sf10 record flags dozens of phantom regressions
+    * (and would mask real ones the other way). Same for a record under
+    * a different TIMING SCHEME: per-query numbers went fixture-net in
+    * round 15, so a gross-timed record would show spurious improvements
+    * on fixture-heavy queries and skew the shared-corpus median —
+    * records carry "timing":"net" and an unmarked (older) record falls
+    * back to the box control. Unparseable text is no baseline either. */
+  private[graft] def readBaseline(text: String, sfDir: String): Baseline = {
+    import scala.jdk.CollectionConverters._
+    val root =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+      catch { case scala.util.control.NonFatal(_) =>
+        com.fasterxml.jackson.databind.node.MissingNode.getInstance }
+    if (root.path("sf").asText() != sfDir || root.path("timing").asText() != "net") noBaseline
+    else {
+      def fields(key: String) = root.path(key).properties().asScala.toSeq
+        .map(e => e.getKey -> e.getValue)
+      def secs(key: String): Map[String, Double] =
+        fields(key).collect { case (k, v) if v.isNumber => k -> v.asDouble() }.toMap
+      Baseline(
+        queries = secs("queries"),
+        control = Some(root.path("control_sec")).filter(_.isNumber).map(_.asDouble()).filter(_ > 0),
+        runs = fields("runs").collect { case (k, v) if v.isArray && !v.isEmpty =>
+          k -> v.elements().asScala.map(_.asDouble()).toSeq
+        }.toMap,
+        reruns = secs("reruns"))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional arg: comma-separated query subset ("headline" = the curated
@@ -71,7 +132,6 @@ object Bench {
     val c0 = System.nanoTime()
     graft.fixtures.WeatherDemo.ensureCatalog(spark)
     val catalogSec = (System.nanoTime() - c0) / 1e9
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     // Box-speed CONTROL (round-14, after two rounds of false regression
     // flags on untouched sub-second queries): a fixed synthetic
     // compute+shuffle probe that NO engine code path touches — Spark
@@ -88,7 +148,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     controlRun() // codegen/JIT warm-up run, untimed
-    val controlSec = median(Seq(controlRun(), controlRun(), controlRun()))
+    val controlSec = BenchGate.median(Seq(controlRun(), controlRun(), controlRun()))
     // Per-query numbers are NET of one-time fixture builds (round-15:
     // dt_partition_evolve once reported 36.4s of which 35.9s was its
     // fixture CTAS) — the fixture registry records each build's cost,
@@ -100,20 +160,10 @@ object Bench {
       .filter { case (name, _) => subset.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val fx0 = fixtureTotal()
-      val t0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-      val gross = (System.nanoTime() - t0) / 1e9
-      // release intra-query caches OUTSIDE the timed region (round-17):
-      // operators persist shared intermediates inside one query's plan;
-      // without this, a later run of the same query re-derives the same
-      // plan and silently reads the CacheManager entry ("Asked to cache
-      // already cached data"), so warm medians were partially cached-scan
-      // times and the 298-query JVM accumulated dead cache pressure.
-      // Every timed run now recomputes from the parquet inputs.
-      graft.ops.QueryCaches.releaseAll()
-      (name, math.max(0.0, gross - (fixtureTotal() - fx0)), err)
+      try {
+        val gross = timedCount(spark, sfDir, fn)
+        (name, math.max(0.0, gross - (fixtureTotal() - fx0)), None)
+      } catch { case e: Throwable => (name, 0.0, Some(e.getClass.getSimpleName)) }
     }
     val ok = outcomes.filter(_._3.isEmpty)
     val errs = outcomes.collect { case (k, _, Some(e)) => "\"" + k + "\":\"" + e + "\"" }
@@ -136,13 +186,8 @@ object Bench {
         // fixture temp dirs) must not abort the bench AFTER the whole
         // corpus already executed — fall back to the first-pass time
         val extra = (1 to 2).flatMap { _ =>
-          try {
-            val t0 = System.nanoTime()
-            qfns(name)(spark, sfDir).count()
-            val sec = (System.nanoTime() - t0) / 1e9
-            graft.ops.QueryCaches.releaseAll() // untimed; see first pass
-            Some(sec)
-          } catch { case e: Exception =>
+          try Some(timedCount(spark, sfDir, qfns(name)))
+          catch { case e: Exception =>
             System.err.println(s"[bench] re-run of $name failed: ${e.getMessage}")
             None
           }
@@ -165,58 +210,10 @@ object Bench {
     // against the PREVIOUS BENCH_FULL.json (read before we overwrite
     // it) through [[BenchGate.evaluate]], whose arithmetic is
     // unit-tested in BenchGateSpec. Still a flag list, not a failure.
-    val prevText: Option[String] = {
-      val p = java.nio.file.Paths.get(fullOut)
-      if (!java.nio.file.Files.exists(p)) None
-      else try Some(new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
-    // a record from a DIFFERENT scale factor is no baseline at all —
-    // comparing sf0.1 times against an sf10 record flags dozens of
-    // phantom regressions (and would mask real ones the other way).
-    // Same for a record under a different TIMING SCHEME: per-query
-    // numbers went fixture-net in round 15, so a gross-timed record
-    // would show spurious improvements on fixture-heavy queries and
-    // skew the shared-corpus median — records carry "timing":"net"
-    // and an unmarked (older) record falls back to the box control.
-    val prevSameSf: Option[String] = prevText.filter(
-      _.contains(s""""sf":"$sfDir"""")).filter(_.contains(""""timing":"net""""))
-    val prevQueries: Map[String, Double] = prevSameSf.flatMap { text =>
-      val qStart = text.indexOf("\"queries\":{")
-      if (qStart < 0) None
-      else {
-        val body = text.substring(qStart + 11, text.indexOf("}", qStart))
-        Some("\"([^\"]+)\":([0-9.]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
-      }
-    }.getOrElse(Map.empty)
-    val prevControl: Option[Double] = prevSameSf.flatMap(text =>
-      "\"control_sec\":([0-9.]+)".r.findFirstMatchIn(text)
-        .map(_.group(1).toDouble).filter(_ > 0))
-    val controlScale = prevControl.map(controlSec / _).getOrElse(1.0)
-    // prior record's 3-run arrays and isolated re-run times: the
-    // like-for-like baselines for warm-median gating and rerun clearing
-    val prevRuns: Map[String, Seq[Double]] = prevSameSf.flatMap { text =>
-      val rStart = text.indexOf("\"runs\":{")
-      if (rStart < 0) None
-      else {
-        // entries hold arrays (brackets), never braces — the first '}'
-        // after the open IS the object close, even for an empty map
-        val body = text.substring(rStart + 8, text.indexOf("}", rStart))
-        Some("\"([^\"]+)\":\\[([0-9.,]+)\\]".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).split(",").toSeq.map(_.toDouble)).toMap)
-      }
-    }.getOrElse(Map.empty)
-    val prevReruns: Map[String, Double] = prevSameSf.flatMap { text =>
-      val rStart = text.indexOf("\"reruns\":{")
-      if (rStart < 0) None
-      else {
-        val body = text.substring(rStart + 10, text.indexOf("}", rStart))
-        Some("\"([^\"]+)\":([0-9.]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
-      }
-    }.getOrElse(Map.empty)
+    val prev =
+      try readBaseline(java.nio.file.Files.readString(java.nio.file.Paths.get(fullOut)), sfDir)
+      catch { case scala.util.control.NonFatal(_) => noBaseline } // absent or unreadable
+    val controlScale = prev.control.map(controlSec / _).getOrElse(1.0)
     // SELF-ADJUDICATING gate (round-16; r15 still needed manual FALSE
     // adjudications for in-run contention), LIKE-FOR-LIKE (r16 self-
     // review: warm-now vs first-pass-old masks regressions — a warm
@@ -231,12 +228,12 @@ object Bench {
     // factor that acknowledges the residual warm-vs-first asymmetry.
     // Every isolated re-run is recorded under "reruns" so repeat flags
     // converge to the tight like-for-like comparison.
-    val warmGated: Set[String] = headRuns.keySet.intersect(prevRuns.keySet)
+    val warmGated: Set[String] = headRuns.keySet.intersect(prev.runs.keySet)
     val gateNow: Map[String, Double] = ok.map { case (k, v, _) =>
-      k -> (if (warmGated(k)) median(headRuns(k)) else v)
+      k -> (if (warmGated(k)) BenchGate.median(headRuns(k)) else v)
     }.toMap
     val prevGate: Map[String, Double] =
-      prevQueries ++ warmGated.flatMap(k => prevRuns.get(k).map(rs => k -> median(rs)))
+      prev.queries ++ warmGated.flatMap(k => prev.runs.get(k).map(rs => k -> BenchGate.median(rs)))
     val gate = BenchGate.evaluate(gateNow, prevGate, controlScale)
     val cleared = scala.collection.mutable.Map[String, Double]()
     val reruns = scala.collection.mutable.Map[String, Double]()
@@ -244,16 +241,11 @@ object Bench {
       if (warmGated(k)) true // warm-vs-warm already — the flag stands
       else {
         val warm =
-          try {
-            val t0 = System.nanoTime()
-            qfns(k)(spark, sfDir).count()
-            val sec = (System.nanoTime() - t0) / 1e9
-            graft.ops.QueryCaches.releaseAll() // untimed; see first pass
-            Some(sec)
-          } catch { case _: Exception => None } // keep the flag: can't clear it
+          try Some(timedCount(spark, sfDir, qfns(k)))
+          catch { case _: Exception => None } // keep the flag: can't clear it
         warm.foreach(w => reruns(k) = w)
         val clearBar =
-          prevReruns.get(k).map(1.25 * _).getOrElse(1.5 * old) * gate.medianRatio
+          prev.reruns.get(k).map(1.25 * _).getOrElse(1.5 * old) * gate.medianRatio
         warm match {
           case Some(w) if w <= clearBar => cleared(k) = w; false
           case _                        => true
@@ -286,7 +278,7 @@ object Bench {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(fullOut),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val headQs = headline.flatMap(k => headRuns.get(k).map(rs => "\"" + k + "\":" + fmt(median(rs))))
+    val headQs = headline.flatMap(k => headRuns.get(k).map(rs => "\"" + k + "\":" + fmt(BenchGate.median(rs))))
       .mkString("{", ",", "}")
     println(
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${outcomes.size},"n_errors":${outcomes.count(_._3.isDefined)},"queries":$headQs,"queries_stat":"median_of_3","spread_max":${fmt(spreadMax)},"control_sec":${fmt(controlSec)},"median_ratio_vs_prev":${fmt(gate.medianRatio)},"n_regressions":${regressions.size},"corpus_slowdown":${gate.corpusSlowdown},$boot,"full":"BENCH_FULL.json","sf":"$sfDir"}""")

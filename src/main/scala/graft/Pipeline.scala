@@ -165,8 +165,8 @@ object Pipeline {
     def external(
         name: String,
         path: String,
-        partitioned: Boolean = false,
-        statCols: Seq[String] = Seq.empty): Unit = {
+        partitioned: Boolean,
+        statCols: Seq[String]): Unit = {
       // the skip key covers the stats CONFIG as well as the data: a
       // reload that changes refreshStats or the statCols list must
       // re-register even over unchanged bytes, or the caller's explicit

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -33,21 +34,11 @@ object Verify {
       // blocks (see [[graft.ops.QueryCaches]])
       graft.ops.QueryCaches.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes quotes, backslashes and every control char — a tab
+    // or CR in the oracle SQL must not break the reader's json.load
+    val json = new ObjectMapper()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json.writeValueAsString(SparkEntry.oracleSql.asJava))
     // subset (dev-loop) runs must MERGE into an existing errors.json, not
     // clobber it: only the queries attempted this run get their entries
     // refreshed (success drops the entry, failure replaces it) — a prior
@@ -56,18 +47,14 @@ object Verify {
     val errPath = Paths.get(s"$outDir/errors.json")
     val prior: Map[String, String] =
       if (only.isDefined && Files.exists(errPath))
-        try {
-          import scala.jdk.CollectionConverters._
-          new com.fasterxml.jackson.databind.ObjectMapper()
-            .readValue(Files.readString(errPath), classOf[java.util.Map[String, String]])
-            .asScala.toMap
-        } catch { case _: Exception => Map.empty }
+        try json.readValue(Files.readString(errPath), classOf[java.util.Map[String, String]])
+          .asScala.toMap
+        catch { case _: Exception => Map.empty }
       else Map.empty
     val attempted = SparkEntry.queries.keySet.filter(n => only.forall(_.contains(n)))
     val merged = (prior -- attempted) ++ errors
     Files.writeString(errPath,
-      merged.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      json.writeValueAsString(new java.util.TreeMap[String, String](merged.asJava)))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.model.{Clock, Schemas}
+import graft.model.Clock
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType

@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Incremental aggregate maintenance: keep a persisted, partitioned
   * aggregate table current by recomputing ONLY the partitions a new

@@ -56,7 +56,6 @@ object DataQuality {
   /** One row per constraint: (constraint, violations, passed), ordered
     * by constraint name. */
   def report(df: DataFrame, constraints: Seq[Constraint]): DataFrame = {
-    val spark = df.sparkSession
     // single-scan part: every row-level constraint is one sum(CASE)
     val rowLevel = constraints.flatMap(c => violation(c).map(v => (c.name, v)))
     val scanned: Seq[DataFrame] =
@@ -126,36 +125,32 @@ object DataQuality {
       bloomExpectedItems: Long = -1L,
       bloomNumBits: Long = -1L): DataFrame = {
     val spark = df.sparkSession
-    val estimates: Seq[(String, Column)] = constraints.map { c =>
-      violation(c) match {
-        case Some(v) => c.name -> sum(when(v, 1L).otherwise(0L))
-        case None =>
-          c match {
-            case u @ Unique(cols) =>
-              u.name -> greatest(
-                count(lit(1)) - approx_count_distinct(struct(cols.map(col): _*), rsd),
-                lit(0L))
-            case r @ RefIntegrity(childCol, parent, parentCol) =>
-              // auto-size the Bloom to the PARENT's cardinality (one
-              // cheap count over the parent key column): a fixed 1 MB
-              // filter saturates past ~1M keys, its false-positive rate
-              // heads to 1, and the screen green-lights real dangling
-              // refs — the opposite of its job. ~8 bits/key ≈ 2 % fpp.
-              val expected =
-                if (bloomExpectedItems > 0) bloomExpectedItems
-                else math.max(parent.select(col(parentCol)).count(), 1L)
-              val bits =
-                if (bloomNumBits > 0) bloomNumBits
-                else math.max(expected * 8L, 1L << 23)
-              val bloom = RuntimeFilter.buildBloom(
-                parent.select(col(parentCol)), parentCol, expected, bits)
-              val miss =
-                if (bloom == null) col(childCol).isNotNull // empty parent: every key dangles
-                else col(childCol).isNotNull &&
-                  !RuntimeFilter.mightContainBroadcast(spark, bloom, col(childCol))
-              r.name -> sum(when(miss, 1L).otherwise(0L))
-          }
-      }
+    val estimates: Seq[(String, Column)] = constraints.map {
+      case u @ Unique(cols) =>
+        u.name -> greatest(
+          count(lit(1)) - approx_count_distinct(struct(cols.map(col): _*), rsd),
+          lit(0L))
+      case r @ RefIntegrity(childCol, parent, parentCol) =>
+        // auto-size the Bloom to the PARENT's cardinality (one
+        // cheap count over the parent key column): a fixed 1 MB
+        // filter saturates past ~1M keys, its false-positive rate
+        // heads to 1, and the screen green-lights real dangling
+        // refs — the opposite of its job. ~8 bits/key ≈ 2 % fpp.
+        val expected =
+          if (bloomExpectedItems > 0) bloomExpectedItems
+          else math.max(parent.select(col(parentCol)).count(), 1L)
+        val bits =
+          if (bloomNumBits > 0) bloomNumBits
+          else math.max(expected * 8L, 1L << 23)
+        val bloom = RuntimeFilter.buildBloom(
+          parent.select(col(parentCol)), parentCol, expected, bits)
+        val miss =
+          if (bloom == null) col(childCol).isNotNull // empty parent: every key dangles
+          else col(childCol).isNotNull &&
+            !RuntimeFilter.mightContainBroadcast(spark, bloom, col(childCol))
+        r.name -> sum(when(miss, 1L).otherwise(0L))
+      // row-level constraints: violation() is defined for every one
+      case c => c.name -> sum(when(violation(c).get, 1L).otherwise(0L))
     }
     df.agg(
       estimates.head._2.alias("v0"),

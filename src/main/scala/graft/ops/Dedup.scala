@@ -55,20 +55,6 @@ object Dedup {
     )
   }
 
-  /** Explode a signature into (band index, band hash) structs for LSH
-    * bucketing: `bands` bands of `rows = k / bands` signature slots.
-    * Built as a static array (not a transform over a sequence) so `sig`
-    * is an attribute referenced `bands` times — Catalyst's
-    * CollapseProject keeps a multiply-referenced non-cheap expression in
-    * its own projection, so the signature is computed once per row, not
-    * once per band. */
-  def bandHashes(sig: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).alias("band"),
-        xxhash64(concat_ws(",", slice(sig, b * rows + 1, rows)), lit(b)).alias("band_hash"))
-    }: _*)
-
   /** MinHash-LSH index rows `(__id, __band, __bh)` for a corpus — the
     * table a production pipeline PERSISTS per ingested batch so that
     * tomorrow's batch dedups against 100 TB of history by scanning

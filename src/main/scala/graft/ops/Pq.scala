@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.functions.native
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ): compress each (normalized) vector into m

@@ -41,7 +41,4 @@ object Redaction {
   def emailCount(text: Column): Column = regexp_count(text, lit(EmailPattern))
   def ipCount(text: Column): Column = regexp_count(text, lit(Ipv4Pattern))
   def phoneCount(text: Column): Column = regexp_count(text, lit(PhonePattern))
-
-  def piiCount(text: Column): Column =
-    emailCount(text) + ipCount(text) + phoneCount(text)
 }

@@ -65,14 +65,4 @@ object Skew {
         max(col("__max")).alias("max_v"))
       .withColumn("avg_v", col("sum_v") / col("cnt_v"))
   }
-
-  /** The undecomposed single-shuffle reference (for oracles/tests). */
-  def plainAgg(df: DataFrame, keyCols: Seq[String], valueCol: String): DataFrame =
-    df.groupBy(keyCols.map(col): _*)
-      .agg(
-        sum(col(valueCol)).alias("sum_v"),
-        count(col(valueCol)).alias("cnt_v"),
-        min(col(valueCol)).alias("min_v"),
-        max(col(valueCol)).alias("max_v"))
-      .withColumn("avg_v", col("sum_v") / col("cnt_v"))
 }

@@ -315,19 +315,6 @@ object TextAnalysis {
         (s, x) => s + x),
       lit(1000000007L))
 
-  /** Token-level rolling fingerprint over xxhash64 of words (positional
-    * weight), for fast shard-local near-exact bucketing. */
-  def tokenFingerprint(text: Column): Column =
-    pmod(
-      aggregate(
-        zip_with(
-          words(text),
-          sequence(lit(1), greatest(wordCount(text), lit(1))),
-          (w, i) => pmod(xxhash64(w), lit(1000000007L)) * i.cast("long")),
-        lit(0L),
-        (s, x) => s + x),
-      lit(1000000007L))
-
   /** Add-one-smoothed bigram language-model score per document — the
     * kenlm-style fluency filter a training-corpus pipeline runs to drop
     * gibberish: `avg_logp = mean over bigrams of ln((c(w1,w2)+1) /

@@ -3,7 +3,7 @@ package graft.queries
 import graft.etl.{Dimensions, Keys}
 import graft.model.FixedClock
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

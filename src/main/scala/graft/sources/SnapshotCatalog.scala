@@ -517,10 +517,6 @@ private[sources] object SnapshotCatalog {
       (None, spec)
     }
   }
-
-  /** Back-compat shim for callers that only understand buckets. */
-  def bucketSpecOf(partitions: Array[Transform]): Option[(Seq[String], Int)] =
-    layoutOf(partitions)._1
 }
 
 /** The staged side of CTAS/RTAS: collects the query's committed part

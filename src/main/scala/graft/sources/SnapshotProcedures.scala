@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Stored procedures for snapshot-table MAINTENANCE — the pure-SQL
   * face of the engine's table-service jobs, served through Spark 4's
@@ -94,7 +93,7 @@ object SnapshotProcedures {
   }
 
   private def p(name: String, dt: DataType, default: Option[String] = None,
-      comment: String = ""): ProcedureParameter = {
+      comment: String): ProcedureParameter = {
     var b = ProcedureParameter.in(name, dt)
     default.foreach(d => b = b.defaultValue(d))
     if (comment.nonEmpty) b = b.comment(comment)

@@ -34,11 +34,6 @@ object SnapshotScanProbe {
     * task-side path above spark.graft.dv.driverBytesMax). */
   def dvTaskSideBuilds: Long = TaskSideDvResolver.taskSideBuilds.get()
 
-  /** Scans that wanted the task-side DV path but fell back to the
-    * broadcast resolver over a key type outside the raw-primitive
-    * probe set. */
-  def dvTypeFallbacks: Long = TaskSideDvResolver.typeFallbacks.get()
-
   /** Files the most recent scan planning dropped because a pushed
     * filter provably CONTRADICTS a table CHECK constraint (set per
     * scan, not accumulated). */

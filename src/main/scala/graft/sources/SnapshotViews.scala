@@ -143,8 +143,8 @@ private[graft] object SnapshotViews {
     val mode = if (overwrite) Options.Rename.OVERWRITE else Options.Rename.NONE
     try fc.rename(tmp, p, mode)
     catch {
-      case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
-          _: java.io.FileNotFoundException) =>
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+          _: java.io.FileNotFoundException =>
         f.delete(tmp, false)
         throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
       case e: java.io.IOException if e.getMessage != null &&

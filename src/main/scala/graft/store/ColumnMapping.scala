@@ -35,12 +35,6 @@ object ColumnMapping {
   def aliasOf(m: SnapshotStore.Manifest): Map[String, String] =
     m.renames.flatMap { case (l, as) => as.map(_ -> l) }.toMap
 
-  /** logical name → widened type (`ALTER COLUMN ... TYPE`). */
-  def widenMap(m: SnapshotStore.Manifest): Map[String, org.apache.spark.sql.types.DataType] =
-    m.widens.map { case (c, t) =>
-      c -> org.apache.spark.sql.types.DataType.fromDDL(t)
-    }.toMap
-
   /** EXISTS_DEFAULT columns of the pinned logical schema: (logical
     * name, folded-literal SQL, logical type). Recorded by `ALTER TABLE
     * ... ADD COLUMN ... DEFAULT` (round 15) — files written BEFORE the

@@ -84,8 +84,6 @@ object PartitionSpec {
 
   // ---- validation ---------------------------------------------------
 
-  private val temporal = Set("years", "months", "days", "hours")
-
   def validate(spec: Seq[PartField], schema: StructType): Unit = {
     require(spec.nonEmpty, "empty partition spec")
     spec.foreach { f =>

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.etl.BronzeToSilver
 import graft.model.{Clock, Schemas, SystemClock}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming variant of the bronze→silver stage.

@@ -1,14 +1,14 @@
 package graft.tools
 
 import graft.Sessions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a larger scale factor ON DISK by replicating an existing
-  * sf directory with key remapping — so the bench can see the effects
-  * an in-memory union-replication probe (`ScaleProbe`) structurally
-  * cannot: real file counts, parquet footer/page IO, shuffle spill and
-  * memory pressure at the bigger SF.
+  * sf directory with key remapping — so the bench sees what an
+  * in-memory union of copies structurally cannot: real file counts,
+  * parquet footer/page IO, shuffle spill and memory pressure at the
+  * bigger SF.
   *
   * Replication preserves the relational shape instead of cloning rows:
   *

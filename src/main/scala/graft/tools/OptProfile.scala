@@ -23,11 +23,7 @@ object OptProfile {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val times = (1 to 3).map { i =>
         spark.sparkContext.setJobDescription(s"optprofile:$name#$i")
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        graft.ops.QueryCaches.releaseAll() // untimed, same as the bench
-        sec
+        graft.Bench.timedCount(spark, sfDir, graft.SparkEntry.queries(name))
       }
       println(f"OPTPROF $name%-26s first=${times(0)}%7.3f warm=${times(1)}%7.3f / ${times(2)}%7.3f s")
     }

@@ -3,7 +3,6 @@ package graft.tools
 import graft.ops.Dedup
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Dump the ssjoin CANDIDATE-GENERATION physical plans — the full query
   * eagerly checkpoints candidates, so the final plan only shows the

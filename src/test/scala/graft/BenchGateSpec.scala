@@ -79,4 +79,35 @@ class BenchGateSpec extends AnyFunSuite {
     val v = BenchGate.evaluate(now, prev, controlScale = 1.0)
     assert(v.regressions.map(_._1) === Seq("q6", "q5"))
   }
+
+  // a previous BENCH_FULL.json record, trimmed to a few entries per map
+  private val record =
+    """{"metric":"total","value":12.345,"unit":"sec","timing":"net","n_queries":4,""" +
+    """"queries":{"a1_agg":0.512,"j1_multikey_join":1.250,"tx_bm25":2.000},""" +
+    """"queries_stat":"first_pass_net_of_fixtures",""" +
+    """"runs":{"a1_agg":[0.512,0.301,0.298],"j1_multikey_join":[1.250,0.900,0.950]},""" +
+    """"runs_stat":"headline_3_runs_first_then_warm","spread_max":1.056,""" +
+    """"errors":{"x_bad":"AnalysisException"},"control_sec":3.210,""" +
+    """"control_scale_vs_prev":1.000,"median_ratio_vs_prev":1.020,"n_shared_vs_prev":3,""" +
+    """"corpus_slowdown":false,"regressions_vs_prev":{"tx_bm25":[2.000,1.100]},""" +
+    """"flags_cleared_on_rerun":{},"reruns":{"tx_bm25":1.050},""" +
+    """"reruns_stat":"isolated_single_rerun","pipeline_bootstrap_sec":4.000,""" +
+    """"materialize_gold_sec":1.000,"catalog_bootstrap_sec":0.500,""" +
+    """"fixture_setup_sec":{"dt_fixture":0.700},"sf":"/data/sf0.1"}"""
+
+  test("a previous record yields the four baselines the gate reads") {
+    val b = Bench.readBaseline(record, "/data/sf0.1")
+    assert(b.queries === Map("a1_agg" -> 0.512, "j1_multikey_join" -> 1.25, "tx_bm25" -> 2.0))
+    assert(b.control === Some(3.21))
+    assert(b.runs === Map(
+      "a1_agg" -> Seq(0.512, 0.301, 0.298), "j1_multikey_join" -> Seq(1.25, 0.9, 0.95)))
+    assert(b.reruns === Map("tx_bm25" -> 1.05))
+  }
+
+  test("a record from another sf, another timing scheme or unparseable text is no baseline") {
+    assert(Bench.readBaseline(record, "/data/sf10") === Bench.noBaseline)
+    assert(Bench.readBaseline(record.replace(""""timing":"net",""", ""), "/data/sf0.1") ===
+      Bench.noBaseline)
+    assert(Bench.readBaseline(record.take(200), "/data/sf0.1") === Bench.noBaseline)
+  }
 }

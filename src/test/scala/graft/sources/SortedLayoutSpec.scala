@@ -47,7 +47,7 @@ class SortedLayoutSpec extends SparkSuite {
   private def smjNodes(df: DataFrame): Int =
     countNodes(df) { case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => () }
 
-  private def shuffles(df: DataFrame): Int = graft.tools.SpjBench.countExchanges(df)
+  private def shuffles(df: DataFrame): Int = SparkSuite.countExchanges(df)
 
   test("sortedCommit records sortcols; every scan partition is internally ordered") {
     val t = fresh("sorted-basic")

@@ -17,7 +17,7 @@ class StoragePartitionedJoinSpec extends SparkSuite {
 
   import spark.implicits._
 
-  private def shuffles(df: DataFrame): Int = graft.tools.SpjBench.countExchanges(df)
+  private def shuffles(df: DataFrame): Int = SparkSuite.countExchanges(df)
 
   private def withSpjConfs(body: => Unit): Unit = {
     val saved = Seq(
