@@ -126,20 +126,16 @@ object Pipeline {
     * scan. On a real cluster the same calls target the Hive/Glue
     * metastore; locally the in-memory catalog is shared across
     * `newSession()`s, which is what [[graft.fixtures.WeatherDemo
-    * .ensureCatalog]]'s fresh-session tests pin. */
-  /** `ddlParallelism` bounds the concurrent DDL fan-out. The default (4)
-    * is safe for the in-memory catalog and metastores that take
-    * concurrent connections; set 1 for metastores whose client
-    * serializes or rejects concurrent DDL (e.g. Derby-backed Hive
-    * allows a single connection) — registration then degrades to
-    * strictly sequential with identical results. */
+    * .ensureCatalog]]'s fresh-session tests pin.
+    *
+    * Every layer is registered, gold facts included, and every table
+    * gets catalog stats. The DDL fans out over 4 threads, which the
+    * in-memory catalog and metastores that take concurrent connections
+    * accept. */
   def catalogWarehouse(
       spark: SparkSession,
       layout: Layout,
-      database: String = "weather_dwh",
-      includeFacts: Boolean = false,
-      refreshStats: Boolean = true,
-      ddlParallelism: Int = 4): Unit = {
+      database: String = "weather_dwh"): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
 
     /** Cheap content fingerprint of a table location (total bytes +
@@ -167,17 +163,15 @@ object Pipeline {
         path: String,
         partitioned: Boolean,
         statCols: Seq[String]): Unit = {
-      // the skip key covers the stats CONFIG as well as the data: a
-      // reload that changes refreshStats or the statCols list must
-      // re-register even over unchanged bytes, or the caller's explicit
-      // request for (different) stats would be silently ignored
-      val fp = s"${fingerprint(path)}:$refreshStats:${statCols.mkString(",")}"
-      val unchanged =
-        try {
-          val props = spark.sql(s"SHOW TBLPROPERTIES $database.$name")
-            .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-          props.get("graft.fingerprint").contains(fp)
-        } catch { case _: Exception => false } // table absent → rebuild
+      // the skip key covers the stats columns as well as the data: a
+      // reload that changes the statCols list must re-register even
+      // over unchanged bytes, or the new column stats would never land
+      val fp = s"${fingerprint(path)}:${statCols.mkString(",")}"
+      // ask the catalog first: a failed SHOW on an absent table would
+      // log a stack trace on every first load
+      val unchanged = spark.catalog.tableExists(database, name) &&
+        spark.sql(s"SHOW TBLPROPERTIES $database.$name")
+          .collect().exists(r => r.getString(0) == "graft.fingerprint" && r.getString(1) == fp)
       if (unchanged) return
 
       spark.sql(s"DROP TABLE IF EXISTS $database.$name")
@@ -196,12 +190,10 @@ object Pipeline {
       // Column stats only for the join/filter keys that decide plans —
       // at 100 TB "FOR ALL COLUMNS" on a fact table is its own scan of
       // every column, so stats cost is budgeted like any other job.
-      if (refreshStats) {
-        if (statCols.nonEmpty)
-          spark.sql(s"ANALYZE TABLE $database.$name COMPUTE STATISTICS FOR COLUMNS ${statCols.mkString(", ")}")
-        else
-          spark.sql(s"ANALYZE TABLE $database.$name COMPUTE STATISTICS")
-      }
+      if (statCols.nonEmpty)
+        spark.sql(s"ANALYZE TABLE $database.$name COMPUTE STATISTICS FOR COLUMNS ${statCols.mkString(", ")}")
+      else
+        spark.sql(s"ANALYZE TABLE $database.$name COMPUTE STATISTICS")
       spark.sql(
         s"ALTER TABLE $database.$name SET TBLPROPERTIES ('graft.fingerprint' = '$fp')")
     }
@@ -211,31 +203,29 @@ object Pipeline {
       ("forecast_weather", s"${layout.silverDir}/forecast_weather", true, Seq("location_name")),
       ("dim_location", s"${layout.goldDir}/dim_location", false,
         Seq("location_key", "location_name", "is_current")),
-      ("dim_date", s"${layout.goldDir}/dim_date", false, Seq("date_key", "full_date"))) ++
-      (if (includeFacts) Seq(
-        ("fact_weather_actual", s"${layout.goldDir}/fact_weather_actual", false,
-          Seq("location_key", "date_key")),
-        ("fact_weather_forecast", s"${layout.goldDir}/fact_weather_forecast", false,
-          Seq("location_key", "forecast_created_date_key", "forecast_for_date_key")),
-        ("fact_forecast_accuracy", s"${layout.goldDir}/fact_forecast_accuracy", false,
-          Seq("location_key", "forecast_created_date_key")))
-      else Seq.empty)
+      ("dim_date", s"${layout.goldDir}/dim_date", false, Seq("date_key", "full_date")),
+      ("fact_weather_actual", s"${layout.goldDir}/fact_weather_actual", false,
+        Seq("location_key", "date_key")),
+      ("fact_weather_forecast", s"${layout.goldDir}/fact_weather_forecast", false,
+        Seq("location_key", "forecast_created_date_key", "forecast_for_date_key")),
+      ("fact_forecast_accuracy", s"${layout.goldDir}/fact_forecast_accuracy", false,
+        Seq("location_key", "forecast_created_date_key")))
 
     // per-table registration is independent (distinct table names, no
     // shared DDL state beyond the already-created database), so run the
     // DDL+ANALYZE chains concurrently: load wall-clock is the slowest
     // table, not the sum of 7 command-at-a-time round trips. The pool is
     // a small DEDICATED executor, not ExecutionContext.global: the
-    // fan-out must be bounded by `ddlParallelism` (metastore clients
-    // have their own concurrency contracts — see scaladoc), and it is
-    // shut down on exit so no registration thread outlives the call.
+    // fan-out stays bounded (metastore clients have their own
+    // concurrency contracts), and it is shut down on exit so no
+    // registration thread outlives the call.
     // Failure drains: every in-flight future is awaited before the first
     // error propagates, so the catalog is quiescent — never still being
     // mutated in the background — when the caller sees the exception.
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(math.max(1, ddlParallelism))
+    val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val work = tables.map { case (name, path, part, cols) =>

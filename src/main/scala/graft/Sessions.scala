@@ -16,6 +16,9 @@ import org.apache.spark.sql.SparkSession
   *    sets the upper bound for the map side.
   *  - the session timezone is pinned UTC so timestamp→string/date
   *    conversions are deterministic across environments.
+  *  - scan splits (`spark.sql.files.maxPartitionBytes`, 128 MB) and AQE
+  *    coalescing (`parallelismFirst=true`, 64 MB advisory size) keep
+  *    Spark's own defaults.
   */
 object Sessions {
 
@@ -33,29 +36,6 @@ object Sessions {
   def shufflePartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
 
-  /** Scan-split ceiling (`spark.sql.files.maxPartitionBytes`). The Spark
-    * default (128 MB) is kept; override with
-    * `SPARK_GRAFT_MAX_PARTITION_BYTES` to trade task count against
-    * per-task memory on wide-row large-sf scans. */
-  def maxPartitionBytes: String =
-    sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
-
-  /** AQE small-partition coalescing policy. Spark's default
-    * (`parallelismFirst=true`) refuses to coalesce below the default
-    * parallelism — 32 tasks for every KB-sized shuffle on local[32],
-    * pure scheduling overhead on the many small exchanges of this
-    * corpus. `false` is the setting Spark's own SQL-performance guide
-    * recommends for production ("respect the configured target size");
-    * the advisory below sets that target. Both stay env-overridable for
-    * ladder runs. */
-  def parallelismFirst: String =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true")
-
-  /** AQE advisory post-shuffle partition size (also the coalesce
-    * target). Spark default 64 MB. */
-  def advisoryPartitionBytes: String =
-    sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "67108864")
-
   def local(appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -63,9 +43,6 @@ object Sessions {
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", parallelismFirst)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisoryPartitionBytes)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Legacy data generations stored events.ts as INT64 TIMESTAMP(NANOS),

@@ -146,7 +146,7 @@ object WeatherDemo {
       writeBronze(root)
       val layout = Pipeline.Layout(root.toString, s"$root/silver", s"$root/gold")
       Pipeline.run(spark, layout, DemoClock, materializeGold = true, registerViews = false)
-      Pipeline.catalogWarehouse(spark, layout, includeFacts = true)
+      Pipeline.catalogWarehouse(spark, layout)
       catalogued = true
     }
   }

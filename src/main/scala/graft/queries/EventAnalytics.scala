@@ -717,11 +717,11 @@ object EventAnalytics {
       // pruning pin: a month-range predicate must drop files from PATHS
       // alone — partition counter moves, footer counter does not
       val footers0 = graft.sources.SnapshotScanProbe.plannerFooterReads
-      graft.sources.SnapshotScanProbe.resetPartitionPrunedFiles()
-      s.read.format("graft-snapshot").option("path", t).load()
+      val q = s.read.format("graft-snapshot").option("path", t).load()
         .filter(col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1999-01-01 00:00:00")))
-        .count()
-      require(graft.sources.SnapshotScanProbe.lastPartitionPrunedFiles > 0,
+        .agg(count(lit(1)))
+      q.collect()
+      require(graft.sources.SnapshotScanProbe.scans(q).exists(_.partitionPrunedFiles > 0),
         "dt_partition_prune: the month-range predicate must prune partition dirs")
       require(graft.sources.SnapshotScanProbe.plannerFooterReads == footers0,
         "dt_partition_prune: partition pruning must not open data-file footers")
@@ -786,10 +786,7 @@ object EventAnalytics {
       graft.ops.NdvStats.analyzeCommit(s, t, Seq("opt_key"))
       val read = s.read.format("graft-snapshot").option("path", t).load()
       val q = read.agg(count(col("opt_key")), min("o_orderdate"), max("o_orderdate"))
-      val desc = q.queryExecution.sparkPlan.collectFirst {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.scan.description()
-      }.getOrElse("")
+      val desc = graft.sources.SnapshotScanProbe.scans(q).map(_.description).mkString("; ")
       require(desc.contains("count(opt_key)") && desc.contains("min(o_orderdate)"),
         s"dt_agg_nullaware: count(col)+temporal min/max must plan metadata-only, got: $desc")
       val footers0 = graft.sources.SnapshotScanProbe.plannerFooterReads
@@ -822,10 +819,10 @@ object EventAnalytics {
       s.sql(s"ALTER TABLE $cat.facts.orders ADD CONSTRAINT price_pos CHECK (o_totalprice >= 0)")
       val read = s.read.format("graft-snapshot").option("path", s"$root/facts/orders").load()
       val f0 = graft.sources.SnapshotScanProbe.plannerFooterReads
-      graft.sources.SnapshotScanProbe.resetConstraintPrunedFiles()
-      require(read.filter(col("o_totalprice") < 0).count() == 0L,
+      val q = read.filter(col("o_totalprice") < 0).agg(count(lit(1)))
+      require(q.collect()(0).getLong(0) == 0L,
         "dt_check_prune: the constraint guarantees no negative prices")
-      require(graft.sources.SnapshotScanProbe.lastConstraintPrunedFiles > 0,
+      require(graft.sources.SnapshotScanProbe.scans(q).exists(_.constraintPrunedFiles > 0),
         "dt_check_prune: the contradicting filter must empty the scan from the constraint alone")
       require(graft.sources.SnapshotScanProbe.plannerFooterReads == f0,
         "dt_check_prune: constraint pruning must not open data-file footers")
@@ -893,10 +890,7 @@ object EventAnalytics {
       val read = s.read.format("graft-snapshot").option("path", t).load()
       val q = read.groupBy("l_linenumber")
         .agg(count(lit(1)), min("l_quantity"), max("l_quantity"), max("l_orderkey"))
-      val desc = q.queryExecution.sparkPlan.collectFirst {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.scan.description()
-      }.getOrElse("")
+      val desc = graft.sources.SnapshotScanProbe.scans(q).map(_.description).mkString("; ")
       require(desc.contains("FOOTER AGGREGATE [group by l_linenumber"),
         s"dt_groupby_rollup: the rollup must plan metadata-only, got: $desc")
       val footers0 = graft.sources.SnapshotScanProbe.plannerFooterReads
@@ -1113,13 +1107,14 @@ object EventAnalytics {
       require(m.files.exists(f => dirVal(f, "__gp0=").exists(_ < "1997-01")) &&
         m.files.exists(f => dirVal(f, "__g1p0=").exists(_ < "1997-01-01")),
         "dt_partition_evolve: both generations must hold prunable files")
-      graft.sources.SnapshotScanProbe.resetPartitionPrunedFiles()
-      s.read.format("graft-snapshot").option("path", t).load()
+      val q = s.read.format("graft-snapshot").option("path", t).load()
         .filter(col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
-        .count()
-      require(graft.sources.SnapshotScanProbe.lastPartitionPrunedFiles == expectPruned,
+        .agg(count(lit(1)))
+      q.collect()
+      val pruned = graft.sources.SnapshotScanProbe.scans(q).map(_.partitionPrunedFiles)
+      require(pruned == Seq(expectPruned),
         s"dt_partition_evolve: every dead file of EVERY generation must prune " +
-          s"(got ${graft.sources.SnapshotScanProbe.lastPartitionPrunedFiles}, want $expectPruned)")
+          s"(got $pruned, want $expectPruned)")
     }
     val cat = snapCatalog(s, wh)
     s.sql(

@@ -811,21 +811,6 @@ private[sources] object SnapshotScan {
     }
   }
 
-  /** Diagnostic gauge: row groups the LAST runtime-filtered scan
-    * dropped beyond static pruning (join-driven dynamic file pruning).
-    * Set, not accumulated — planInputPartitions may re-derive the same
-    * filtered set more than once per execution. */
-  val lastRuntimePrunedGroups = new java.util.concurrent.atomic.AtomicLong
-
-  /** Files partition-transform pruning dropped in the most recent scan
-    * planning — before any stats sidecar or footer was consulted. */
-  val lastPartitionPrunedFiles = new java.util.concurrent.atomic.AtomicLong
-
-  /** Files dropped because a pushed filter provably contradicts a
-    * table CHECK constraint ([[graft.store.TableChecks.disjoint]]) —
-    * set per scan planning; the whole scan empties at once. */
-  val lastConstraintPrunedFiles = new java.util.concurrent.atomic.AtomicLong
-
   /** EXISTS_DEFAULT substitution around a row reader: each (ordinal,
     * catalyst value) in `fills` replaces the null the null-filling
     * decoder emitted for a column THIS file predates — one codegen'd
@@ -1748,6 +1733,13 @@ private[sources] final class SnapshotScan(
   @volatile private var runtimeFiles: Option[Set[String]] = None
   @volatile private var runtimeIns: Array[SnapshotScan.RuntimeIn] = Array.empty
 
+  /** Row groups the runtime IN filter dropped beyond static pruning
+    * (join-driven dynamic file pruning); 0 until one has applied.
+    * Assigned, not accumulated: planInputPartitions may re-derive the
+    * same filtered set more than once per execution. */
+  @volatile private var runtimePruned: Int = 0
+  private[sources] def runtimePrunedGroups: Int = runtimePruned
+
   /** Advertised runtime-filterable columns. Row-level scans accept only
     * the `_file` group filter (they must read touched files WHOLE).
     * Bucketed scans report KeyGroupedPartitioning for storage-
@@ -1798,7 +1790,7 @@ private[sources] final class SnapshotScan(
           (bloomOut.isEmpty || !bloomOut.contains(SnapshotStore.relFileKey(p.file))) &&
             !ins.exists(_.excludes(st))
         }
-        SnapshotScan.lastRuntimePrunedGroups.set(afterFile.size - kept.size)
+        runtimePruned = afterFile.size - kept.size
         kept
       }
     out.map(_._1)
@@ -1820,9 +1812,11 @@ private[sources] final class SnapshotScan(
 
   /** Kept partitions PLUS each row group's stats map: the stats stay
     * on the driver for runtime (join-key) re-pruning; only the bare
-    * partition ships to executors. */
-  private lazy val (keptWithStats: Seq[(SnapshotInputPartition, Map[String, (Any, Any)])],
-      totalGroups: Int, totalFiles: Int, allColumnsPresent: Boolean) = {
+    * partition ships to executors. Also counts the files this scan
+    * dropped by CHECK constraint and by partition path. */
+  private[sources] lazy val (keptWithStats: Seq[(SnapshotInputPartition, Map[String, (Any, Any)])],
+      totalGroups: Int, totalFiles: Int, allColumnsPresent: Boolean,
+      constraintPrunedFiles: Int, partitionPrunedFiles: Int) = {
     // PARTITION-TRANSFORM pruning runs FIRST — pure path arithmetic on
     // the file list, before the Bloom index or the stats sidecar is
     // even opened. At the 100 TB day-appended shape (`part=days:ts`),
@@ -1841,13 +1835,8 @@ private[sources] final class SnapshotScan(
     val afterChecks =
       if (tablePath.nonEmpty && skippable.nonEmpty &&
           graft.store.TableChecks.disjoint(spark, tablePath, skippable.toSeq) &&
-          SnapshotScan.isHeadManifest(spark, tablePath, m)) {
-        SnapshotScan.lastConstraintPrunedFiles.set(allDataFiles.size)
-        Seq.empty[String]
-      } else {
-        SnapshotScan.lastConstraintPrunedFiles.set(0)
-        allDataFiles
-      }
+          SnapshotScan.isHeadManifest(spark, tablePath, m)) Seq.empty[String]
+      else allDataFiles
     val afterPart =
       if (m.partSpec.isEmpty || skippable.isEmpty) afterChecks
       else {
@@ -1858,14 +1847,12 @@ private[sources] final class SnapshotScan(
         // ambiguity and no rewrite
         val gens: Seq[(Seq[graft.store.PartitionSpec.PartField], Int)] =
           (m.partSpec, m.partGen) +: m.partHist.map { case (g, sp) => (sp, g) }
-        val kept = afterChecks.filter { f =>
+        afterChecks.filter { f =>
           SnapshotScan.partitionKeeps(
             gens.flatMap { case (sp, g) =>
               graft.store.PartitionSpec.factsOf(f, sp, fullSchema, g) },
             skippable.toSeq)
         }
-        SnapshotScan.lastPartitionPrunedFiles.set(afterChecks.size - kept.size)
-        kept
       }
     val all =
       if (bloomExcluded.isEmpty) afterPart
@@ -1940,7 +1927,8 @@ private[sources] final class SnapshotScan(
     }
     // totalFiles counts the MANIFEST's files so bloom pruning shows in
     // the files=kept/total description like every other skip
-    (kept, total, allDataFiles.size, allPresent)
+    (kept, total, allDataFiles.size, allPresent,
+      allDataFiles.size - afterChecks.size, afterChecks.size - afterPart.size)
   }
 
   private lazy val keptGroups: Seq[SnapshotInputPartition] = keptWithStats.map(_._1)
@@ -2223,7 +2211,12 @@ private[sources] final class SnapshotScan(
       else if (dvClassLookups.length == 1) s", dvKeys=${dvClassLookups(0).size}"
       else s", dvKeys=${dvClassLookups.map(l => if (l == null) 0 else l.size).mkString("/")}"
     val mode = if (columnar) "vectorized" else "row"
-    s"graft-snapshot ${SnapshotScan.dataLabel(m)} ($files, $groups, $mode$dv, pushed=${skippable.mkString("[", ",", "]")})"
+    // what this scan pruned beyond the stats, non-zero counts only; the
+    // runtime count appears once the scan's partitions were planned
+    val pruned = Seq("checkPruned" -> constraintPrunedFiles,
+      "partPruned" -> partitionPrunedFiles, "runtimePruned" -> runtimePrunedGroups)
+      .collect { case (k, n) if n > 0 => s", $k=$n" }.mkString
+    s"graft-snapshot ${SnapshotScan.dataLabel(m)} ($files, $groups, $mode$dv, pushed=${skippable.mkString("[", ",", "]")}$pruned)"
   }
 
   /** Batch CHANGE-FEED reads (the `table_changes` shape): with

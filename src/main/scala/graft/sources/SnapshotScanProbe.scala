@@ -1,25 +1,56 @@
 package graft.sources
 
-/** Read-only planning diagnostics exposed to tools/benchmarks (the
-  * scan internals stay `private[sources]`). */
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
+/** Read-only planning diagnostics exposed to tools, fixtures and tests
+  * (the scan internals stay `private[sources]`).
+  *
+  * What one scan pruned is read from the plan that ran it: [[scans]]
+  * walks a Dataset's executed plan and reports each graft snapshot scan
+  * with its own counts, so concurrent queries never see each other's.
+  * The remaining JVM-wide counters only ever increase and count work
+  * across scans (footer opens, Bloom cache misses, executor-side DV
+  * builds); readers diff them around the work they measure. */
 object SnapshotScanProbe {
+
+  /** One graft snapshot scan of an executed plan. `exec` carries the
+    * DSv2 scan and its SQL metrics; the counts are what this scan itself
+    * pruned beyond the stats: whole files by a pushed filter that
+    * contradicts a table CHECK constraint, files by partition path
+    * (both at planning), and row groups by a join-driven runtime IN
+    * filter (once the scan's partitions were planned). All 0 for a
+    * pushed metadata aggregate. */
+  final case class ScanReport(
+      exec: BatchScanExec,
+      constraintPrunedFiles: Int,
+      partitionPrunedFiles: Int,
+      runtimePrunedGroups: Int) {
+    def description: String = exec.scan.description()
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The graft snapshot scans of the plan `ds` executes, in plan order,
+    * descending through adaptive query stages. Call it after
+    * `ds.collect()`: `count()` and `head()` plan a new execution whose
+    * scan (and runtime filter) this Dataset's plan does not hold. */
+  def scans(ds: Dataset[_]): Seq[ScanReport] =
+    Plans.collect(ds.queryExecution.executedPlan) { case b: BatchScanExec => b }
+      .flatMap { b =>
+        b.scan match {
+          case s: SnapshotScan =>
+            Some(ScanReport(b, s.constraintPrunedFiles, s.partitionPrunedFiles,
+              s.runtimePrunedGroups))
+          case _: SnapshotAggScan => Some(ScanReport(b, 0, 0, 0))
+          case _                  => None
+        }
+      }
+
   /** Cumulative data-file footer opens performed by driver-side
     * planning since JVM start (0 delta per query = sidecar-planned). */
   def plannerFooterReads: Long = SnapshotScan.plannerFooterReads.get()
-
-  /** Row groups the most recent join-driven runtime filter dropped
-    * beyond static pruning (dynamic file pruning diagnostics). */
-  def lastRuntimePrunedGroups: Long = SnapshotScan.lastRuntimePrunedGroups.get()
-
-  /** Zero the gauge before a measured query (it is set-per-scan, not
-    * accumulated). */
-  def resetRuntimePrunedGroups(): Unit = SnapshotScan.lastRuntimePrunedGroups.set(0)
-
-  /** Files the most recent partition-transform pruning dropped from
-    * pushed predicates BEFORE any stats sidecar / footer was consulted
-    * (set per scan planning, not accumulated). */
-  def lastPartitionPrunedFiles: Long = SnapshotScan.lastPartitionPrunedFiles.get()
-  def resetPartitionPrunedFiles(): Unit = SnapshotScan.lastPartitionPrunedFiles.set(0)
 
   /** Bloom filters deserialized on the DRIVER since JVM start (per
     * probed column, once — LRU-cached); the distributed probe path
@@ -33,12 +64,6 @@ object SnapshotScanProbe {
   /** Deletion-vector lookups built EXECUTOR-side since JVM start (the
     * task-side path above spark.graft.dv.driverBytesMax). */
   def dvTaskSideBuilds: Long = TaskSideDvResolver.taskSideBuilds.get()
-
-  /** Files the most recent scan planning dropped because a pushed
-    * filter provably CONTRADICTS a table CHECK constraint (set per
-    * scan, not accumulated). */
-  def lastConstraintPrunedFiles: Long = SnapshotScan.lastConstraintPrunedFiles.get()
-  def resetConstraintPrunedFiles(): Unit = SnapshotScan.lastConstraintPrunedFiles.set(0)
 
   /** MV-rewrite probe: the `(tablePath, pinned manifest)` of a plain
     * snapshot batch scan (None for change feeds, row-level group scans,

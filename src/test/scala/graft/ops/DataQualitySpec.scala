@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** The exact report is oracle-checked end-to-end as `c11_dq_report`;
   * these tests pin the TWO-LEVEL contract: the approximate screen agrees

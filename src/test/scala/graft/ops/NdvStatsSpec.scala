@@ -63,10 +63,7 @@ class NdvStatsSpec extends SparkSuite {
     // the downstream payoff: COUNT(col) still plans metadata-only
     val read = spark.read.format("graft-snapshot").option("path", table).load()
     val q = read.agg(count(col("opt_key")), min("o_orderdate"))
-    val desc = q.queryExecution.sparkPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.description()
-    }.getOrElse("")
+    val desc = graft.sources.SnapshotScanProbe.scans(q).map(_.description).mkString("; ")
     assert(desc.contains("count(opt_key)"),
       s"count(col) must push to metadata over the padded coverage, got: $desc")
     assert(q.head().getLong(0) === src.count() - exactNulls)

@@ -130,7 +130,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("PQ bounded-sample training: above-budget corpus trains on a stride sample, stays deterministic, keeps recall") {
-    import spark.implicits._
     // 3000 deterministic pseudo-random base vectors + a perturbed copy of
     // each (ids +3000): every query's exact top-1 is its planted near-dup,
     // whose codes quantize (nearly) identically — so the recall assertion

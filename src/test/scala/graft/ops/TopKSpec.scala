@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 class TopKSpec extends SparkSuite {
 

@@ -4,7 +4,6 @@ import graft.SparkSuite
 import graft.ops.BloomIndex
 import graft.store.SnapshotStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** Manifest-level Bloom index ([[BloomIndex.bloomCommit]] +
@@ -19,13 +18,8 @@ class BloomManifestSpec extends SparkSuite {
   private def fresh(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
 
-  private def scanDesc(df: DataFrame): String =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec => b.scan.description()
-    }.getOrElse(fail("no BatchScanExec in plan"))
-
   private def filesRead(df: DataFrame): (Int, Int) = {
-    val d = scanDesc(df)
+    val d = SnapshotScanProbe.scans(df).head.description
     val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(d).getOrElse(
       fail(s"no files= in scan description: $d"))
     (m.group(1).toInt, m.group(2).toInt)

@@ -14,12 +14,6 @@ class DvTaskSideSpec extends SparkSuite {
   private def fresh(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString + "/t"
 
-  private def scanDesc(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.description()
-    }.getOrElse(fail("no BatchScanExec in plan"))
-
   private def withTaskSideDv(test: => Unit): Unit = {
     spark.conf.set("spark.graft.dv.driverBytesMax", "1")
     try test finally spark.conf.unset("spark.graft.dv.driverBytesMax")
@@ -37,7 +31,8 @@ class DvTaskSideSpec extends SparkSuite {
 
     withTaskSideDv {
       val q = read()
-      assert(scanDesc(q.filter(col("o_orderkey") >= 0)).contains("dvTaskSide="),
+      val desc = SnapshotScanProbe.scans(q.filter(col("o_orderkey") >= 0)).head.description
+      assert(desc.contains("dvTaskSide="),
         "the scan must advertise the task-side DV mode")
       val b0 = TaskSideDvResolver.taskSideBuilds.get()
       assert(q.agg(count(lit(1)), sum("o_orderkey")).collect()(0) === want,
@@ -53,7 +48,6 @@ class DvTaskSideSpec extends SparkSuite {
   }
 
   test("a DV key type outside the raw-primitive set falls back to broadcast, not a failed scan") {
-    import spark.implicits._
     val table = fresh("dvtask-dec")
     // decimal(25, 3): FIXED_LEN_BYTE_ARRAY physical — the task-side
     // raw reader cannot probe it in the right value space
@@ -70,7 +64,8 @@ class DvTaskSideSpec extends SparkSuite {
       val f0 = TaskSideDvResolver.typeFallbacks.get()
       val b0 = TaskSideDvResolver.taskSideBuilds.get()
       val q = read()
-      assert(!scanDesc(q.filter(col("id") >= 0)).contains("dvTaskSide="),
+      val desc = SnapshotScanProbe.scans(q.filter(col("id") >= 0)).head.description
+      assert(!desc.contains("dvTaskSide="),
         "the scan must NOT claim task-side mode for an unsupported key type")
       assert(q.agg(count(lit(1)), sum("id")).collect()(0) === want,
         "above the byte cap a decimal-keyed DV must read oracle-exact via broadcast")
@@ -83,7 +78,6 @@ class DvTaskSideSpec extends SparkSuite {
 
   test("task-side parity across key shapes: string, timestamp, composite") {
     val table = fresh("dvtask-shapes")
-    import spark.implicits._
     val orders = graft.sources.Tables.orders(spark, sf())
     SnapshotStore.commit(orders, table)
     // string key

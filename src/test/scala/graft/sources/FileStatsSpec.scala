@@ -3,7 +3,6 @@ package graft.sources
 import graft.SparkSuite
 import graft.store.{FileStats, SnapshotStore}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** Manifest-level file statistics: every commit records a sidecar of
@@ -22,11 +21,6 @@ class FileStatsSpec extends SparkSuite {
 
   private def load(table: String): DataFrame =
     spark.read.format("graft-snapshot").option("path", table).load()
-
-  private def scanDesc(df: DataFrame): String =
-    df.queryExecution.sparkPlan.collectFirst { case b: BatchScanExec => b.scan }
-      .getOrElse(fail(s"no BatchScanExec in plan:\n${df.queryExecution.sparkPlan}"))
-      .description()
 
   /** Footer opens performed while `body` plans + runs. */
   private def footerOpens(body: => Unit): Long = {
@@ -81,7 +75,7 @@ class FileStatsSpec extends SparkSuite {
     var desc: String = null
     val opens = footerOpens {
       val q = load(t).filter(col("id") >= 900)
-      desc = scanDesc(q)
+      desc = SnapshotScanProbe.scans(q).head.description
       got = q.collect().map(_.getLong(0)).sorted
     }
     assert(opens === 0L, s"sidecar-covered planning opened $opens footers")
@@ -102,7 +96,7 @@ class FileStatsSpec extends SparkSuite {
     var desc2: String = null
     val opens2 = footerOpens {
       val q = load(t).filter(col("id") >= 900)
-      desc2 = scanDesc(q)
+      desc2 = SnapshotScanProbe.scans(q).head.description
       got2 = q.collect().map(_.getLong(0)).sorted
     }
     assert(opens2 === 2L, s"footer fallback should open one footer per file, got $opens2")
@@ -123,7 +117,7 @@ class FileStatsSpec extends SparkSuite {
       val q = load(t).agg(
         count(lit(1)).as("n"), min("k").as("mn"), max("k").as("mx"),
         min("name").as("smn"), max("name").as("smx"))
-      desc = scanDesc(q)
+      desc = SnapshotScanProbe.scans(q).head.description
       row = q.collect().head
     }
     assert(desc.contains("FOOTER AGGREGATE"), s"aggregate not pushed: $desc")

@@ -16,12 +16,6 @@ class GroupByPushdownSpec extends SparkSuite {
   private def freshDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString
 
-  private def scanDescription(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.sparkPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.description()
-    }.getOrElse(fail("no BatchScanExec in the plan"))
-
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
@@ -37,8 +31,8 @@ class GroupByPushdownSpec extends SparkSuite {
 
     val footers0 = SnapshotScanProbe.plannerFooterReads
     val got = sortedRows(q)
-    assert(scanDescription(q).contains("FOOTER AGGREGATE [group by n_regionkey"),
-      s"plan must be the metadata rollup: ${scanDescription(q)}")
+    assert(SnapshotScanProbe.scans(q).head.description.contains("FOOTER AGGREGATE [group by n_regionkey"),
+      s"plan must be the metadata rollup: ${SnapshotScanProbe.scans(q).head.description}")
     assert(SnapshotScanProbe.plannerFooterReads === footers0,
       "the grouped rollup must not open data-file footers")
 
@@ -62,8 +56,8 @@ class GroupByPushdownSpec extends SparkSuite {
 
     val read = spark.read.format("graft-snapshot").option("path", table).load()
     val q = read.groupBy("k", "d").agg(count(lit(1)).as("n"), max("v").as("mx"))
-    assert(scanDescription(q).contains("group by k,d"),
-      s"two-key identity rollup must push down: ${scanDescription(q)}")
+    assert(SnapshotScanProbe.scans(q).head.description.contains("group by k,d"),
+      s"two-key identity rollup must push down: ${SnapshotScanProbe.scans(q).head.description}")
     assert(sortedRows(q) ===
       sortedRows(df.groupBy("k", "d").agg(count(lit(1)).as("n"), max("v").as("mx"))))
   }
@@ -78,7 +72,7 @@ class GroupByPushdownSpec extends SparkSuite {
     val r1 = spark.read.format("graft-snapshot").option("path", t1).load()
     val q1 = r1.filter(col("n_nationkey") > 5)
       .groupBy("n_regionkey").agg(count(lit(1)).as("n"))
-    assert(!scanDescription(q1).contains("FOOTER AGGREGATE"),
+    assert(!SnapshotScanProbe.scans(q1).head.description.contains("FOOTER AGGREGATE"),
       "a residual filter must decline the metadata rollup")
     assert(sortedRows(q1) === sortedRows(nation.filter(col("n_nationkey") > 5)
       .groupBy("n_regionkey").agg(count(lit(1)).as("n"))))
@@ -89,7 +83,7 @@ class GroupByPushdownSpec extends SparkSuite {
       nation, t2, Seq(PartitionSpec.PartField("identity", "n_name")))
     val r2 = spark.read.format("graft-snapshot").option("path", t2).load()
     val q2 = r2.groupBy("n_name").agg(count(lit(1)).as("n"))
-    assert(!scanDescription(q2).contains("FOOTER AGGREGATE"),
+    assert(!SnapshotScanProbe.scans(q2).head.description.contains("FOOTER AGGREGATE"),
       "string identity partitions must decline the grouped pushdown")
     assert(sortedRows(q2) === sortedRows(nation.groupBy("n_name").agg(count(lit(1)).as("n"))))
 
@@ -101,7 +95,7 @@ class GroupByPushdownSpec extends SparkSuite {
     SnapshotStore.deleteCommit(spark, t3, Seq("n_nationkey"), col("n_nationkey") === 3)
     val r3 = spark.read.format("graft-snapshot").option("path", t3).load()
     val q3 = r3.groupBy("n_regionkey").agg(count(lit(1)).as("n"))
-    assert(!scanDescription(q3).contains("FOOTER AGGREGATE"),
+    assert(!SnapshotScanProbe.scans(q3).head.description.contains("FOOTER AGGREGATE"),
       "live DVs must decline the grouped pushdown")
     assert(sortedRows(q3) === sortedRows(nation.filter(col("n_nationkey") =!= 3)
       .groupBy("n_regionkey").agg(count(lit(1)).as("n"))))
@@ -123,8 +117,8 @@ class GroupByPushdownSpec extends SparkSuite {
     val all = gen0.unionAll(gen1)
     val read = spark.read.format("graft-snapshot").option("path", table).load()
     val q = read.groupBy("k").agg(count(lit(1)).as("n"), max("v").as("mx"))
-    assert(scanDescription(q).contains("FOOTER AGGREGATE [group by k"),
-      s"identity key present in every generation must stay pushed: ${scanDescription(q)}")
+    assert(SnapshotScanProbe.scans(q).head.description.contains("FOOTER AGGREGATE [group by k"),
+      s"identity key present in every generation must stay pushed: ${SnapshotScanProbe.scans(q).head.description}")
     assert(sortedRows(q) ===
       sortedRows(all.groupBy("k").agg(count(lit(1)).as("n"), max("v").as("mx"))))
 
@@ -134,7 +128,7 @@ class GroupByPushdownSpec extends SparkSuite {
     SnapshotStore.appendCommit(Seq((4, "e", 50L)).toDF("k", "s", "v"), table)
     val read2 = spark.read.format("graft-snapshot").option("path", table).load()
     val q2 = read2.groupBy("k").agg(count(lit(1)).as("n"))
-    assert(!scanDescription(q2).contains("FOOTER AGGREGATE"),
+    assert(!SnapshotScanProbe.scans(q2).head.description.contains("FOOTER AGGREGATE"),
       "a generation without identity(k) must decline the grouped pushdown")
     assert(sortedRows(q2) === sortedRows(
       all.unionAll(Seq((4, "e", 50L)).toDF("k", "s", "v"))
@@ -151,8 +145,8 @@ class GroupByPushdownSpec extends SparkSuite {
       Seq((3, None: Option[Double]), (4, None: Option[Double])).toDF("id", "v"), t)
     val read = spark.read.format("graft-snapshot").option("path", t).load()
     val q = read.agg(count(col("v")).as("n_v"), count(lit(1)).as("n"))
-    assert(scanDescription(q).contains("count(v)"),
-      s"count(col) must push to metadata: ${scanDescription(q)}")
+    assert(SnapshotScanProbe.scans(q).head.description.contains("count(v)"),
+      s"count(col) must push to metadata: ${SnapshotScanProbe.scans(q).head.description}")
     assert(q.collect()(0).toSeq === Seq(2L, 4L))
 
     // temporal min/max: global + grouped over a timestamp column
@@ -162,14 +156,14 @@ class GroupByPushdownSpec extends SparkSuite {
       Seq(graft.store.PartitionSpec.PartField("identity", "o_custkey")))
     val r2 = spark.read.format("graft-snapshot").option("path", t2).load()
     val g = r2.agg(min("o_orderdate").as("lo"), max("o_orderdate").as("hi"))
-    assert(scanDescription(g).contains("min(o_orderdate)"),
-      s"temporal min/max must push: ${scanDescription(g)}")
+    assert(SnapshotScanProbe.scans(g).head.description.contains("min(o_orderdate)"),
+      s"temporal min/max must push: ${SnapshotScanProbe.scans(g).head.description}")
     assert(g.collect()(0) ===
       orders.agg(min("o_orderdate").as("lo"), max("o_orderdate").as("hi")).collect()(0))
     val gg = r2.groupBy("o_custkey")
       .agg(max("o_orderdate").as("hi"), count(col("o_orderdate")).as("n"))
-    assert(scanDescription(gg).contains("FOOTER AGGREGATE [group by o_custkey"),
-      s"grouped temporal rollup must push: ${scanDescription(gg)}")
+    assert(SnapshotScanProbe.scans(gg).head.description.contains("FOOTER AGGREGATE [group by o_custkey"),
+      s"grouped temporal rollup must push: ${SnapshotScanProbe.scans(gg).head.description}")
     assert(sortedRows(gg) === sortedRows(orders.groupBy("o_custkey")
       .agg(max("o_orderdate").as("hi"), count(col("o_orderdate")).as("n"))))
   }
@@ -184,7 +178,7 @@ class GroupByPushdownSpec extends SparkSuite {
         .toDF("id", "v").coalesce(1), t)
     val read = spark.read.format("graft-snapshot").option("path", t).load()
     val q1 = read.agg(count(col("v")).as("n_v"))
-    assert(!scanDescription(q1).contains("FOOTER AGGREGATE"),
+    assert(!SnapshotScanProbe.scans(q1).head.description.contains("FOOTER AGGREGATE"),
       "mixed-null groups with no NDV sidecar must decline")
     assert(q1.collect()(0).getLong(0) === 2L)
 
@@ -192,8 +186,8 @@ class GroupByPushdownSpec extends SparkSuite {
     graft.ops.NdvStats.analyzeCommit(spark, t, Seq("v"))
     val read2 = spark.read.format("graft-snapshot").option("path", t).load()
     val q2 = read2.agg(count(col("v")).as("n_v"), count(lit(1)).as("n"))
-    assert(scanDescription(q2).contains("count(v)"),
-      s"NDV null counts must unlock count(col): ${scanDescription(q2)}")
+    assert(SnapshotScanProbe.scans(q2).head.description.contains("count(v)"),
+      s"NDV null counts must unlock count(col): ${SnapshotScanProbe.scans(q2).head.description}")
     assert(q2.collect()(0).toSeq === Seq(2L, 3L))
   }
 }

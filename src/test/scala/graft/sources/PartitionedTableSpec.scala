@@ -16,12 +16,6 @@ class PartitionedTableSpec extends SparkSuite {
   private def freshDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString
 
-  private def scanDescription(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.sparkPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.description()
-    }.getOrElse(fail("no BatchScanExec in the plan"))
-
   test("partitionedCommit days(ts): routed dirs, identical answers, path-only pruning") {
     val table = freshDir("part-days") + "/t"
     val orders = graft.sources.Tables.orders(spark, sf())
@@ -44,13 +38,13 @@ class PartitionedTableSpec extends SparkSuite {
     val lo = java.sql.Timestamp.valueOf(s"$day 00:00:00")
     val hi = new java.sql.Timestamp(lo.getTime + 86400000L)
     val footers0 = SnapshotScanProbe.plannerFooterReads
-    SnapshotScanProbe.resetPartitionPrunedFiles()
     val q = read.filter(col("o_orderdate") >= lit(lo) && col("o_orderdate") < lit(hi))
-    val got = q.agg(count(lit(1)), sum(col("o_orderkey"))).collect()(0)
+      .agg(count(lit(1)), sum(col("o_orderkey")))
+    val got = q.collect()(0)
     val want = orders.filter(col("o_orderdate") >= lit(lo) && col("o_orderdate") < lit(hi))
       .agg(count(lit(1)), sum(col("o_orderkey"))).collect()(0)
     assert(got === want, "partition pruning must not change answers")
-    assert(SnapshotScanProbe.lastPartitionPrunedFiles > 0,
+    assert(SnapshotScanProbe.scans(q).head.partitionPrunedFiles > 0,
       "a one-day predicate over a day-partitioned table must prune files from paths")
     assert(SnapshotScanProbe.plannerFooterReads === footers0,
       "partition pruning must not open data-file footers")
@@ -144,15 +138,15 @@ class PartitionedTableSpec extends SparkSuite {
     assert(read.filter(col("sku").isNull).count() === 1, "null routes to the null dir and reads back")
 
     // equality on the truncate source: only the ALPHA prefix partitions stay
-    SnapshotScanProbe.resetPartitionPrunedFiles()
-    assert(read.filter(col("sku") === "ALPHA-2").count() === 1)
-    assert(SnapshotScanProbe.lastPartitionPrunedFiles > 0,
+    val alpha = read.filter(col("sku") === "ALPHA-2")
+    assert(alpha.collect().length === 1)
+    assert(SnapshotScanProbe.scans(alpha).head.partitionPrunedFiles > 0,
       "prefix partitions that cannot hold the value must prune")
 
     // identity partition pruning on a second spec field
-    SnapshotScanProbe.resetPartitionPrunedFiles()
-    assert(read.filter(col("region") === "eu").select(sum("id")).head().getLong(0) === 2L)
-    assert(SnapshotScanProbe.lastPartitionPrunedFiles > 0)
+    val eu = read.filter(col("region") === "eu").select(sum("id"))
+    assert(eu.collect()(0).getLong(0) === 2L)
+    assert(SnapshotScanProbe.scans(eu).head.partitionPrunedFiles > 0)
   }
 
   test("months transform over timestamps prunes month directories") {
@@ -168,17 +162,15 @@ class PartitionedTableSpec extends SparkSuite {
     assume(month.length > 1, "needs at least two months of data")
     val pick = month(0).getString(0)
     val lo = java.sql.Timestamp.valueOf(s"$pick-01 00:00:00")
-    SnapshotScanProbe.resetPartitionPrunedFiles()
     val got = read.filter(col("o_orderdate") < lit(lo)).count()
     assert(got === orders.filter(col("o_orderdate") < lit(lo)).count())
     // everything is >= the first month's start → every file pruned...
     // unless the planner folded the filter; assert the counter moved
     // for the complementary shape instead
-    SnapshotScanProbe.resetPartitionPrunedFiles()
     val hi = java.sql.Timestamp.valueOf(s"$pick-28 00:00:00")
-    val got2 = read.filter(col("o_orderdate") <= lit(hi)).count()
-    assert(got2 === orders.filter(col("o_orderdate") <= lit(hi)).count())
-    assert(SnapshotScanProbe.lastPartitionPrunedFiles > 0,
+    val q2 = read.filter(col("o_orderdate") <= lit(hi))
+    assert(q2.collect().length === orders.filter(col("o_orderdate") <= lit(hi)).count())
+    assert(SnapshotScanProbe.scans(q2).head.partitionPrunedFiles > 0,
       "a first-month predicate must prune later month dirs")
   }
 
@@ -297,9 +289,9 @@ class PartitionedTableSpec extends SparkSuite {
       assert(read.filter(col("sku") === "x").select("id").collect().map(_.getLong(0)).sorted
         === Array(1L, 11L))
       // pruning still fires where it is PROVABLE (the y-dir for c = 'x')
-      SnapshotScanProbe.resetPartitionPrunedFiles()
-      assert(read.filter(col("sku") === "x").count() === 2)
-      assert(SnapshotScanProbe.lastPartitionPrunedFiles > 0,
+      val x = read.filter(col("sku") === "x")
+      assert(x.collect().length === 2)
+      assert(SnapshotScanProbe.scans(x).head.partitionPrunedFiles > 0,
         "value dirs that cannot match must still prune")
     } finally {
       spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
@@ -348,9 +340,9 @@ class PartitionedTableSpec extends SparkSuite {
     assert(m2.files.exists(f => dirVal(f, "__gp0=").exists(_ < "1997-06")) &&
       m2.files.exists(f => dirVal(f, "__g1p0=").exists(_ < "1997-06-15")),
       "fixture must exercise pruning in EACH generation")
-    SnapshotScanProbe.resetPartitionPrunedFiles()
-    assert(read.filter(col("o_orderdate") >= lit(cutTs)).count() === want)
-    assert(SnapshotScanProbe.lastPartitionPrunedFiles === expectPruned,
+    val cutQ = read.filter(col("o_orderdate") >= lit(cutTs)).agg(count(lit(1)))
+    assert(cutQ.collect()(0).getLong(0) === want)
+    assert(SnapshotScanProbe.scans(cutQ).head.partitionPrunedFiles === expectPruned,
       "every provably-dead file of every generation must prune — and nothing else")
 
     // a full compaction re-routes everything under the CURRENT spec and
@@ -362,10 +354,10 @@ class PartitionedTableSpec extends SparkSuite {
     assert(mC.files.forall(_.contains("/__g1p0=")))
     assert(spark.read.format("graft-snapshot").option("path", table).load().count()
       === orders.count() * 2)
-    SnapshotScanProbe.resetPartitionPrunedFiles()
-    spark.read.format("graft-snapshot").option("path", table).load()
-      .filter(col("o_orderdate") >= lit(cutTs)).count()
-    assert(SnapshotScanProbe.lastPartitionPrunedFiles > 0,
+    val healed = spark.read.format("graft-snapshot").option("path", table).load()
+      .filter(col("o_orderdate") >= lit(cutTs)).agg(count(lit(1)))
+    healed.collect()
+    assert(SnapshotScanProbe.scans(healed).head.partitionPrunedFiles > 0,
       "day pruning must keep working after the healing rewrite")
   }
 
@@ -442,10 +434,11 @@ class PartitionedTableSpec extends SparkSuite {
     val read = spark.read.format("graft-snapshot").option("path", table).load()
     assert(read.agg(count(lit(1)), sum("o_orderkey")).collect()(0) === want,
       "compaction must not change answers")
-    SnapshotScanProbe.resetPartitionPrunedFiles()
-    read.filter(col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1999-01-01 00:00:00")))
-      .count()
-    assert(SnapshotScanProbe.lastPartitionPrunedFiles > 0,
+    val late = read.filter(
+      col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1999-01-01 00:00:00")))
+      .agg(count(lit(1)))
+    late.collect()
+    assert(SnapshotScanProbe.scans(late).head.partitionPrunedFiles > 0,
       "partition pruning must keep working after compaction")
   }
 
@@ -500,10 +493,11 @@ class PartitionedTableSpec extends SparkSuite {
 
     val read = spark.read.format("graft-snapshot").option("path", table).load()
     assert(read.agg(count(lit(1)), sum("o_orderkey")).collect()(0) === want)
-    SnapshotScanProbe.resetPartitionPrunedFiles()
-    read.filter(col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1999-01-01 00:00:00")))
-      .count()
-    assert(SnapshotScanProbe.lastPartitionPrunedFiles > 0,
+    val late = read.filter(
+      col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1999-01-01 00:00:00")))
+      .agg(count(lit(1)))
+    late.collect()
+    assert(SnapshotScanProbe.scans(late).head.partitionPrunedFiles > 0,
       "pruning keeps working over the merged layout")
   }
 

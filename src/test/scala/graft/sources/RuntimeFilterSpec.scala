@@ -47,18 +47,17 @@ class RuntimeFilterSpec extends SparkSuite {
       spark.range(0, 1000).select((col("id") * 100).as("k"), col("id").as("dimid"),
         concat(lit("tag"), col("id")).as("tag")),
       col("dimid").isin(5L, 700L, 999L))
-    val joined = load(t).join(broadcast(dim), "k")
+    val joined = load(t).join(broadcast(dim), "k").select("k", "payload", "tag")
 
-    SnapshotScan.lastRuntimePrunedGroups.set(0)
-    val rows = joined.select("k", "payload", "tag").collect().toSet
+    val rows = joined.collect().toSet
     assert(rows === Set(
       org.apache.spark.sql.Row(500L, 500L % 97, "tag5"),
       org.apache.spark.sql.Row(70000L, 70000L % 97, "tag700"),
       org.apache.spark.sql.Row(99900L, 99900L % 97, "tag999")))
     // 3 keys hit at most 3 of the 20 disjoint-range files — the
     // runtime filter must have dropped the rest at planning
-    assert(SnapshotScanProbe.lastRuntimePrunedGroups >= 17,
-      s"expected >=17 groups runtime-pruned, got ${SnapshotScanProbe.lastRuntimePrunedGroups}")
+    val pruned = SnapshotScanProbe.scans(joined).head.runtimePrunedGroups
+    assert(pruned >= 17, s"expected >=17 groups runtime-pruned, got $pruned")
   }
 
   test("runtime pruning composes with static pushdown and keeps DV correctness") {
@@ -84,12 +83,11 @@ class RuntimeFilterSpec extends SparkSuite {
     val dim = filteredDim(
       spark.range(0, 100000).select(col("id").as("k"), col("id").as("dimid")),
       col("dimid") === 12345L)
-    SnapshotScan.lastRuntimePrunedGroups.set(0)
-    val got = load(t).join(broadcast(dim), "k").select("k").as[Long].collect()
-    assert(got === Array(12345L))
-    assert(SnapshotScanProbe.lastRuntimePrunedGroups >= 8,
-      s"Bloom manifest should prune most scattered files at runtime, " +
-        s"pruned=${SnapshotScanProbe.lastRuntimePrunedGroups}")
+    val q = load(t).join(broadcast(dim), "k").select("k").as[Long]
+    assert(q.collect() === Array(12345L))
+    val pruned = SnapshotScanProbe.scans(q).head.runtimePrunedGroups
+    assert(pruned >= 8,
+      s"Bloom manifest should prune most scattered files at runtime, pruned=$pruned")
   }
 
   test("string join keys prune at runtime too") {
@@ -102,10 +100,9 @@ class RuntimeFilterSpec extends SparkSuite {
       spark.range(0, 20000).select(
         format_string("cust#%05d", col("id")).as("ck"), col("id").as("dimid")),
       col("dimid").isin(3L, 19999L))
-    SnapshotScan.lastRuntimePrunedGroups.set(0)
-    val got = load(t).join(broadcast(dim), "ck").select("v").as[Long].collect().sorted
-    assert(got === Array(3L, 19999L))
-    assert(SnapshotScanProbe.lastRuntimePrunedGroups >= 6)
+    val q = load(t).join(broadcast(dim), "ck").select("v").as[Long]
+    assert(q.collect().sorted === Array(3L, 19999L))
+    assert(SnapshotScanProbe.scans(q).head.runtimePrunedGroups >= 6)
   }
 
   test("bucketed tables do not advertise data-column runtime filtering (SPJ contract)") {
@@ -116,10 +113,9 @@ class RuntimeFilterSpec extends SparkSuite {
     val dim = filteredDim(
       spark.range(0, 10000).select(col("id").as("k"), col("id").as("dimid")),
       col("dimid").isin(5L, 9999L))
-    SnapshotScan.lastRuntimePrunedGroups.set(0)
-    val got = load(t).join(broadcast(dim), "k").select("v").as[Long].collect().sorted
-    assert(got === Array(10L, 19998L))
-    assert(SnapshotScanProbe.lastRuntimePrunedGroups === 0,
+    val q = load(t).join(broadcast(dim), "k").select("v").as[Long]
+    assert(q.collect().sorted === Array(10L, 19998L))
+    assert(SnapshotScanProbe.scans(q).head.runtimePrunedGroups === 0,
       "a KeyGroupedPartitioning-reporting scan must not drop buckets at runtime")
   }
 

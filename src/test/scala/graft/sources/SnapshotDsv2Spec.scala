@@ -3,7 +3,6 @@ package graft.sources
 import graft.SparkSuite
 import graft.store.SnapshotStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** DSv2 connector properties the dt_dsv2_scan oracle can't see: plan-
@@ -14,10 +13,6 @@ class SnapshotDsv2Spec extends SparkSuite {
 
   private def freshTable(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
-
-  private def scanOf(df: DataFrame) =
-    df.queryExecution.sparkPlan.collectFirst { case b: BatchScanExec => b.scan }
-      .getOrElse(fail(s"no BatchScanExec in plan:\n${df.queryExecution.sparkPlan}"))
 
   private def load(table: String): DataFrame =
     spark.read.format("graft-snapshot").option("path", table).load()
@@ -54,7 +49,7 @@ class SnapshotDsv2Spec extends SparkSuite {
     val q = load(table)
       .filter(col("o_totalprice") > 400000.0)
       .select(col("o_orderkey"), col("o_totalprice"))
-    val scan = scanOf(q)
+    val scan = SnapshotScanProbe.scans(q).head.exec.scan
     assert(scan.readSchema().fieldNames.toSet === Set("o_orderkey", "o_totalprice"),
       s"projection not pruned: ${scan.readSchema()}")
     assert(scan.description().contains("o_totalprice"),
@@ -72,7 +67,7 @@ class SnapshotDsv2Spec extends SparkSuite {
     SnapshotStore.commit(
       graft.sources.Tables.orders(spark, sf()).repartitionByRange(4, col("o_orderkey")), table)
     val q = load(table).filter(col("o_orderkey") === 17L)
-    val desc = scanOf(q).description()
+    val desc = SnapshotScanProbe.scans(q).head.description
     val files = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(desc)
       .getOrElse(fail(s"no file counts in scan description: $desc"))
     assert(files.group(2).toInt >= 4, s"expected >=4 part files: $desc")
@@ -80,7 +75,8 @@ class SnapshotDsv2Spec extends SparkSuite {
     assert(q.count() === 1)
     // an excluded-everywhere predicate keeps zero files but still answers
     val none = load(table).filter(col("o_orderkey") === -5L)
-    assert("files=(\\d+)/".r.findFirstMatchIn(scanOf(none).description()).get.group(1).toInt === 0)
+    val noneDesc = SnapshotScanProbe.scans(none).head.description
+    assert("files=(\\d+)/".r.findFirstMatchIn(noneDesc).get.group(1).toInt === 0)
     assert(none.count() === 0)
   }
 
@@ -89,8 +85,8 @@ class SnapshotDsv2Spec extends SparkSuite {
     val orders = graft.sources.Tables.orders(spark, sf())
     SnapshotStore.commit(orders, table)
     val clean = load(table).select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
-    assert(scanOf(clean).description().contains("vectorized"),
-      s"DV-free scan should be columnar: ${scanOf(clean).description()}")
+    assert(SnapshotScanProbe.scans(clean).head.description.contains("vectorized"),
+      s"DV-free scan should be columnar: ${SnapshotScanProbe.scans(clean).head.description}")
     // vectorized values identical to the engine read (timestamps included)
     assert(clean.collect().toSet ===
       SnapshotStore.read(spark, table)
@@ -98,8 +94,8 @@ class SnapshotDsv2Spec extends SparkSuite {
 
     SnapshotStore.deleteCommit(spark, table, Seq("o_orderkey"), col("o_orderkey") < 10)
     val withDv = load(table)
-    assert(scanOf(withDv).description().contains("vectorized"),
-      s"atomic-typed DV scan should stay columnar: ${scanOf(withDv).description()}")
+    assert(SnapshotScanProbe.scans(withDv).head.description.contains("vectorized"),
+      s"atomic-typed DV scan should stay columnar: ${SnapshotScanProbe.scans(withDv).head.description}")
     assert(withDv.count() === orders.filter(col("o_orderkey") >= 10).count())
     // full row values through the compacting reader, not just counts
     assert(withDv.collect().toSet ===
@@ -121,7 +117,7 @@ class SnapshotDsv2Spec extends SparkSuite {
     SnapshotStore.publishMarker(spark, table, 0L)
 
     val full = load(table)
-    val desc = scanOf(full).description()
+    val desc = SnapshotScanProbe.scans(full).head.description
     val rg = "rowGroups=(\\d+)/(\\d+)".r.findFirstMatchIn(desc)
       .getOrElse(fail(s"no rowGroups in description: $desc"))
     assert(rg.group(2).toInt > 4, s"expected many row groups in one file: $desc")
@@ -137,9 +133,9 @@ class SnapshotDsv2Spec extends SparkSuite {
     // a point lookup keeps a strict subset of row groups WITHIN the file
     val point = load(table).filter(col("l_orderkey") === 17L)
     val prg = "rowGroups=(\\d+)/(\\d+)".r
-      .findFirstMatchIn(scanOf(point).description()).get
+      .findFirstMatchIn(SnapshotScanProbe.scans(point).head.description).get
     assert(prg.group(1).toInt < prg.group(2).toInt,
-      s"point lookup should prune row groups: ${scanOf(point).description()}")
+      s"point lookup should prune row groups: ${SnapshotScanProbe.scans(point).head.description}")
     assert(point.count() ===
       graft.sources.Tables.lineitem(spark, sf("sf0.01"))
         .filter(col("l_orderkey") === 17L).count())
@@ -168,7 +164,7 @@ class SnapshotDsv2Spec extends SparkSuite {
     SnapshotStore.commit(events, table)
     SnapshotStore.deleteCommit(spark, table, Seq("event_id"), col("event_id") % 5 === 0)
     val viaConnector = load(table) // columnar merge-on-read
-    assert(scanOf(viaConnector).description().contains("vectorized"))
+    assert(SnapshotScanProbe.scans(viaConnector).head.description.contains("vectorized"))
     val expect = SnapshotStore.read(spark, table)
       .select(col("event_id"), col("event_time")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1))).toSet
@@ -206,7 +202,7 @@ class SnapshotDsv2Spec extends SparkSuite {
       min(col("o_totalprice")).alias("mn"),
       max(col("o_totalprice")).alias("mx"),
       max(col("o_orderkey")).alias("mk"))
-    val desc = scanOf(q).description()
+    val desc = SnapshotScanProbe.scans(q).head.description
     assert(desc.contains("FOOTER AGGREGATE"), s"aggregate not pushed: $desc")
     val r = q.collect()(0)
     val expect = orders.agg(
@@ -216,13 +212,13 @@ class SnapshotDsv2Spec extends SparkSuite {
 
     // NOT pushed when it would be wrong: a filter forces the real plan
     val filtered = load(table).filter(col("o_orderkey") > 10).agg(count(lit(1)).alias("n"))
-    assert(!scanOf(filtered).description().contains("FOOTER AGGREGATE"))
+    assert(!SnapshotScanProbe.scans(filtered).head.description.contains("FOOTER AGGREGATE"))
     assert(filtered.collect()(0).getLong(0) ===
       orders.filter(col("o_orderkey") > 10).count())
     // ...and with deletion vectors live rows must be counted for real
     SnapshotStore.deleteCommit(spark, table, Seq("o_orderkey"), col("o_orderkey") < 5)
     val dv = load(table).agg(count(lit(1)).alias("n"))
-    assert(!scanOf(dv).description().contains("FOOTER AGGREGATE"))
+    assert(!SnapshotScanProbe.scans(dv).head.description.contains("FOOTER AGGREGATE"))
     assert(dv.collect()(0).getLong(0) === orders.filter(col("o_orderkey") >= 5).count())
   }
 
@@ -236,8 +232,8 @@ class SnapshotDsv2Spec extends SparkSuite {
       min(col("o_orderpriority")).alias("mn"),
       max(col("o_orderpriority")).alias("mx"),
       count(lit(1)).alias("n"))
-    assert(scanOf(q).description().contains("FOOTER AGGREGATE"),
-      s"exact string stats should push down: ${scanOf(q).description()}")
+    assert(SnapshotScanProbe.scans(q).head.description.contains("FOOTER AGGREGATE"),
+      s"exact string stats should push down: ${SnapshotScanProbe.scans(q).head.description}")
     val r = q.collect()(0)
     val expect = orders.agg(
       min(col("o_orderpriority")), max(col("o_orderpriority")), count(lit(1))).collect()(0)
@@ -253,8 +249,8 @@ class SnapshotDsv2Spec extends SparkSuite {
       .mode("overwrite").parquet(dataDir)
     SnapshotStore.publishMarker(spark, tTrunc, 0L)
     val qt = load(tTrunc).agg(min(col("o_orderpriority")).alias("mn"))
-    assert(!scanOf(qt).description().contains("FOOTER AGGREGATE"),
-      s"truncated string stats must decline pushdown: ${scanOf(qt).description()}")
+    assert(!SnapshotScanProbe.scans(qt).head.description.contains("FOOTER AGGREGATE"),
+      s"truncated string stats must decline pushdown: ${SnapshotScanProbe.scans(qt).head.description}")
     assert(qt.collect()(0).getString(0) ===
       orders.agg(min(col("o_orderpriority"))).collect()(0).getString(0))
   }
@@ -722,9 +718,7 @@ class SnapshotDsv2Spec extends SparkSuite {
     // collect() runs THIS queryExecution (count() would build its own
     // plan whose scan metrics we could not reach)
     assert(df.collect().length === 15000)
-    val scanExec = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.getOrElse(fail("no BatchScanExec"))
+    val scanExec = SnapshotScanProbe.scans(df).head.exec
     // declared on the scan...
     assert(scanExec.scan.supportedCustomMetrics().map(_.name()).toSet ===
       Set("dvDeletedRows", "dvPassthroughBatches", "dvCompactedBatches"))
@@ -749,8 +743,8 @@ class SnapshotDsv2Spec extends SparkSuite {
     SnapshotStore.deleteCommit(spark, table, Seq("id"),
       col("id") < 10000 || pmod(col("id"), lit(3)) === 0)
     val got = load(table)
-    assert(scanOf(got).description().contains("vectorized"),
-      s"long/string/double DV scan should stay columnar: ${scanOf(got).description()}")
+    assert(SnapshotScanProbe.scans(got).head.description.contains("vectorized"),
+      s"long/string/double DV scan should stay columnar: ${SnapshotScanProbe.scans(got).head.description}")
     val expect = base.filter(!(col("id") < 10000 || pmod(col("id"), lit(3)) === 0))
     assert(got.collect().toSet === expect.collect().toSet,
       "compacted batches must carry exact values, null strings included")
@@ -761,8 +755,8 @@ class SnapshotDsv2Spec extends SparkSuite {
       spark.range(0, 1000).selectExpr("id", "array(id, id + 1) AS xs"), arrTable)
     SnapshotStore.deleteCommit(spark, arrTable, Seq("id"), pmod(col("id"), lit(2)) === 0)
     val arr = load(arrTable)
-    assert(scanOf(arr).description().contains("row"),
-      s"array column must fall back to the row reader: ${scanOf(arr).description()}")
+    assert(SnapshotScanProbe.scans(arr).head.description.contains("row"),
+      s"array column must fall back to the row reader: ${SnapshotScanProbe.scans(arr).head.description}")
     assert(arr.count() === 500)
   }
 
@@ -864,7 +858,7 @@ class SnapshotDsv2Spec extends SparkSuite {
 
     // full-scan stats: exact row count, positive size
     val full = load(t)
-    val st = scanOf(full)
+    val st = SnapshotScanProbe.scans(full).head.exec.scan
       .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
       .estimateStatistics()
     assert(st.numRows.getAsLong === 10000L)
@@ -872,7 +866,7 @@ class SnapshotDsv2Spec extends SparkSuite {
 
     // a pushed range filter shrinks the estimate with the kept groups
     val filtered = load(t).filter(col("k") < 1000L)
-    val stF = scanOf(filtered)
+    val stF = SnapshotScanProbe.scans(filtered).head.exec.scan
       .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
       .estimateStatistics()
     assert(stF.numRows.getAsLong < st.numRows.getAsLong,

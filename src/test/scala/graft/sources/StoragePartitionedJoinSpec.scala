@@ -15,8 +15,6 @@ import org.apache.spark.sql.functions._
   * 100 TB. */
 class StoragePartitionedJoinSpec extends SparkSuite {
 
-  import spark.implicits._
-
   private def shuffles(df: DataFrame): Int = SparkSuite.countExchanges(df)
 
   private def withSpjConfs(body: => Unit): Unit = {

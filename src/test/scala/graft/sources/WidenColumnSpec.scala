@@ -75,10 +75,7 @@ class WidenColumnSpec extends SparkSuite {
   }
 
   private def filesRead(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
-    val d = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.description()
-    }.getOrElse(fail("no BatchScanExec in plan"))
+    val d = SnapshotScanProbe.scans(df).head.description
     val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(d).getOrElse(
       fail(s"no files= in scan description: $d"))
     (m.group(1).toInt, m.group(2).toInt)

@@ -162,7 +162,7 @@ class PipelineSpec extends SparkSuite {
     val layout = Pipeline.Layout(root.toString, s"$root/silver", s"$root/gold")
     Pipeline.run(spark, layout, FixedClock("2024-01-01 07:00:00"),
       materializeGold = true, registerViews = false)
-    Pipeline.catalogWarehouse(spark, layout, database = "wx_cat_test", includeFacts = true)
+    Pipeline.catalogWarehouse(spark, layout, database = "wx_cat_test")
 
     // newSession shares the catalog but drops EVERY temp view — the only
     // way the query below can work is through the persistent database
@@ -212,7 +212,7 @@ class PipelineSpec extends SparkSuite {
     val layout = Pipeline.Layout(root.toString, s"$root/silver", s"$root/gold")
     Pipeline.run(spark, layout, FixedClock("2024-01-01 07:00:00"),
       materializeGold = true, registerViews = false)
-    Pipeline.catalogWarehouse(spark, layout, database = "wx_incr_test", includeFacts = true)
+    Pipeline.catalogWarehouse(spark, layout, database = "wx_incr_test")
 
     def props(table: String): Map[String, String] =
       spark.sql(s"SHOW TBLPROPERTIES wx_incr_test.$table")
@@ -236,7 +236,7 @@ class PipelineSpec extends SparkSuite {
     val dimDate = spark.read.parquet(s"$root/gold/dim_date")
     dimDate.limit(0).write.mode("append").parquet(s"$root/gold/dim_date")
 
-    Pipeline.catalogWarehouse(spark, layout, database = "wx_incr_test", includeFacts = true)
+    Pipeline.catalogWarehouse(spark, layout, database = "wx_incr_test")
     // unchanged table: same catalog entry (no DROP/CREATE round trip)
     assert(props("dim_location").get("graft.test.marker").contains("r1"),
       "unchanged table was rebuilt")

@@ -394,7 +394,6 @@ class SnapshotStoreSpec extends SparkSuite {
     val dropped = SnapshotStore.vacuum(spark, t, keep = 2)
     assert(dropped === Seq(0L, 1L))
     assert(SnapshotStore.versions(spark, t) === Seq(2L, 3L))
-    val v0Dir = new org.apache.hadoop.fs.Path(t).suffix("") // root listing below
     val dirs = fsys.listStatus(new org.apache.hadoop.fs.Path(t)).toSeq
       .map(_.getPath.getName).filter(_.startsWith("v="))
     // v0 staging dir fully dead -> gone; v1's append stage also gone

@@ -88,20 +88,19 @@ class TableChecksSpec extends SparkSuite {
 
     val read = spark.read.format("graft-snapshot").option("path", t).load()
     val footers0 = SnapshotScanProbe.plannerFooterReads
-    SnapshotScanProbe.resetConstraintPrunedFiles()
-    val n = read.filter(col("o_totalprice") < 0).count()
-    assert(n === 0L)
-    assert(SnapshotScanProbe.lastConstraintPrunedFiles > 0,
+    val neg = read.filter(col("o_totalprice") < 0)
+    assert(neg.collect().length === 0)
+    assert(SnapshotScanProbe.scans(neg).head.constraintPrunedFiles > 0,
       "the contradicting filter must empty the scan from the constraint alone")
     assert(SnapshotScanProbe.plannerFooterReads === footers0,
       "constraint pruning must not open footers")
 
     // a compatible filter is untouched — and still correct
-    SnapshotScanProbe.resetConstraintPrunedFiles()
     val want = graft.sources.Tables.orders(spark, sf())
       .filter(col("o_totalprice") > 100000.0).count()
-    assert(read.filter(col("o_totalprice") > 100000.0).count() === want)
-    assert(SnapshotScanProbe.lastConstraintPrunedFiles === 0L,
+    val pos = read.filter(col("o_totalprice") > 100000.0)
+    assert(pos.collect().length === want)
+    assert(SnapshotScanProbe.scans(pos).head.constraintPrunedFiles === 0,
       "a satisfiable filter must not constraint-prune")
   }
 
@@ -117,18 +116,16 @@ class TableChecksSpec extends SparkSuite {
     spark.sql(s"DELETE FROM $cat.facts.tt WHERE price < 0")
     spark.sql(s"ALTER TABLE $cat.facts.tt ADD CONSTRAINT price_pos CHECK (price >= 0)")
 
-    SnapshotScanProbe.resetConstraintPrunedFiles()
     val old = spark.sql(s"SELECT id, price FROM $cat.facts.tt VERSION AS OF 0 WHERE price < 0")
-      .collect()
-    assert(old.map(_.getInt(0)).toSeq === Seq(1),
+    assert(old.collect().map(_.getInt(0)).toSeq === Seq(1),
       "the pinned old snapshot legitimately violates the later-added CHECK")
-    assert(SnapshotScanProbe.lastConstraintPrunedFiles === 0L,
+    assert(SnapshotScanProbe.scans(old).head.constraintPrunedFiles === 0,
       "constraint pruning must not fire on a non-head manifest")
 
     // head scans still prune (the optimization survives the gate)
-    SnapshotScanProbe.resetConstraintPrunedFiles()
-    assert(spark.sql(s"SELECT * FROM $cat.facts.tt WHERE price < 0").count() === 0L)
-    assert(SnapshotScanProbe.lastConstraintPrunedFiles > 0,
+    val head = spark.sql(s"SELECT * FROM $cat.facts.tt WHERE price < 0")
+    assert(head.collect().length === 0)
+    assert(SnapshotScanProbe.scans(head).head.constraintPrunedFiles > 0,
       "head scans must still constraint-prune")
   }
 
