@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{MissingNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark runner: times each registered query at SPARK_GRAFT_SF_DIR and
@@ -20,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** One representative per operator family; keep ≤40 so the JSON line
     * stays well under the harness's 2000-char tail window. */
-  private val headline: Seq[String] = Seq(
+  private[graft] val headline: Seq[String] = Seq(
     "wx_q1_accuracy", "wx_q2_city_ranking", "wx_q3_summary", "wx_q4_quality",
     "wx_s1_flatten", "a1_agg", "a7_rollup", "a18_count_min",
     "j1_multikey_join", "j3_role_playing", "j4_band_join", "j4c_asof_native",
@@ -37,7 +39,62 @@ object Bench {
     "x11_volume_shipping", "tx_langid_trained", "mm_frames", "st11_asof_enrich",
     "dt_append", "dt_merge_sql", "dt_dsv2_scan")
 
-  private def fmt(v: Double): String = f"$v%.3f"
+  private val json = new ObjectMapper()
+
+  /** A JSON object from ordered pairs: doubles print with exactly 3
+    * decimals, a sequence of pairs nests as an object and any other
+    * sequence as an array. */
+  private def obj(fields: Seq[(String, Any)]): ObjectNode = {
+    val o = json.createObjectNode()
+    fields.foreach { case (k, v) => o.set[ObjectNode](k, node(v)) }
+    o
+  }
+
+  private def node(v: Any): JsonNode = v match {
+    case d: Double  => json.getNodeFactory.numberNode(
+      java.math.BigDecimal.valueOf(d).setScale(3, java.math.RoundingMode.HALF_UP))
+    case i: Int     => json.getNodeFactory.numberNode(i)
+    case b: Boolean => json.getNodeFactory.booleanNode(b)
+    case t: String  => json.getNodeFactory.textNode(t)
+    case xs: Seq[_] if xs.forall(_.isInstanceOf[(_, _)]) =>
+      obj(xs.asInstanceOf[Seq[(String, Any)]])
+    case xs: Seq[_] => xs.foldLeft(json.createArrayNode())((a, x) => a.add(node(x)))
+  }
+
+  /** One run's figures: [[full]] is the BENCH_FULL.json record and
+    * [[line]] the short printed line, keys in their published order. */
+  private[graft] final case class Record(
+      total: Double, nQueries: Int, queries: Seq[(String, Double)],
+      errors: Seq[(String, String)], runs: Map[String, Seq[Double]], spreadMax: Double,
+      controlSec: Double, controlScale: Double, gate: BenchGate.Verdict,
+      regressions: Seq[(String, (Double, Double))], cleared: Map[String, Double],
+      reruns: Map[String, Double], boot: Seq[(String, Double)],
+      fixtures: Seq[(String, Double)], sf: String) {
+
+    def full: ObjectNode = obj(Seq(
+      "metric" -> "total", "value" -> total, "unit" -> "sec", "timing" -> "net",
+      "n_queries" -> nQueries, "queries" -> queries,
+      "queries_stat" -> "first_pass_net_of_fixtures", "runs" -> runs.toSeq.sortBy(_._1),
+      "runs_stat" -> "headline_3_runs_first_then_warm", "spread_max" -> spreadMax,
+      "errors" -> errors, "control_sec" -> controlSec, "control_scale_vs_prev" -> controlScale,
+      "median_ratio_vs_prev" -> gate.medianRatio, "n_shared_vs_prev" -> gate.nShared,
+      "corpus_slowdown" -> gate.corpusSlowdown,
+      "regressions_vs_prev" -> regressions.map { case (k, (now, old)) => k -> Seq(now, old) },
+      "flags_cleared_on_rerun" -> cleared.toSeq.sortBy(_._1),
+      "reruns" -> reruns.toSeq.sortBy(_._1), "reruns_stat" -> "isolated_single_rerun") ++
+      boot ++ Seq("fixture_setup_sec" -> fixtures, "sf" -> sf))
+
+    /** Short enough for the 2000-char tail window: the headline medians
+      * instead of the per-query map. */
+    def line(headline: Seq[String]): ObjectNode = obj(Seq(
+      "metric" -> "total", "value" -> total, "unit" -> "sec", "n_queries" -> nQueries,
+      "n_errors" -> errors.size,
+      "queries" -> headline.flatMap(k => runs.get(k).map(rs => k -> BenchGate.median(rs))),
+      "queries_stat" -> "median_of_3", "spread_max" -> spreadMax, "control_sec" -> controlSec,
+      "median_ratio_vs_prev" -> gate.medianRatio, "n_regressions" -> regressions.size,
+      "corpus_slowdown" -> gate.corpusSlowdown) ++
+      boot ++ Seq("full" -> "BENCH_FULL.json", "sf" -> sf))
+  }
 
   /** Seconds for one `fn(spark, sfDir).count()`. The query's tracked
     * intermediate caches ([[graft.ops.QueryCaches]]) are released in
@@ -79,9 +136,8 @@ object Bench {
   private[graft] def readBaseline(text: String, sfDir: String): Baseline = {
     import scala.jdk.CollectionConverters._
     val root =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      catch { case scala.util.control.NonFatal(_) =>
-        com.fasterxml.jackson.databind.node.MissingNode.getInstance }
+      try json.readTree(text)
+      catch { case scala.util.control.NonFatal(_) => MissingNode.getInstance }
     if (root.path("sf").asText() != sfDir || root.path("timing").asText() != "net") noBaseline
     else {
       def fields(key: String) = root.path(key).properties().asScala.toSeq
@@ -166,8 +222,6 @@ object Bench {
       } catch { case e: Throwable => (name, 0.0, Some(e.getClass.getSimpleName)) }
     }
     val ok = outcomes.filter(_._3.isEmpty)
-    val errs = outcomes.collect { case (k, _, Some(e)) => "\"" + k + "\":\"" + e + "\"" }
-      .mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     // Contention self-diagnosis (round-8 lesson: a busy box once inflated
     // per-query times 2.5× and cost a round of re-benching): every
@@ -252,36 +306,20 @@ object Bench {
         }
       }
     }
-    val regressionsJson = regressions
-      .map { case (k, (now, old)) => "\"" + k + "\":[" + fmt(now) + "," + fmt(old) + "]" }
-      .mkString("{", ",", "}")
-    val clearedJson = cleared.toSeq.sortBy(_._1)
-      .map { case (k, w) => "\"" + k + "\":" + fmt(w) }
-      .mkString("{", ",", "}")
-    val rerunsJson = reruns.toSeq.sortBy(_._1)
-      .map { case (k, w) => "\"" + k + "\":" + fmt(w) }
-      .mkString("{", ",", "}")
-
-    val fullQs = ok.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val runsJson = headRuns.toSeq.sortBy(_._1)
-      .map { case (k, rs) => "\"" + k + "\":[" + rs.map(fmt).mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    val boot = s""""pipeline_bootstrap_sec":${fmt(pipelineSec)},"materialize_gold_sec":${fmt(materializeSec)},"catalog_bootstrap_sec":${fmt(catalogSec)}"""
+    val boot = Seq("pipeline_bootstrap_sec" -> pipelineSec,
+      "materialize_gold_sec" -> materializeSec, "catalog_bootstrap_sec" -> catalogSec)
     // fixture builds (snapshot commits, index writes) run once per JVM
     // and are recorded HERE, not inside the measured query times of the
     // warm re-runs — the headline medians are read-path numbers
-    val fixturesJson = graft.queries.Fixtures.buildTimes.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '|') + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"net","n_queries":${outcomes.size},"queries":$fullQs,"queries_stat":"first_pass_net_of_fixtures","runs":$runsJson,"runs_stat":"headline_3_runs_first_then_warm","spread_max":${fmt(spreadMax)},"errors":$errs,"control_sec":${fmt(controlSec)},"control_scale_vs_prev":${fmt(controlScale)},"median_ratio_vs_prev":${fmt(gate.medianRatio)},"n_shared_vs_prev":${gate.nShared},"corpus_slowdown":${gate.corpusSlowdown},"regressions_vs_prev":$regressionsJson,"flags_cleared_on_rerun":$clearedJson,"reruns":$rerunsJson,"reruns_stat":"isolated_single_rerun",$boot,"fixture_setup_sec":$fixturesJson,"sf":"$sfDir"}"""
+    val fixtures = graft.queries.Fixtures.buildTimes.toSeq.sortBy(_._1)
+      .map { case (k, v) => k.takeWhile(_ != '|') -> v }
+    val record = Record(total, outcomes.size, ok.map { case (k, v, _) => k -> v },
+      outcomes.collect { case (k, _, Some(e)) => k -> e }, headRuns, spreadMax,
+      controlSec, controlScale, gate, regressions, cleared.toMap, reruns.toMap,
+      boot, fixtures, sfDir)
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(fullOut),
-      full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val headQs = headline.flatMap(k => headRuns.get(k).map(rs => "\"" + k + "\":" + fmt(BenchGate.median(rs))))
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${outcomes.size},"n_errors":${outcomes.count(_._3.isDefined)},"queries":$headQs,"queries_stat":"median_of_3","spread_max":${fmt(spreadMax)},"control_sec":${fmt(controlSec)},"median_ratio_vs_prev":${fmt(gate.medianRatio)},"n_regressions":${regressions.size},"corpus_slowdown":${gate.corpusSlowdown},$boot,"full":"BENCH_FULL.json","sf":"$sfDir"}""")
+      java.nio.file.Paths.get(fullOut), json.writeValueAsBytes(record.full))
+    println(json.writeValueAsString(record.line(headline)))
     spark.stop()
   }
 }

@@ -68,7 +68,8 @@ object Pipeline {
       s"${layout.silverDir}/current_weather", "observation_date", mode = "overwrite")
     val forecastMetrics = BronzeToSilver.writeSilverObserved(
       BronzeToSilver.forecastSilver(forecastBronze, clock),
-      s"${layout.silverDir}/forecast_weather", "forecast_created_date", mode = "overwrite")
+      s"${layout.silverDir}/forecast_weather", "forecast_created_date", mode = "overwrite",
+      rangeCols = Seq("forecast_for_date"))
 
     val currentSilver = spark.read.parquet(s"${layout.silverDir}/current_weather")
     val forecastSilver = spark.read.parquet(s"${layout.silverDir}/forecast_weather")
@@ -78,7 +79,13 @@ object Pipeline {
     val dimLocPath = s"${layout.goldDir}/dim_location"
     if (!pathExists(spark, dimLocPath))
       Dimensions.writeDim(Dimensions.buildDimLocation(currentSilver, clock), dimLocPath)
-    Dimensions.writeDim(Dimensions.buildDimDate(spark), s"${layout.goldDir}/dim_date")
+    // the calendar covers every date the fact joins use (observation,
+    // forecast-created and forecast-for dates), read from the ranges the
+    // silver writes observed
+    val joinedDates = Seq(currentMetrics, forecastMetrics).flatMap(_.collect {
+      case (k, v) if v != null && (k.startsWith("min_") || k.startsWith("max_")) => v.toString
+    })
+    Dimensions.writeDim(Dimensions.buildDimDate(spark, joinedDates), s"${layout.goldDir}/dim_date")
 
     val dimLocation = spark.read.parquet(dimLocPath)
     val dimDate = spark.read.parquet(s"${layout.goldDir}/dim_date")

@@ -149,18 +149,23 @@ object BronzeToSilver {
     * job itself — the operational numbers a pipeline reports per batch
     * (reference analog: Glue job metrics) without the second full scan
     * a `df.count()` would cost. At 100 TB a post-write count re-reads
-    * the layer; observation is free. */
+    * the layer; observation is free. Each of `rangeCols` adds its
+    * `min_<col>`/`max_<col>` to the same observation. */
   def writeSilverObserved(
       df: DataFrame,
       path: String,
       partitionCol: String,
-      mode: String = "append"): Map[String, Any] = {
+      mode: String = "append",
+      rangeCols: Seq[String] = Nil): Map[String, Any] = {
     val obs = org.apache.spark.sql.Observation()
+    val ranges = rangeCols.flatMap(c => Seq(
+      min(col(c)).cast("string").alias(s"min_$c"),
+      max(col(c)).cast("string").alias(s"max_$c")))
     df.observe(
         obs,
         count(lit(1)).alias("rows_written"),
-        min(col(partitionCol)).cast("string").alias("min_partition"),
-        max(col(partitionCol)).cast("string").alias("max_partition"))
+        min(col(partitionCol)).cast("string").alias("min_partition") +:
+          max(col(partitionCol)).cast("string").alias("max_partition") +: ranges: _*)
       .write.partitionBy(partitionCol).mode(mode).parquet(path)
     obs.get
   }

@@ -208,9 +208,12 @@ object Dimensions {
       .withColumn("is_weekend", when(dayofweek(col("full_date")).isin(1, 7), true).otherwise(false))
       .withColumn("is_holiday", lit(false))
 
-  /** The reference's dim_date range (`build_dimensions.py:101-102`). */
-  def buildDimDate(spark: SparkSession): DataFrame =
-    calendar(spark, "2024-01-01", "2026-12-31")
+  /** The reference's dim_date range (`build_dimensions.py:101-102`),
+    * widened to cover every ISO `yyyy-MM-dd` date in `dates` — the
+    * facts inner-join this calendar, so a date outside it would drop
+    * its rows silently. */
+  def buildDimDate(spark: SparkSession, dates: Seq[String] = Nil): DataFrame =
+    calendar(spark, ("2024-01-01" +: dates).min, ("2026-12-31" +: dates).max)
 
   /** S4: full-rebuild parquet sink (`build_dimensions.py:93`, `:147`). */
   def writeDim(df: DataFrame, path: String): Unit =

@@ -8,17 +8,16 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 
-/** Native Catalyst expressions for the two hot loops the built-in
-  * higher-order functions can't run fast: min-hash signatures and dense
-  * dot products. Both implement `doGenCode`, so they compile into the
-  * whole-stage-codegen Java loop instead of interpreting one lambda call
-  * per array element (measured ~6× on the LSH dedup pipeline at sf0.1).
-  *
-  * Semantics match the pure-expression reference implementations kept in
-  * [[graft.ops.Dedup.minhashSignature]] (hash family differs — XXH64
-  * direct vs composed — but both are deterministic xxhash64 families) and
-  * [[graft.ops.Similarity.dot]] (bit-identical: same sequential fold).
-  */
+// Native Catalyst expressions for the two hot loops the built-in
+// higher-order functions can't run fast: min-hash signatures and dense
+// dot products. Both implement `doGenCode`, so they compile into the
+// whole-stage-codegen Java loop instead of interpreting one lambda call
+// per array element (measured ~6× on the LSH dedup pipeline at sf0.1).
+//
+// Semantics match the pure-expression reference implementations kept in
+// `graft.ops.Dedup.minhashSignature` (hash family differs — XXH64
+// direct vs composed — but both are deterministic xxhash64 families) and
+// `graft.ops.Similarity.dot` (bit-identical: same sequential fold).
 
 /** `minhash_signature(tokens, k)`: k-slot MinHash signature of an
   * array<string>. Slot i = min over tokens of

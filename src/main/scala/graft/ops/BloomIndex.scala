@@ -165,10 +165,9 @@ object BloomIndex {
     * Lifecycle mirrors the stats sidecar: delete commits and appends
     * carry the index forward (entries are FILE-keyed — appended files
     * simply have no entry, so they are never pruned), full rewrites
-    * drop it, vacuum collects unreferenced index dirs, `syncFiles`
-    * mirrors it path-rewritten. Entries key by `dirName/fileName`
-    * ([[graft.store.SnapshotStore.relFileKey]]) so the index survives
-    * mirroring verbatim.
+    * drop it, vacuum collects unreferenced index dirs. Entries key by
+    * `dirName/fileName` ([[graft.store.SnapshotStore.relFileKey]]), so
+    * they stay valid wherever the table root lives.
     *
     * The build reads the RAW files (deleted rows included): a Bloom
     * false positive costs a file open, never a wrong row, so

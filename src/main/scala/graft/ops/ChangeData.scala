@@ -82,9 +82,7 @@ object ChangeData {
     *     general path (`broadcastSource = false`) is one shuffle per
     *     side on the key.
     *   - Pair with [[graft.store.SnapshotStore]] (see `mergeCommit`)
-    *     so the rewrite publishes atomically, and with the sharded
-    *     state layout of [[graft.streaming.Sinks]] when only touched
-    *     shards should rewrite.
+    *     so the rewrite publishes atomically.
     */
   def mergeInto(
       target: DataFrame,

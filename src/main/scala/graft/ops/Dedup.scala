@@ -88,8 +88,7 @@ object Dedup {
     * @param df    input with an id column and a text column
     * @param k     signature length (bands * rowsPerBand)
     * @param bands number of LSH bands; P(candidate) = 1-(1-J^r)^b
-    */
-  /** @param maxBucket LSH buckets larger than this are dropped BEFORE the
+    * @param maxBucket LSH buckets larger than this are dropped BEFORE the
     *                   per-bucket id list materializes, so the worst case
     *                   (a boilerplate-heavy corpus where thousands of
     *                   near-identical texts co-bucket in every band) is
@@ -344,8 +343,9 @@ object Dedup {
     * construction — df(tok) bounds the bucket), and verification joins
     * shingle sets back for the candidate set only. Never all-pairs.
     * `maxBucket` only bites on degenerate corpora (one text replicated
-    * n×, which the exact pass removes first — same contract as LSH). */
-  /** `maxCandidatePairs > 0` arms a FAIL-FAST candidate budget: exact
+    * n×, which the exact pass removes first — same contract as LSH).
+    *
+    * `maxCandidatePairs > 0` arms a FAIL-FAST candidate budget: exact
     * set-similarity join is data-dependent by nature — a corpus with
     * large boilerplate clusters (many docs sharing rare-ish shingles)
     * generates candidate pairs super-linearly, and the failure mode

@@ -42,14 +42,6 @@ object Graph {
       case None => df.localCheckpoint(true)
     }
 
-  /** PageRank over an UNDIRECTED graph (callers pass each edge once;
-    * both directions are added here, so no dangling-mass correction is
-    * needed — every node that appears has out-degree ≥ 1).
-    *
-    * Returns (node, pr) after exactly `iterations` rounds of
-    * `pr'(v) = (1−d)/N + d · Σ_{u~v} pr(u)/deg(u)` from the uniform
-    * start 1/N. Pass `checkpointDir` for executor-loss resilience on
-    * long runs (see [[pin]]). */
   /** Release the per-round pinned blocks of an ended iteration, keeping
     * the returned frame's own pin: localCheckpoint never unpersists by
     * itself, so an unreleased loop leaks one cached RDD per round per
@@ -62,6 +54,14 @@ object Graph {
       .flatMap(org.apache.spark.sql.graftbridge.Bridge.checkpointRdd)
       .foreach(_.unpersist(false))
 
+  /** PageRank over an UNDIRECTED graph (callers pass each edge once;
+    * both directions are added here, so no dangling-mass correction is
+    * needed — every node that appears has out-degree ≥ 1).
+    *
+    * Returns (node, pr) after exactly `iterations` rounds of
+    * `pr'(v) = (1−d)/N + d · Σ_{u~v} pr(u)/deg(u)` from the uniform
+    * start 1/N. Pass `checkpointDir` for executor-loss resilience on
+    * long runs (see [[pin]]). */
   def pageRank(
       edges: DataFrame,
       srcCol: String,

@@ -254,13 +254,6 @@ object Ivf {
         col("n_id"), round(col("sim"), 4).alias("approx_sim"))
   }
 
-  /** IVF top-k: probe the `nProbe` closest cells per query, exact-rank
-    * within them. Output (q_id, rnk, n_id, sim) like the other ANN paths.
-    * `centroids` overrides the deterministic seed quantizer with a
-    * refined table (e.g. [[trainCentroids]]) — the search path is
-    * identical either way, and with `nProbe = nCells` the result is
-    * exactly brute force regardless of centroid quality (which is what
-    * lets the trained variant share the exact oracle). */
   /** PERSIST the inverted file: assignment rows written `partitionBy`
     * cell (one directory per cell) plus the centroid table — the
     * durable form of the index this file's Scaladoc promises ("at
@@ -327,6 +320,13 @@ object Ivf {
       .select(col("q_id"), col("rnk"), col("n_id"), round(col("sim"), 4).alias("sim"))
   }
 
+  /** IVF top-k: probe the `nProbe` closest cells per query, exact-rank
+    * within them. Output (q_id, rnk, n_id, sim) like the other ANN paths.
+    * `centroids` overrides the deterministic seed quantizer with a
+    * refined table (e.g. [[trainCentroids]]) — the search path is
+    * identical either way, and with `nProbe = nCells` the result is
+    * exactly brute force regardless of centroid quality (which is what
+    * lets the trained variant share the exact oracle). */
   def topK(
       corpus: DataFrame,
       idCol: String,

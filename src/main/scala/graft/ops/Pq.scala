@@ -214,11 +214,6 @@ object Pq {
     assignCodes(subvectors(corpus, idCol, vecCol, m, normalize), codebook)
       .select(col("__id"), col("sub"), col("code"))
 
-  /** Asymmetric-distance top-k: full-precision queries against the
-    * quantized corpus. The per-query lookup table (dot of each query
-    * subvector with each code centroid) is broadcast; approximate
-    * cosine = Σ_sub lut(q, sub, code(n, sub)) reduces in one
-    * aggregation. Queries never see raw corpus vectors — only codes. */
   /** Per-query ADC lookup table: (q_id, sub, code, __d) with
     * __d = dot(query subvector, code centroid). m × ksub rows per query
     * — KBs, always broadcastable. */
@@ -250,6 +245,11 @@ object Pq {
     math.min(256, math.max(base, scaled))
   }
 
+  /** Asymmetric-distance top-k: full-precision queries against the
+    * quantized corpus. The per-query lookup table (dot of each query
+    * subvector with each code centroid) is broadcast; approximate
+    * cosine = Σ_sub lut(q, sub, code(n, sub)) reduces in one
+    * aggregation. Queries never see raw corpus vectors — only codes. */
   def adcTopK(
       corpus: DataFrame,
       idCol: String,

@@ -172,13 +172,6 @@ object CompositeQueries {
       .orderBy(col("window_start"), col("event_type"))
   }
 
-  /** ST3 (beyond reference parity): stream-stream interval join — the
-    * view→purchase attribution join
-    * ([[graft.streaming.EventStreams.viewPurchaseAttribution]]) run in
-    * batch (watermarks analyzer-eliminated), verified against a DuckDB
-    * range-join oracle. The streaming path (state bounded by watermark +
-    * horizon, cross-micro-batch matching) is exercised in
-    * `StreamingSpec`. */
   /** ST11 (beyond reference parity): streaming AS-OF (temporal) join —
     * each purchase enriched with the user's latest at-or-before view
     * within 1 h ([[graft.streaming.EventStreams.asOfEnrichStream]]:
@@ -196,6 +189,13 @@ object CompositeQueries {
       .orderBy(col("purchase_id"))
   }
 
+  /** ST3 (beyond reference parity): stream-stream interval join — the
+    * view→purchase attribution join
+    * ([[graft.streaming.EventStreams.viewPurchaseAttribution]]) run in
+    * batch (watermarks analyzer-eliminated), verified against a DuckDB
+    * range-join oracle. The streaming path (state bounded by watermark +
+    * horizon, cross-micro-batch matching) is exercised in
+    * `StreamingSpec`. */
   val st3IntervalJoin: Q = (s, d) => {
     val e = Tables.events(s, d)
     graft.streaming.EventStreams.viewPurchaseAttribution(

@@ -111,14 +111,6 @@ object EventAnalytics {
       .orderBy(col("user_id"))
   }
 
-  /** DT3: MERGE INTO ([[graft.ops.ChangeData.mergeInto]]) — the
-    * warehouse upsert statement over `customer`, with a source batch
-    * derived from 1995 order activity. All three clauses fire:
-    * matched+big-spender → DELETE, matched → UPDATE (acctbal += spend),
-    * not-matched (keys shifted past the customer range) → INSERT.
-    * Money moves in integer cents so both engines compute bit-identical
-    * doubles from one final division. Runs the `broadcastSource`
-    * low-shuffle plan: the wide target side never shuffles. */
   /** The 1995-activity merge source shared by `dt_merge_into` and
     * `dt_time_travel`: per-customer spend in integer cents, with every
     * 7th key shifted past the customer range so the NOT MATCHED clause
@@ -147,6 +139,14 @@ object EventAnalytics {
         "c_mktsegment" -> lit("NEW")),
       broadcastSource = true)
 
+  /** DT3: MERGE INTO ([[graft.ops.ChangeData.mergeInto]]) — the
+    * warehouse upsert statement over `customer`, with a source batch
+    * derived from 1995 order activity. All three clauses fire:
+    * matched+big-spender → DELETE, matched → UPDATE (acctbal += spend),
+    * not-matched (keys shifted past the customer range) → INSERT.
+    * Money moves in integer cents so both engines compute bit-identical
+    * doubles from one final division. Runs the `broadcastSource`
+    * low-shuffle plan: the wide target side never shuffles. */
   val dtMergeInto: Q = (s, d) =>
     mergeCustomer(Tables.customer(s, d), mergeSource(s, d))
       .orderBy(col("c_custkey"))
@@ -518,13 +518,6 @@ object EventAnalytics {
       .orderBy(col("_change_type"), col("yr"))
   }
 
-  /** DT11: SQL `MERGE INTO` over a catalog table — the same three-clause
-    * semantics as `dt_merge_into` (delete big spenders, update balances,
-    * insert shifted keys), but issued as the ANSI statement and executed
-    * as a group-based copy-on-write row-level operation (only files with
-    * a matching row rewrite; see SnapshotRowLevelSpec for the file-level
-    * pins). SHARES dt_merge_into's oracle: both paths must produce the
-    * byte-identical merged customer table. */
   /** DT24: VERSION TAGS — pin v0 of the customer table under a name,
     * advance it twice, vacuum past the untagged middle version, then
     * read the PINNED snapshot by name (`version=golden`) next to the
@@ -597,6 +590,13 @@ object EventAnalytics {
               FROM $cat.facts.customer ORDER BY c_custkey""")
   }
 
+  /** DT11: SQL `MERGE INTO` over a catalog table — the same three-clause
+    * semantics as `dt_merge_into` (delete big spenders, update balances,
+    * insert shifted keys), but issued as the ANSI statement and executed
+    * as a group-based copy-on-write row-level operation (only files with
+    * a matching row rewrite; see SnapshotRowLevelSpec for the file-level
+    * pins). SHARES dt_merge_into's oracle: both paths must produce the
+    * byte-identical merged customer table. */
   val dtMergeSql: Q = (s, d) => {
     val wh = Fixtures.dir("mergesql", d) { root =>
       val cat = snapCatalog(s, root)
@@ -1971,8 +1971,6 @@ object EventAnalytics {
          ORDER BY user_id"""
   )
 
-  /** dt_merge_sql SHARES dt_merge_into's oracle text: the SQL statement
-    * and the DataFrame API must produce the identical merged table. */
   /** DT13: incremental small-file compaction
     * ([[graft.ops.Bucketing.compactSmallFilesCommit]]) — one big commit
     * plus five tiny appends (the streaming-sink debris shape), then the
@@ -2220,16 +2218,6 @@ object EventAnalytics {
       .orderBy(col("o_orderpriority"))
   }
 
-  /** DT15: STORAGE-PARTITIONED JOIN — orders and lineitem committed
-    * co-bucketed on the order key ([[graft.store.SnapshotStore
-    * .bucketedCommit]]), joined through the catalog with V2 bucketing
-    * enabled: the scans report matching `KeyGroupedPartitioning
-    * (bucket(n, key))`, the catalog's `bucket` function resolves the
-    * transform, and the join plans with ZERO exchanges — the
-    * write-once shuffle amortized over every read (the fact⨝fact
-    * answer at 100 TB; `StoragePartitionedJoinSpec` pins the
-    * zero-shuffle plan shape). The oracle replays the join on the raw
-    * tables — co-location is plan-shape-only, values must be exact. */
   /** DT19: SORTED co-bucketed merge join — both facts commit through
     * [[graft.store.SnapshotStore.bucketedCommit]] with `sortCols` on
     * the join key, so the scan reports KeyGroupedPartitioning AND
@@ -2262,6 +2250,16 @@ object EventAnalytics {
           ORDER BY o.o_orderstatus""")
   }
 
+  /** DT15: STORAGE-PARTITIONED JOIN — orders and lineitem committed
+    * co-bucketed on the order key ([[graft.store.SnapshotStore
+    * .bucketedCommit]]), joined through the catalog with V2 bucketing
+    * enabled: the scans report matching `KeyGroupedPartitioning
+    * (bucket(n, key))`, the catalog's `bucket` function resolves the
+    * transform, and the join plans with ZERO exchanges — the
+    * write-once shuffle amortized over every read (the fact⨝fact
+    * answer at 100 TB; `StoragePartitionedJoinSpec` pins the
+    * zero-shuffle plan shape). The oracle replays the join on the raw
+    * tables — co-location is plan-shape-only, values must be exact. */
   val dtSpjJoin: Q = (s, d) => {
     val wh = Fixtures.dir("spj", d) { root =>
       val buckets = s.sparkContext.defaultParallelism.max(4)
@@ -2288,6 +2286,8 @@ object EventAnalytics {
           ORDER BY o.o_orderpriority""")
   }
 
+  /** dt_merge_sql SHARES dt_merge_into's oracle text: the SQL statement
+    * and the DataFrame API must produce the identical merged table. */
   val oracles: Map[String, String] =
     oraclesBase +
       ("dt_merge_sql" -> oraclesBase("dt_merge_into")) +

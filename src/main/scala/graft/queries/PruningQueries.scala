@@ -130,14 +130,6 @@ object PruningQueries {
       .orderBy(col("o_orderkey"))
   }
 
-  /** BL: file-level Bloom point lookup ([[graft.ops.BloomIndex]]) —
-    * needle-in-haystack equality on a high-cardinality key the layout
-    * is NOT clustered by. The table is written hash-scattered (the
-    * envelope index is useless by construction: every file spans the
-    * key range); the per-file Bloom index prunes to the files that
-    * might hold each probed key, and the exact IN re-applies. Result ≡
-    * plain filter, which is what the oracle runs; the pruning factor
-    * itself is pinned in ScalaTest. */
   /** BL2: the Bloom MANIFEST index through the DSv2 connector
     * ([[graft.ops.BloomIndex.bloomCommit]]) — a snapshot table
     * scattered by `o_custkey` (so min/max stats on `o_orderkey`
@@ -162,6 +154,14 @@ object PruningQueries {
       .orderBy(col("o_orderkey"))
   }
 
+  /** BL: file-level Bloom point lookup ([[graft.ops.BloomIndex]]) —
+    * needle-in-haystack equality on a high-cardinality key the layout
+    * is NOT clustered by. The table is written hash-scattered (the
+    * envelope index is useless by construction: every file spans the
+    * key range); the per-file Bloom index prunes to the files that
+    * might hold each probed key, and the exact IN re-applies. Result ≡
+    * plain filter, which is what the oracle runs; the pruning factor
+    * itself is pinned in ScalaTest. */
   val blPointLookup: Q = (s, d) => {
     val dir = Fixtures.table("bindex", d) { t =>
       Tables.orders(s, d)

@@ -5,21 +5,6 @@ import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFu
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
-/** The V2 `bucket` function backing storage-partitioned joins over
-  * [[graft.store.SnapshotStore.bucketedCommit]] tables.
-  *
-  * Spark resolves a scan's `bucket(n, cols)` transform through the
-  * table's FUNCTION catalog before it will key-group partitions; the
-  * bound function must compute exactly the row→bucket route the WRITER
-  * used, because Spark may evaluate it (partially-clustered
-  * distributions, missing-partition fill-in). The writer routes via
-  * `df.repartition(n, cols)` = Spark's own HashPartitioning, i.e.
-  * `pmod(murmur3(cols, seed = 42), n)` with the multi-column hash
-  * CHAINED (each column's hash seeds the next) — reproduced here on
-  * the unsafe Murmur3 primitives.
-  *
-  * `canonicalName` is the compatibility token two join sides compare;
-  * it is stable across catalog instances by construction. */
 /** Shared write-side distribution for bucketed layouts — ONE home for
   * the "cluster by the bucket columns into EXACTLY n partitions"
   * requirement (HashPartitioning then makes the write-task id the
@@ -123,6 +108,21 @@ private[sources] trait BucketDistribution
       org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
 }
 
+/** The V2 `bucket` function backing storage-partitioned joins over
+  * [[graft.store.SnapshotStore.bucketedCommit]] tables.
+  *
+  * Spark resolves a scan's `bucket(n, cols)` transform through the
+  * table's FUNCTION catalog before it will key-group partitions; the
+  * bound function must compute exactly the row→bucket route the WRITER
+  * used, because Spark may evaluate it (partially-clustered
+  * distributions, missing-partition fill-in). The writer routes via
+  * `df.repartition(n, cols)` = Spark's own HashPartitioning, i.e.
+  * `pmod(murmur3(cols, seed = 42), n)` with the multi-column hash
+  * CHAINED (each column's hash seeds the next) — reproduced here on
+  * the unsafe Murmur3 primitives.
+  *
+  * `canonicalName` is the compatibility token two join sides compare;
+  * it is stable across catalog instances by construction. */
 object BucketFunction extends UnboundFunction {
 
   override def name(): String = "bucket"

@@ -1587,10 +1587,6 @@ private[sources] object SnapshotScan {
     new DvLookup(keys, m.keyCols.size, storageTypes)
   }
 
-  /** Initialize a VectorizedParquetRecordReader over one row-group byte
-    * range with the given requested Spark schema — the split-based path
-    * that keeps the session's Hadoop configuration (the (path, columns)
-    * overload builds a bare Configuration internally). */
   /** Per-file PHYSICAL spelling of a read schema (column rename
     * mapping): renamed columns bind to the alias THIS file carries;
     * field positions — and thus the emitted row layout — are
@@ -1599,6 +1595,10 @@ private[sources] object SnapshotScan {
     if (renameMap.isEmpty) s
     else StructType(s.fields.map(f => f.copy(name = renameMap.getOrElse(f.name, f.name))))
 
+  /** Initialize a VectorizedParquetRecordReader over one row-group byte
+    * range with the given requested Spark schema — the split-based path
+    * that keeps the session's Hadoop configuration (the (path, columns)
+    * overload builds a bare Configuration internally). */
   def initVectorizedReader(
       reader: org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader,
       file: String, start: Long, length: Long,
@@ -1993,15 +1993,6 @@ private[sources] final class SnapshotScan(
     } finally r.close()
   }
 
-  /** The READY-TO-PROBE lookup, resolved once at planning (O(deleted
-    * keys), the same bound as readVersion's broadcast build side) and
-    * shipped as a TORRENT broadcast (deserialized once per executor,
-    * shared by its tasks) — neither the key set nor any derived
-    * structure is ever rebuilt per task: a 25 %-deleted 15M-row
-    * snapshot costs each task a hash probe per row, not a
-    * multi-million-entry set construction (measured: per-task rebuild
-    * made the row path 60x slower than the underlying parquet
-    * reader). */
   /** DV application is per FILE SCOPE (see `SnapshotStore.dvClasses`):
     * files group into classes by which DVs cover them — one class (the
     * legacy whole-table shape) unless appends interleaved with deletes
@@ -2016,6 +2007,15 @@ private[sources] final class SnapshotScan(
       if (idx.isEmpty) null
       else SnapshotScan.loadDvLookup(spark, m.copy(deletes = idx.map(m.deletes)))
     }.toArray
+  /** The READY-TO-PROBE lookup, resolved once at planning (O(deleted
+    * keys), the same bound as readVersion's broadcast build side) and
+    * shipped as a TORRENT broadcast (deserialized once per executor,
+    * shared by its tasks) — neither the key set nor any derived
+    * structure is ever rebuilt per task: a 25 %-deleted 15M-row
+    * snapshot costs each task a hash probe per row, not a
+    * multi-million-entry set construction (measured: per-task rebuild
+    * made the row path 60x slower than the underlying parquet
+    * reader). */
   private lazy val dvKeysBroadcast: org.apache.spark.broadcast.Broadcast[Array[DvLookup]] =
     SnapshotScan.broadcastDvClasses(spark, m, dvClassLayout.map(_._1.map(m.deletes)))
 
@@ -2312,10 +2312,10 @@ private[sources] final class SnapshotScan(
     ScanTaskMetrics.supported
 }
 
-/** One row group of one part file (midpoint-convention byte range).
-  * `selfContained` = the file carries every wanted column, so the
-  * vectorized decoder can serve it even on the row (DV) path. */
-/** One row-group read unit. `bucketId` (from the part file's name —
+/** One row-group read unit: one row group of one part file
+  * (midpoint-convention byte range). `selfContained` = the file carries
+  * every wanted column, so the vectorized decoder can serve it even on
+  * the row (DV) path. `bucketId` (from the part file's name —
   * write task i of a bucketed commit emits `part-<i>-*`) keys
   * storage-partitioned joins; -1 on unbucketed tables. The
   * [[org.apache.spark.sql.connector.read.HasPartitionKey]] value is
@@ -2415,13 +2415,6 @@ private[sources] final class SnapshotChainedReader[T](
   override def close(): Unit = if (cur != null) cur.close()
 }
 
-/** Deletion-vector membership structure, built ONCE on the driver and
-  * broadcast whole. Single-key tables (the common case) probe a flat
-  * Set[Any]; composite keys probe a set of UnsafeRow BYTE IMAGES —
-  * hashing is murmur3 over the packed row bytes instead of per-field
-  * boxed tuple hashing (~2 µs/row → sub-µs; the r10 verdict's ask #5).
-  * Probes are per-reader ([[DvProbe]]) because UnsafeProjection output
-  * rows are reused — the broadcast-shared set itself is immutable. */
 /** Primitive open-addressing hash set over longs: the no-boxing probe
   * for the dominant single-integral-key deletion vectors. One probe is
   * a hash + a short linear scan over a flat array — nanoseconds per
@@ -2627,6 +2620,13 @@ private[sources] object TaskSideDvResolver {
   }
 }
 
+/** Deletion-vector membership structure, built ONCE on the driver and
+  * broadcast whole. Single-key tables (the common case) probe a flat
+  * Set[Any]; composite keys probe a set of UnsafeRow BYTE IMAGES —
+  * hashing is murmur3 over the packed row bytes instead of per-field
+  * boxed tuple hashing (~2 µs/row → sub-µs; the r10 verdict's ask #5).
+  * Probes are per-reader ([[DvProbe]]) because UnsafeProjection output
+  * rows are reused — the broadcast-shared set itself is immutable. */
 private[sources] final class DvLookup(
     keys: Set[Seq[Any]], arity: Int, keyStorageTypes: Seq[DataType]) extends Serializable {
   private val single: Set[Any] =

@@ -21,7 +21,6 @@ import org.apache.spark.sql.types._
   *   CALL snap.system.compact_small_files(table => 'sales.orders')
   *   CALL snap.system.zorder(table => 'sales.orders', cols => 'o_custkey,o_orderdate')
   *   CALL snap.system.vacuum(table => 'sales.orders', keep => 3)
-  *   CALL snap.system.sync(source => 'sales.orders', target => 'mirror.orders')
   *   SHOW PROCEDURES IN snap.system
   *   DESCRIBE PROCEDURE snap.system.compact
   * }}}
@@ -29,11 +28,10 @@ import org.apache.spark.sql.types._
   * Each procedure is a thin SQL binding over the ONE existing
   * implementation home ([[Bucketing.compactCommit]],
   * [[Bucketing.compactSmallFilesCommit]], [[Zorder.optimizeCommit]],
-  * [[SnapshotStore.vacuum]], [[SnapshotReplication.syncFiles]]) — no
-  * second copy of any commit protocol. Results come back as ordinary
-  * result sets (a [[LocalScan]] of the operation's receipt: versions
-  * committed, files rewritten/linked/dropped), so a scheduler can
-  * assert on the outcome with plain SQL.
+  * [[SnapshotStore.vacuum]]) — no second copy of any commit protocol.
+  * Results come back as ordinary result sets (a [[LocalScan]] of the
+  * operation's receipt: versions committed, files rewritten/linked/
+  * dropped), so a scheduler can assert on the outcome with plain SQL.
   *
   * Table arguments are catalog-relative names (`ns.table`, resolved
   * under the catalog's warehouse) — the procedure runs against the
@@ -46,13 +44,6 @@ import org.apache.spark.sql.types._
 object SnapshotProcedures {
 
   val Namespace: Array[String] = Array("system")
-
-  def names: Seq[String] =
-    Seq("compact", "compact_small_files", "zorder", "zorder_partition",
-      "bloom_index", "vacuum", "sync",
-      "restore", "create_tag", "drop_tag",
-      "create_branch", "fast_forward", "drop_branch", "maintenance", "analyze",
-      "mv_create", "mv_refresh")
 
   /** Resolve `ns.table` (possibly multi-level `ns1.ns2.t`) under the
     * catalog warehouse — identical layout to
@@ -102,9 +93,11 @@ object SnapshotProcedures {
 
   private def row(vals: Any*): InternalRow = new GenericInternalRow(vals.toArray)
 
-  def load(warehouse: String, name: String): Option[UnboundProcedure] =
-    name.toLowerCase match {
-      case "compact" => Some(new Proc(
+  /** Every procedure, in `SHOW PROCEDURES` order: [[names]] and [[load]]
+    * both read this one table, so the listing cannot drift from what
+    * `CALL` resolves. */
+  private def all(warehouse: String): Seq[Proc] = Seq(
+      new Proc(
         "compact",
         "Full rewrite of the current snapshot into ~target_mb files as the next " +
           "version; materializes live deletion vectors away and re-buckets " +
@@ -123,9 +116,9 @@ object SnapshotProcedures {
         val (before, after, bytes, v) =
           Bucketing.compactCommit(spark, t, targetMb.toLong * 1024 * 1024)
         Array(row(before, after, bytes, v))
-      }))
+      }),
 
-      case "compact_small_files" => Some(new Proc(
+      new Proc(
         "compact_small_files",
         "Incremental OPTIMIZE: merge only files under small_mb into ~target_mb " +
           "files, re-linking every file already at size — O(small files), " +
@@ -146,9 +139,9 @@ object SnapshotProcedures {
         val (rewritten, linked, after, v) = Bucketing.compactSmallFilesCommit(
           spark, t, smallMb.toLong * 1024 * 1024, targetMb.toLong * 1024 * 1024)
         Array(row(rewritten, linked, after, v))
-      }))
+      }),
 
-      case "zorder" => Some(new Proc(
+      new Proc(
         "zorder",
         "Rewrite the current snapshot Morton-clustered on cols (comma-separated) " +
           "as the next version — multi-column skipping locality for the " +
@@ -175,9 +168,9 @@ object SnapshotProcedures {
           }
         val v = Zorder.optimizeCommit(spark, t, cols, bits, math.max(1, nFiles))
         Array(row(math.max(1, nFiles), v))
-      }))
+      }),
 
-      case "zorder_partition" => Some(new Proc(
+      new Proc(
         "zorder_partition",
         "Subset OPTIMIZE: Morton-cluster ONLY the named partition's files as a " +
           "file-granular keep ++ rewritten commit — every other partition's " +
@@ -198,9 +191,9 @@ object SnapshotProcedures {
         require(nFiles > 0, s"num_files must be positive, got $nFiles")
         val v = Zorder.optimizePartitionCommit(spark, t, cols, bits, nFiles, value)
         Array(row(v))
-      }))
+      }),
 
-      case "bloom_index" => Some(new Proc(
+      new Proc(
         "bloom_index",
         "Build per-(file, column) Bloom filters over the current snapshot and " +
           "publish them as the next version — point `=` / `IN` lookups on the " +
@@ -221,9 +214,9 @@ object SnapshotProcedures {
           s"expected_items/num_bits must be positive, got $items/$bits")
         val v = graft.ops.BloomIndex.bloomCommit(spark, t, cols, items.toLong, bits.toLong)
         Array(row(v))
-      }))
+      }),
 
-      case "vacuum" => Some(new Proc(
+      new Proc(
         "vacuum",
         "Drop all but the newest `keep` versions and delete data/DV/stats files " +
           "no retained version references (file-refcounted; keep >= 1). " +
@@ -244,9 +237,9 @@ object SnapshotProcedures {
           if (cutoff > 0L) SnapshotStore.vacuumOlderThan(spark, t, cutoff, in.getInt(1))
           else SnapshotStore.vacuum(spark, t, in.getInt(1))
         Array(row(new GenericArrayData(dropped.toArray), dropped.size))
-      }))
+      }),
 
-      case "restore" => Some(new Proc(
+      new Proc(
         "restore",
         "Roll the table back to a retained version: publish a NEW head that " +
           "references that version's exact files/DVs/layout — one marker write, " +
@@ -260,9 +253,9 @@ object SnapshotProcedures {
         val t = root(warehouse, in.getUTF8String(0).toString)
         val v = in.getLong(1)
         Array(row(v, SnapshotStore.restoreCommit(spark, t, v)))
-      }))
+      }),
 
-      case "create_tag" => Some(new Proc(
+      new Proc(
         "create_tag",
         "Pin a committed version under an immutable NAME: readers time-travel " +
           "to it with VERSION AS OF '<name>' (or the reader option " +
@@ -277,9 +270,9 @@ object SnapshotProcedures {
         val t = root(warehouse, in.getUTF8String(0).toString)
         val name = in.getUTF8String(1).toString
         Array(row(SnapshotStore.createTag(spark, t, name, in.getLong(2))))
-      }))
+      }),
 
-      case "drop_tag" => Some(new Proc(
+      new Proc(
         "drop_tag",
         "Release a tag: its version becomes vacuum-eligible again",
         Array(
@@ -289,9 +282,9 @@ object SnapshotProcedures {
           StructField("existed", BooleanType, nullable = false))))({ in =>
         val t = root(warehouse, in.getUTF8String(0).toString)
         Array(row(SnapshotStore.dropTag(spark, t, in.getUTF8String(1).toString)))
-      }))
+      }),
 
-      case "create_branch" => Some(new Proc(
+      new Proc(
         "create_branch",
         "Fork a WRITABLE branch at the table's head (O(1) metadata): every " +
           "write surface works against the returned branch path (the " +
@@ -305,9 +298,9 @@ object SnapshotProcedures {
         val t = root(warehouse, in.getUTF8String(0).toString)
         val br = SnapshotStore.createBranch(spark, t, in.getUTF8String(1).toString)
         Array(row(org.apache.spark.unsafe.types.UTF8String.fromString(br)))
-      }))
+      }),
 
-      case "fast_forward" => Some(new Proc(
+      new Proc(
         "fast_forward",
         "PUBLISH a branch: fast-forward main to the branch head in one atomic " +
           "marker rename, zero data movement; refused if main moved past the " +
@@ -319,9 +312,9 @@ object SnapshotProcedures {
           StructField("published_version", LongType, nullable = false))))({ in =>
         val t = root(warehouse, in.getUTF8String(0).toString)
         Array(row(SnapshotStore.fastForward(spark, t, in.getUTF8String(1).toString)))
-      }))
+      }),
 
-      case "drop_branch" => Some(new Proc(
+      new Proc(
         "drop_branch",
         "Delete a branch's staged files and version log; refused while a " +
           "published main version still references them (compact main first)",
@@ -332,33 +325,9 @@ object SnapshotProcedures {
           StructField("existed", BooleanType, nullable = false))))({ in =>
         val t = root(warehouse, in.getUTF8String(0).toString)
         Array(row(SnapshotStore.dropBranch(spark, t, in.getUTF8String(1).toString)))
-      }))
+      }),
 
-      case "maintenance" => Some(new Proc(
-        "maintenance",
-        "DV-density-aware compaction scheduling: measure deletion-vector rows " +
-          "vs live table rows (metadata only — DV footers + the stats sidecar) " +
-          "and run the compacting rewrite when density exceeds max_dv_ratio, so " +
-          "a merge-on-read-heavy table self-heals on a nightly CALL",
-        Array(
-          p("table", StringType, comment = "catalog-relative name, e.g. 'ns.t'"),
-          p("max_dv_ratio", DoubleType, Some("0.1"),
-            "compact when dv_rows/table_rows exceeds this"),
-          p("target_bytes", LongType, Some((128L << 20).toString),
-            "output file size for the rewrite")),
-        StructType(Seq(
-          StructField("dv_rows", LongType, nullable = false),
-          StructField("table_rows", LongType, nullable = false),
-          StructField("dv_density", DoubleType, nullable = false),
-          StructField("action", StringType, nullable = false),
-          StructField("version", LongType, nullable = false))))({ in =>
-        val t = root(warehouse, in.getUTF8String(0).toString)
-        val r = graft.ops.Maintenance.run(spark, t, in.getDouble(1), in.getLong(2))
-        Array(row(r.dvRows, r.tableRows, r.density,
-          org.apache.spark.unsafe.types.UTF8String.fromString(r.action), r.version))
-      }))
-
-      case "analyze" => Some(new Proc(
+      new Proc(
         "analyze",
         "NDV column statistics: one distributed pass aggregates a mergeable " +
           "HLL sketch per (file, column) and publishes it as the next version " +
@@ -372,9 +341,9 @@ object SnapshotProcedures {
         val t = root(warehouse, in.getUTF8String(0).toString)
         val cols = in.getUTF8String(1).toString.split(",").map(_.trim).filter(_.nonEmpty).toSeq
         Array(row(graft.ops.NdvStats.analyzeCommit(spark, t, cols)))
-      }))
+      }),
 
-      case "mv_create" => Some(new Proc(
+      new Proc(
         "mv_create",
         "Create an incrementally-maintainable aggregate MV over a snapshot " +
           "table (group columns + n/sum/cnt/min/max state per measure): one " +
@@ -394,9 +363,9 @@ object SnapshotProcedures {
         val ms = in.getUTF8String(3).toString.split(',').map(_.trim).filter(_.nonEmpty).toSeq
         val r = graft.sql.SnapshotMv.create(spark, b, mvT, g, ms)
         Array(row(r.mvVersion, r.toVersion))
-      }))
+      }),
 
-      case "mv_create_join" => Some(new Proc(
+      new Proc(
         "mv_create_join",
         "Create an incrementally-maintainable JOIN MV: the summary of " +
           "fact INNER JOIN dims (star shape) grouped by fact columns and/or " +
@@ -433,9 +402,9 @@ object SnapshotProcedures {
         val ms = in.getUTF8String(4).toString.split(',').map(_.trim).filter(_.nonEmpty).toSeq
         val r = graft.sql.SnapshotMv.createJoin(spark, b, mvT, dims, g, ms)
         Array(row(r.mvVersion, r.toVersion))
-      }))
+      }),
 
-      case "mv_refresh" => Some(new Proc(
+      new Proc(
         "mv_refresh",
         "Advance an MV to its base table's current version by folding the " +
           "batch change feed into the stored state — reads O(changed rows), " +
@@ -453,9 +422,9 @@ object SnapshotProcedures {
         val r = graft.sql.SnapshotMv.refresh(spark, mvT)
         Array(row(org.apache.spark.unsafe.types.UTF8String.fromString(r.mode),
           r.mvVersion, r.fromVersion, r.toVersion, r.recomputedGroups))
-      }))
+      }),
 
-      case "evolve_partition_spec" => Some(new Proc(
+      new Proc(
         "evolve_partition_spec",
         "Partition SPEC EVOLUTION: switch the table's partition layout for " +
           "future writes in one metadata-only commit (zero data movement) — " +
@@ -473,24 +442,8 @@ object SnapshotProcedures {
         Array(row(SnapshotStore.evolvePartitionSpec(spark, t, spec)))
       }))
 
-      case "sync" => Some(new Proc(
-        "sync",
-        "Physical file-level mirror: copy each unsynced version's new files to " +
-          "target and publish path-rewritten manifests under the SAME version " +
-          "numbers — an idempotent, resumable version-exact clone",
-        Array(
-          p("source", StringType, comment = "catalog-relative source table"),
-          p("target", StringType, comment = "catalog-relative target table")),
-        StructType(Seq(
-          StructField("synced_versions", ArrayType(LongType, containsNull = false),
-            nullable = false),
-          StructField("n_synced", IntegerType, nullable = false))))({ in =>
-        val src = root(warehouse, in.getUTF8String(0).toString)
-        val dst = root(warehouse, in.getUTF8String(1).toString)
-        val synced = SnapshotReplication.syncFiles(spark, src, dst)
-        Array(row(new GenericArrayData(synced.toArray), synced.size))
-      }))
+  def names: Seq[String] = all("").map(_.name())
 
-      case _ => None
-    }
+  def load(warehouse: String, name: String): Option[UnboundProcedure] =
+    all(warehouse).find(_.name() == name.toLowerCase)
 }

@@ -363,11 +363,6 @@ private[sources] final class SnapshotMicroBatchStream(
     }
   }
 
-  /** Row-group partitions over the given data files (no skipping — a
-    * change feed emits everything), tagged with the batch kind.
-    * `dvVersion` names the version whose deletion vectors the reader
-    * must apply (-1 = none): the partition's own version for images,
-    * the PREDECESSOR for cow remove-batches. */
   /** EXISTS_DEFAULT fills for the feed (`ADD COLUMN ... DEFAULT`): the
     * feed presents every batch under the stream's table schema, so a
     * file predating a defaulted column fills the SAME value current
@@ -381,6 +376,11 @@ private[sources] final class SnapshotMicroBatchStream(
           f.metadata.getString("EXISTS_DEFAULT"), f.dataType)
     }
 
+  /** Row-group partitions over the given data files (no skipping — a
+    * change feed emits everything), tagged with the batch kind.
+    * `dvVersion` names the version whose deletion vectors the reader
+    * must apply (-1 = none): the partition's own version for images,
+    * the PREDECESSOR for cow remove-batches. */
   private def rowGroupPartitions(
       m: SnapshotStore.Manifest, v: Long, files: Seq[String],
       changeType: String, dvClassOf: String => Int = _ => 0,

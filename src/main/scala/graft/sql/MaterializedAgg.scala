@@ -136,9 +136,6 @@ object MaterializedAgg {
   /** Drop all registrations (tests). */
   def clear(): Unit = registry.clear()
 
-  /** Persist the registry (same `k=v` line format as the snapshot-store
-    * manifests) so a fresh session restores its MVs with [[load]] —
-    * registration survives the JVM, like a catalog would hold it. */
   /** Compact one-token codec for a dim list (URL-encoded names, so the
     * `;`/`|`/`,` separators can never appear inside them) — shared by
     * [[save]]/[[load]] and the `_mv` sidecar's `dims=` line. */
@@ -162,6 +159,9 @@ object MaterializedAgg {
     }
   }
 
+  /** Persist the registry (same `k=v` line format as the snapshot-store
+    * manifests) so a fresh session restores its MVs with [[load]] —
+    * registration survives the JVM, like a catalog would hold it. */
   def save(spark: SparkSession, path: String): Unit = {
     val f = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

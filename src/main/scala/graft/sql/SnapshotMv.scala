@@ -135,10 +135,6 @@ object SnapshotMv {
     fc.rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
-  /** Build the summary at the base's CURRENT version (one aggregate
-    * over the base — the only full scan the MV ever needs), commit it
-    * as the MV table's next version, and record the reflected base
-    * version in the `_mv` sidecar. */
   /** Fail-fast name validation shared by [[create]] and [[createJoin]]:
     * the state schema reserves `n` and `sum_/cnt_/min_/max_<measure>` —
     * a group or measure column occupying one of those names would make
@@ -186,6 +182,10 @@ object SnapshotMv {
       case _ => None
     }
 
+  /** Build the summary at the base's CURRENT version (one aggregate
+    * over the base — the only full scan the MV ever needs), commit it
+    * as the MV table's next version, and record the reflected base
+    * version in the `_mv` sidecar. */
   def create(
       spark: SparkSession,
       baseTable: String,

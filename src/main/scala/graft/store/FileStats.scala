@@ -180,7 +180,7 @@ object FileStats {
     * file is unreferenced until some marker's `statsfile=` line names
     * it, so a CAS-defeated commit's sidecar is an invisible orphan
     * that vacuum collects — same lifecycle as staged data dirs. */
-  def write(spark: SparkSession, table: String, exact: Boolean, blocks: Seq[String]): String = {
+  private def write(spark: SparkSession, table: String, exact: Boolean, blocks: Seq[String]): String = {
     val path = s"${statsDir(table)}/s_${token()}.txt"
     val f = fsOf(spark, table)
     val out = f.create(new Path(path), true)

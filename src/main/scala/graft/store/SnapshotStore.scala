@@ -25,11 +25,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, In
   * leisure — crash mid-write and the directory is an invisible orphan
   * that [[vacuum]] collects; a concurrent reader resolves the newest
   * MARKER, so it sees the previous complete snapshot until the instant
-  * the new one is fully durable, and never a half-rewritten mix. This
-  * generalizes the `state_v=<batchId>` scheme of
-  * [[graft.streaming.Sinks]] (whose versions become visible by data-dir
-  * listing — safe there only because the streaming checkpoint
-  * serializes its single writer).
+  * the new one is fully durable, and never a half-rewritten mix.
   *
   * '''Marker = manifest.''' A marker's content names the version's data
   * directory plus any deletion-vector files and their key columns
@@ -183,8 +179,7 @@ object SnapshotStore {
   // NEW row in an uncovered file — not a resurrected one. A DV
   // WITHOUT a scope (legacy commits) applies table-wide, and appends
   // on such tables stay refused. The scope shares the DV dir's
-  // lifecycle for free: vacuum collects the dir whole, syncFiles
-  // copies its files.
+  // lifecycle for free: vacuum collects the dir whole.
 
   private def dvScopeFile(dv: String) = s"$dv/_scope.txt"
 
@@ -496,11 +491,6 @@ object SnapshotStore {
       a.unionByName(b, allowMissingColumns = m.mixedSchema || m.renames.nonEmpty))
   }
 
-  /** Write `df` as the next snapshot and publish it atomically. Returns
-    * the committed version number. The data write (the long part) is
-    * invisible to readers; visibility flips at the marker rename.
-    * Single-writer convenience: on a marker race it retries the NEXT
-    * version number without rewriting the already-staged data. */
   /** The logical schema a writer pins into its manifest (`schemajson=`,
     * nullability relaxed like any parquet read): planning resolves the
     * table schema from the manifest with ZERO footer reads — at 10⁵
@@ -511,6 +501,11 @@ object SnapshotStore {
   def pinnedJson(schema: StructType): String =
     StructType(schema.fields.map(_.copy(nullable = true))).json
 
+  /** Write `df` as the next snapshot and publish it atomically. Returns
+    * the committed version number. The data write (the long part) is
+    * invisible to readers; visibility flips at the marker rename.
+    * Single-writer convenience: on a marker race it retries the NEXT
+    * version number without rewriting the already-staged data. */
   def commit(df: DataFrame, table: String, srcV: Long = -1L,
       provenance: String = ""): Long = {
     val spark = df.sparkSession
@@ -707,8 +702,7 @@ object SnapshotStore {
     * KEY-based and table-wide, so an append re-inserting a deleted key
     * would be silently suppressed — compact first (any full rewrite
     * materializes DVs away), then append. */
-  def appendCommit(df: DataFrame, table: String, maxAttempts: Int = 8,
-      srcV: Long = -1L): Long = {
+  def appendCommit(df: DataFrame, table: String, maxAttempts: Int = 8): Long = {
     val spark = df.sparkSession
     TableChecks.enforce(df, table) // enforced CHECKs: one pass over the appended rows only
     // schema check BEFORE staging: identical schemas append plainly;
@@ -782,7 +776,7 @@ object SnapshotStore {
         routed.write.mode("overwrite").parquet(stageDir)
         dataFiles(spark, Manifest(stageDir, Nil, Nil))
       }
-    appendFilesCommit(spark, table, staged, writerStatsExact(spark), maxAttempts, srcV,
+    appendFilesCommit(spark, table, staged, writerStatsExact(spark), maxAttempts,
       mixedSchema = evolving, routedBucket = spec,
       stagedSchema = Some(unionSchema))
   }
@@ -790,8 +784,8 @@ object SnapshotStore {
   /** Low-level shared append publish: CAS-link the current head's files
     * plus `stagedFiles` as the next version. ONE home for the append
     * protocol (DV refusal, base resolution, statsExact chaining, CAS
-    * retry) — [[appendCommit]], the DSv2 `INSERT INTO` path, and the
-    * replication mirror all route here. */
+    * retry) — [[appendCommit]], the DSv2 `INSERT INTO` path and the
+    * streaming sink all route here. */
   def appendFilesCommit(
       spark: SparkSession,
       table: String,
@@ -804,8 +798,8 @@ object SnapshotStore {
       /** The POST-APPEND logical schema when the caller knows it (the
         * df append path passes the base∪batch union) — pinned into the
         * manifest so planning resolves with zero footer reads. Absent
-        * (file-level callers: DSv2 INSERT, the streaming sink, the
-        * mirror), the head's pinned schema carries forward verbatim. */
+        * (file-level callers: DSv2 INSERT, the streaming sink), the
+        * head's pinned schema carries forward verbatim. */
       stagedSchema: Option[StructType] = None): Long = {
     var attempt = 0
     while (attempt < maxAttempts) {
@@ -1064,8 +1058,7 @@ object SnapshotStore {
       spark: SparkSession,
       table: String,
       fn: Option[DataFrame] => DataFrame,
-      maxAttempts: Int = 8,
-      srcV: Long = -1L): Long = {
+      maxAttempts: Int = 8): Long = {
     var attempt = 0
     while (attempt < maxAttempts) {
       val base = currentVersion(spark, table)
@@ -1077,7 +1070,7 @@ object SnapshotStore {
         dataFiles(spark, Manifest(dataDir, Nil, Nil)), None, writerStatsExact(spark))
       if (tryPublishManifest(spark, table, next,
           Manifest(dataDir, Nil, Nil, op = "rewrite", statsExact = writerStatsExact(spark),
-            srcV = srcV, statsFile = stats))) return next
+            statsFile = stats))) return next
       fs(spark, table).delete(new Path(dataDir), true)
       fs(spark, table).delete(new Path(stats), false)
       attempt += 1
@@ -1140,8 +1133,7 @@ object SnapshotStore {
       table: String,
       keyCols: Seq[String],
       keys: DataFrame,
-      maxAttempts: Int = 8,
-      srcV: Long = -1L): Long = {
+      maxAttempts: Int = 8): Long = {
     require(keyCols.nonEmpty, "deleteKeysCommit needs at least one key column")
     val dv = s"${deletesDir(table)}/d_${token()}"
     keys.select(keyCols.map(org.apache.spark.sql.functions.col): _*)
@@ -1160,7 +1152,7 @@ object SnapshotStore {
       writeDvScope(spark, dv, dataFiles(spark, m))
       if (tryPublishManifest(spark, table, cur + 1,
           Manifest(m.data, m.deletes :+ dv, keyCols, files = m.files, op = "delete",
-            statsExact = m.statsExact, srcV = srcV, mixedSchema = m.mixedSchema,
+            statsExact = m.statsExact, mixedSchema = m.mixedSchema,
             statsFile = m.statsFile,
             bucketCols = m.bucketCols, bucketN = m.bucketN,
             bloomFile = m.bloomFile,
@@ -1345,8 +1337,8 @@ object SnapshotStore {
             "active on the branch; fix the branch data or drop the constraint")
       }
     // srcV = -1, NEVER the branch-local head: main-head srcV doubles as
-    // the streaming sink's exactly-once epoch guard and the mirror's
-    // incremental cursor — a published branch version number would
+    // the streaming sink's exactly-once epoch guard and the MV refresh
+    // cursor — a published branch version number would
     // masquerade as an applied epoch/source version and replay or skip
     // commits. Branch provenance rides a dedicated marker key instead.
     //
@@ -1530,8 +1522,8 @@ object SnapshotStore {
   }
 
   /** The srcV cursor a CONSUMER commit last recorded on `table` — the
-    * streaming sink's exactly-once epoch guard and the mirror's
-    * incremental source cursor read this, NOT the bare head srcV:
+    * streaming sink's exactly-once epoch guard reads this, NOT the bare
+    * head srcV:
     * maintenance commits (analyze/compact, srcV = -1) and metadata
     * publishes (fastForward, restore) can land between a cursor commit
     * and its at-least-once replay, and reading only the head would
@@ -1540,8 +1532,8 @@ object SnapshotStore {
     * application). Walks newest-first and stops at the first commit
     * that carries a cursor (`srcV >= 0` and not an op that reuses the
     * field for table-version provenance); a table whose recent commits
-    * are cursor commits — every steady-state streaming sink or mirror
-    * target — resolves in O(1) manifest reads, and the O(history)
+    * are cursor commits — every steady-state streaming sink target —
+    * resolves in O(1) manifest reads, and the O(history)
     * worst case only happens once, before the first cursor commit
     * exists (vacuum bounds retained history regardless). */
   def lastAppliedSrcV(spark: SparkSession, table: String): Long = {

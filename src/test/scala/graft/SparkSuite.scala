@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,21 +17,12 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSuite {
   lazy val shared: SparkSession = Sessions.local("graft-test")
 
+  private object Plans extends AdaptiveSparkPlanHelper
+
   /** AQE-aware exchange count of an EXECUTED plan — runs the frame
     * first so adaptive stages are final. */
   def countExchanges(df: DataFrame): Int = {
     df.collect()
-    var n = 0
-    def walk(p: SparkPlan): Unit = {
-      p match {
-        case _: ShuffleExchangeExec => n += 1
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _ => ()
-      }
-      p.children.foreach(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-    n
+    Plans.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
   }
 }

@@ -26,14 +26,14 @@ class BucketingSpec extends SparkSuite {
     assert(a.length === 10000 && (a sameElements b))
   }
 
-  test("compact composes with the streaming sink: a batch partition's file spray collapses, rows intact") {
-    // the real maintenance loop: the foreachBatch sink lands each
-    // micro-batch in its own batch_id=<n> partition as many small files;
-    // a nightly compact rewrites ONE partition without touching others
+  test("compact collapses one batch partition's file spray, rows intact") {
+    // a micro-batch landed in its own batch_id=<n> partition as many
+    // small files; compact rewrites ONE partition without touching others
     val dir = java.nio.file.Files.createTempDirectory("graft_sinkcompact").toString
     val batch = (0L until 5000L).map(i => (i, i % 7)).toDF("event_id", "k")
       .repartition(32)
-    graft.streaming.Sinks.writeBatchIdempotent(batch, batchId = 0L, dir)
+    batch.withColumn("batch_id", lit(0L))
+      .write.mode("overwrite").partitionBy("batch_id").parquet(dir)
     val part = s"$dir/batch_id=0"
     val before = new java.io.File(part).listFiles().count(_.getName.endsWith(".parquet"))
     assert(before > 1, s"expected a file spray, got $before")

@@ -169,6 +169,28 @@ class NdvStatsSpec extends SparkSuite {
       SnapshotStore.dataFiles(spark, m2)).contains("o_custkey"))
   }
 
+  test("a compacting rewrite over DVs drops stale coverage; re-analyze covers the compacted files") {
+    val table = fresh("ndv-compact")
+    val orders = graft.sources.Tables.orders(spark, sf())
+    SnapshotStore.commit(orders.repartition(4), table)
+    NdvStats.analyzeCommit(spark, table, Seq("o_custkey"))
+    SnapshotStore.deleteCommit(spark, table, Seq("o_orderkey"),
+      pmod(col("o_orderkey"), lit(4)) === 0)
+    val (_, _, _, vc) = Bucketing.compactCommit(spark, table, 1L << 30)
+    val mc = SnapshotStore.manifest(spark, table, vc)
+    assert(mc.deletes.isEmpty && mc.op === "compact")
+    assert(mc.ndvFile.isEmpty || NdvStats.estimates(spark, mc.ndvFile,
+      SnapshotStore.dataFiles(spark, mc)).isEmpty,
+      "sketches of the replaced files must not estimate the compacted ones")
+    val v2 = NdvStats.analyzeCommit(spark, table, Seq("o_custkey"))
+    val m2 = SnapshotStore.manifest(spark, table, v2)
+    val est = NdvStats.estimates(spark, m2.ndvFile, SnapshotStore.dataFiles(spark, m2))
+    val exact = SnapshotStore.read(spark, table).select("o_custkey").distinct().count()
+    assert(est.contains("o_custkey") &&
+      math.abs(est("o_custkey")._1 - exact).toDouble / exact < 0.10,
+      s"re-analyzed o_custkey NDV ${est.get("o_custkey")} vs exact $exact")
+  }
+
   test("a sidecar past the driver byte cap resolves DISTRIBUTEDLY with estimate parity") {
     val table = fresh("ndv-dist")
     val orders = graft.sources.Tables.orders(spark, sf())

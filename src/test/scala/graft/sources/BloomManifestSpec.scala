@@ -118,20 +118,6 @@ class BloomManifestSpec extends SparkSuite {
       .option("version", "3").load().filter(col("k") === 11L).count() === 1L)
   }
 
-  test("syncFiles mirrors the bloom index; the clone prunes identically") {
-    val src = fresh("bloomman4")
-    commitShuffled(src, 8000L, 4)
-    BloomIndex.bloomCommit(spark, src, Seq("k"))
-    val dst = fresh("bloomman4dst")
-    SnapshotReplication.syncFiles(spark, src, dst)
-    def look(t: String) = spark.read.format("graft-snapshot").option("path", t).load()
-      .filter(col("k") === 99999999L)
-    assert(filesRead(look(dst))._1 === 0,
-      "the mirrored index should prune the absent key to zero files")
-    assert(look(dst).count() === 0L)
-    assert(look(src).count() === 0L)
-  }
-
   test("column-sharded index: planning deserializes O(probed columns), once (LRU-cached)") {
     val t = fresh("bloomshard")
     commitShuffled(t, 20000L, 8)

@@ -159,21 +159,4 @@ class FileStatsSpec extends SparkSuite {
     assert(footerOpens { n = load(t).count() } === 0L)
     assert(n === 5000L)
   }
-
-  test("syncFiles mirrors the sidecar path-rewritten; the clone plans footer-free") {
-    val src = freshTable("fstats-src")
-    val dst = freshTable("fstats-dst")
-    SnapshotStore.commit(spark.range(0, 50).toDF("id").coalesce(1), src)
-    SnapshotStore.appendCommit(spark.range(50, 60).toDF("id").coalesce(1), src)
-    SnapshotReplication.syncFiles(spark, src, dst)
-    val mDst = SnapshotStore.manifest(spark, dst, 1L)
-    assert(mDst.statsFile.startsWith(dst), s"mirror sidecar not under target: ${mDst.statsFile}")
-    val sc = FileStats.read(spark, mDst.statsFile)
-    val files = SnapshotStore.dataFiles(spark, mDst)
-    assert(files.forall(sc.entries.contains),
-      s"mirror sidecar misses files: ${files.filterNot(sc.entries.contains)}")
-    var n = 0L
-    val opens = footerOpens { n = load(dst).filter(col("id") >= 50).count() }
-    assert(opens === 0L && n === 10L)
-  }
 }

@@ -519,32 +519,6 @@ class SnapshotDsv2Spec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("replication: mirror converges to the source across images and deletes") {
-    val src = freshTable("dsv2-repl-src")
-    val tgt = freshTable("dsv2-repl-tgt")
-    val ckpt = java.nio.file.Files.createTempDirectory("dsv2-repl-ckpt").toString
-    val orders = graft.sources.Tables.orders(spark, sf())
-    SnapshotStore.commit(orders, src) // v0
-    val q = SnapshotReplication.mirror(spark, src, tgt, ckpt)
-    try {
-      def sameContent(): Unit = {
-        val a = SnapshotStore.read(spark, src).collect().toSet
-        val b = SnapshotStore.read(spark, tgt).collect().toSet
-        assert(a === b, s"mirror diverged: src=${a.size} tgt=${b.size}")
-      }
-      q.processAllAvailable(); sameContent()
-
-      SnapshotStore.deleteCommit(spark, src, Seq("o_orderkey"), col("o_orderkey") % 3 === 0)
-      q.processAllAvailable(); sameContent()
-      // the mirror applied the delete as an O(keys) delete commit, not a rewrite
-      assert(SnapshotStore.manifest(spark, tgt,
-        SnapshotStore.currentVersion(spark, tgt).get).deletes.nonEmpty)
-
-      SnapshotStore.commit(orders.filter(col("o_orderkey") < 50), src) // rewrite
-      q.processAllAvailable(); sameContent()
-    } finally q.stop()
-  }
-
   test("change feed via catalog .table() is refused with the path-based recipe") {
     val wh = java.nio.file.Files.createTempDirectory("dsv2-cdfcat").toString
     spark.conf.set("spark.sql.catalog.gsnapcdf", classOf[SnapshotCatalog].getName)

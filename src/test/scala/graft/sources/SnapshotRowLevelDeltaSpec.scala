@@ -185,37 +185,6 @@ class SnapshotRowLevelDeltaSpec extends SparkSuite {
     }
   }
 
-  test("replication mirror converges across a MoR commit (mixed delete+insert batch)") {
-    withMor("n_nationkey") { (cat, wh) =>
-      val src = s"$wh/dims/src"
-      val dst = s"$wh/dims/dst"
-      val ckpt = java.nio.file.Files.createTempDirectory("mor-mirror-ckpt").toString
-      val nation = graft.sources.Tables.nation(spark, sf())
-      SnapshotStore.commit(nation, src) // v0
-      val q = SnapshotReplication.mirror(spark, src, dst, ckpt)
-      try {
-        q.processAllAvailable() // image applied
-        nation.filter(col("n_nationkey") >= 20)
-          .select(col("n_nationkey")).createOrReplaceTempView("mor_mirror_src")
-        spark.sql(
-          s"""MERGE INTO $cat.dims.src t USING mor_mirror_src s ON t.n_nationkey = s.n_nationkey
-              WHEN MATCHED THEN UPDATE SET n_name = concat('M-', t.n_name)""")
-        q.processAllAvailable()
-        val a = SnapshotStore.read(spark, src).orderBy("n_nationkey").collect()
-        val b = SnapshotStore.read(spark, dst).orderBy("n_nationkey").collect()
-        assert(a.toSeq === b.toSeq, "mirror must converge across the MoR delta")
-        assert(b.count(_.getString(1).startsWith("M-")) === a.count(_.getString(1).startsWith("M-")))
-        // replay idempotence: the delta applied as delete (srcV = v-1,
-        // keeping the watermark monotone) then append (srcV = v) — a
-        // crash between them must never reset the applied watermark
-        val dstVs = SnapshotStore.versions(spark, dst)
-        val srcVs = dstVs.map(hv => SnapshotStore.manifest(spark, dst, hv).srcV)
-        assert(srcVs === srcVs.sorted, s"mirror srcV watermark must stay monotone: $srcVs")
-        assert(srcVs.last === 1L, "the append half closes out source version 1")
-      } finally q.stop()
-    }
-  }
-
   test("unscoped MoR keys never flip nullability on a bystander table holding null keys") {
     withMor("k") { (cat, wh) =>
       import spark.implicits._

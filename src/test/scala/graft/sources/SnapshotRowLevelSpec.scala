@@ -256,100 +256,6 @@ class SnapshotRowLevelSpec extends SparkSuite {
     }
   }
 
-  test("replication mirrors a row-granular CoW MERGE; mirror reads O(changed rows)") {
-    withCatalog { (cat, wh) =>
-      val src = s"$wh/facts/kv2"
-      val tgt = java.nio.file.Files.createTempDirectory("rl-cdf-tgt").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory("rl-cdf-ck").toString
-      SnapshotStore.commit(
-        spark.range(0, 1000).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v").coalesce(1), src)
-      val q = SnapshotReplication.mirror(spark, src, tgt, ckpt)
-      try {
-        q.processAllAvailable()
-        import spark.implicits._
-        Seq((10L, 99.0), (20L, -1.0)).toDF("k", "nv").createOrReplaceTempView("rl_cdf_src2")
-        spark.sql(
-          s"""MERGE INTO $cat.facts.kv2 t USING rl_cdf_src2 s ON t.k = s.k
-              WHEN MATCHED AND s.nv < 0 THEN DELETE
-              WHEN MATCHED THEN UPDATE SET v = s.nv""")
-        q.processAllAvailable()
-        val a = SnapshotStore.read(spark, src).collect().toSet
-        val b = SnapshotStore.read(spark, tgt).collect().toSet
-        assert(a === b, s"mirror diverged: src=${a.size} tgt=${b.size}")
-        assert(a.size === 999 && !a.exists(_.getLong(0) == 20L))
-      } finally q.stop()
-    }
-  }
-
-  test("replication mirrors a copy-on-write commit; content converges") {
-    withCatalog { (cat, wh) =>
-      val src = s"$wh/facts/orders"
-      val tgt = java.nio.file.Files.createTempDirectory("rl-repl-tgt").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory("rl-repl-ck").toString
-      val orders = graft.sources.Tables.orders(spark, sf())
-      SnapshotStore.commit(orders.repartitionByRange(4, col("o_orderkey")), src)
-      val q = SnapshotReplication.mirror(spark, src, tgt, ckpt)
-      try {
-        q.processAllAvailable()
-        spark.sql(s"DELETE FROM $cat.facts.orders WHERE o_orderkey % 5 = 0")
-        q.processAllAvailable()
-        val a = SnapshotStore.read(spark, src).collect().toSet
-        val b = SnapshotStore.read(spark, tgt).collect().toSet
-        assert(a === b, s"mirror diverged after cow delete: src=${a.size} tgt=${b.size}")
-        assert(a.nonEmpty && !a.exists(_.getLong(0) % 5 == 0))
-      } finally q.stop()
-    }
-  }
-
-  test("syncFiles: physical mirror copies only each commit's NEW files; version-exact clone") {
-    withCatalog { (cat, wh) =>
-      val src = s"$wh/facts/orders"
-      val tgt = java.nio.file.Files.createTempDirectory("rl-sync-tgt").toString + "/t"
-      val orders = graft.sources.Tables.orders(spark, sf())
-      SnapshotStore.commit(orders.repartitionByRange(4, col("o_orderkey")), src) // v0
-      assert(SnapshotReplication.syncFiles(spark, src, tgt) === Seq(0L))
-      assert(SnapshotStore.read(spark, tgt).collect().toSet ===
-        SnapshotStore.read(spark, src).collect().toSet)
-
-      // record every mirrored file's mtime; later syncs must not touch them
-      def tgtFiles(): Map[String, Long] = {
-        val root = new org.apache.hadoop.fs.Path(tgt)
-        val fs2 = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-          fs2.listStatus(p).toSeq.flatMap(s =>
-            if (s.isDirectory) walk(s.getPath) else Seq(s))
-        walk(root).map(s => s.getPath.toString -> s.getModificationTime).toMap
-      }
-      val afterV0 = tgtFiles()
-
-      // v1: append; v2: copy-on-write SQL delete; v3: DV delete commit
-      SnapshotStore.appendCommit(
-        orders.select(col("o_orderkey") + 10000000L, col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
-          .toDF(orders.columns: _*).limit(50).coalesce(1), src)
-      spark.sql(s"DELETE FROM $cat.facts.orders WHERE o_orderkey % 9 = 0")
-      SnapshotStore.deleteCommit(spark, src, Seq("o_orderkey"), col("o_orderkey") % 11 === 1)
-
-      assert(SnapshotReplication.syncFiles(spark, src, tgt) === Seq(1L, 2L, 3L))
-      val afterV3 = tgtFiles()
-      afterV0.foreach { case (f, mt) =>
-        assert(afterV3.get(f).contains(mt), s"sync re-copied an unchanged file: $f")
-      }
-      // the clone is VERSION-exact: same numbers, same per-version content
-      assert(SnapshotStore.versions(spark, tgt) === Seq(0L, 1L, 2L, 3L))
-      (0L to 3L).foreach { v =>
-        assert(SnapshotStore.readVersion(spark, tgt, v).collect().toSet ===
-          SnapshotStore.readVersion(spark, src, v).collect().toSet, s"version $v diverged")
-      }
-      // history operations carry over (append / delete-cow / delete)
-      val ops = SnapshotStore.history(spark, tgt).orderBy("version")
-        .collect().map(_.getString(2)).toSeq
-      assert(ops === Seq("create", "append", "delete-cow", "delete"), s"ops: $ops")
-      // idempotent: nothing left to sync
-      assert(SnapshotReplication.syncFiles(spark, src, tgt) === Seq.empty)
-    }
-  }
-
   test("MERGE INTO works on a path-based CREATE TABLE USING graft-snapshot table") {
     val table = java.nio.file.Files.createTempDirectory("rl-pathmerge").toString + "/t"
     SnapshotStore.commit(graft.sources.Tables.nation(spark, sf()), table)

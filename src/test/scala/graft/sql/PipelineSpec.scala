@@ -256,4 +256,40 @@ class PipelineSpec extends SparkSuite {
     val v2 = spark.read.parquet(s"$root/gold/dim_location").collect().toSet
     assert(v1 === v2) // build_dimensions.py:96-97 no-op branch
   }
+
+  test("dim_date widens past the reference range: 2026-12-30 and 2027-01-02 rows reach all three facts") {
+    val root = Files.createTempDirectory("graft-pipe-cal")
+    val layout = Pipeline.Layout(root.toString, s"$root/silver", s"$root/gold")
+    // one London batch per day: the observation plus a forecast for
+    // half an hour later; the first day's forecast also covers the
+    // second day's observation hour
+    def land(n: Int, ts: String, epoch: Long, extra: Seq[(Long, Double, String)]): Unit = {
+      val batch = ts.filter(_.isDigit).take(8) + "_060000"
+      WeatherFixtures.writeBronze(root, "current", s"data_$n.json", Seq(
+        WeatherFixtures.currentJson("London", "GB", temp = 5.0, feelsLike = 3.0,
+          humidity = 80, extractionTs = ts, batchId = batch)))
+      WeatherFixtures.writeBronze(root, "forecast", s"data_$n.json", Seq(
+        WeatherFixtures.forecastJson("London", "GB", ts, batch,
+          (epoch + 1800, 5.5, "Clear") +: extra)))
+    }
+    def dates(table: String, key: String): Set[Int] =
+      spark.read.parquet(s"$root/gold/$table").select(key).distinct()
+        .collect().map(_.getInt(0)).toSet
+    val day2 = 1798869600L // 2027-01-02 06:00:00 UTC
+    land(1, "2026-12-30T06:00:00", 1798610400L, Seq((day2, 6.0, "Clear")))
+    Pipeline.run(spark, layout, FixedClock("2026-12-30 07:00:00"),
+      materializeGold = true, registerViews = false)
+    land(2, "2027-01-02T06:00:00", day2, Nil)
+    val out = Pipeline.run(spark, layout, FixedClock("2027-01-02 07:00:00"),
+      materializeGold = true, registerViews = false)
+
+    val both = Set(20261230, 20270102)
+    assert(dates("fact_weather_actual", "date_key") === both)
+    assert(dates("fact_weather_forecast", "forecast_created_date_key") === both)
+    assert(dates("fact_weather_forecast", "forecast_for_date_key") === both)
+    assert(dates("fact_forecast_accuracy", "forecast_for_date_key") === both)
+    // never narrower than the reference calendar
+    val cal = out.dimDate.agg(min("full_date"), max("full_date")).head()
+    assert(cal.getDate(0).toString === "2024-01-01" && cal.getDate(1).toString === "2027-01-02")
+  }
 }

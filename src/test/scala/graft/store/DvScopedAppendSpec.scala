@@ -145,22 +145,6 @@ class DvScopedAppendSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("syncFiles clones a delete+append chain version-exactly, scopes included") {
-    val src = fresh("dvscope8")
-    SnapshotStore.commit(spark.range(0, 30).toDF("id").repartition(2), src)
-    SnapshotStore.deleteCommit(spark, src, Seq("id"), col("id") === 2L)
-    SnapshotStore.appendCommit(Seq(2L, 55L).toDF("id").coalesce(1), src)
-    val dst = fresh("dvscope8dst")
-    graft.sources.SnapshotReplication.syncFiles(spark, src, dst)
-    (0L to 2L).foreach { v =>
-      assert(ids(SnapshotStore.readVersion(spark, dst, v)) ===
-        ids(SnapshotStore.readVersion(spark, src, v)), s"mirror mismatch at v$v")
-    }
-    // the clone keeps appending correctly: its DVs carried their scopes
-    SnapshotStore.appendCommit(Seq(2L).toDF("id").coalesce(1), dst)
-    assert(ids(SnapshotStore.readVersion(spark, dst, 3)).count(_ == 2L) === 2)
-  }
-
   test("MERGE INTO composes with live scoped DVs: partial materialization, reinserts survive") {
     val wh = java.nio.file.Files.createTempDirectory("dvscope-mrg").toString
     val cat = "dvm_" + java.util.UUID.randomUUID.toString.take(8).replace("-", "")

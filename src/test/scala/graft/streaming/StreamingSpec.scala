@@ -411,41 +411,6 @@ class StreamingSpec extends SparkSuite {
     assert(batch.count() === 1)
   }
 
-  test("foreachBatch idempotent sink: batches land once, replay rewrites instead of appending") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-sink")
-    val path = s"$root/out"
-    val input = MemoryStream[EventStreams.Event]
-    def ts(min: Int) = new java.sql.Timestamp(1704067200000L + min * 60000L)
-
-    input.addData(
-      EventStreams.Event(1L, ts(0), "click", 1.0),
-      EventStreams.Event(2L, ts(1), "view", 2.0))
-    val q1 = Sinks.idempotentParquetSink(
-      input.toDS().toDF(), path, s"$root/ckpt", Some("graft_sink_t"))
-    q1.awaitTermination()
-    assert(spark.table("graft_sink_t").count() === 2)
-
-    // second run, one more batch → only the delta lands, catalog sees it
-    input.addData(EventStreams.Event(3L, ts(2), "purchase", 3.0))
-    val q2 = Sinks.idempotentParquetSink(
-      input.toDS().toDF(), path, s"$root/ckpt", Some("graft_sink_t"))
-    q2.awaitTermination()
-    assert(spark.table("graft_sink_t").count() === 3)
-    assert(spark.table("graft_sink_t").select("batch_id").distinct().count() === 2)
-
-    // simulate a crash-replay of batch 1 (write committed, checkpoint not):
-    // re-writing the same batch_id must REWRITE its partition, not append
-    val replay = Seq(EventStreams.Event(3L, ts(2), "purchase", 3.0)).toDF()
-    Sinks.writeBatchIdempotent(replay.drop("batch_id"), 1L, path)
-    spark.catalog.refreshTable("graft_sink_t")
-    assert(spark.table("graft_sink_t").count() === 3) // still 3 — no duplicates
-    // other partitions untouched by the replay
-    assert(spark.table("graft_sink_t").filter(col("batch_id") === 0).count() === 2)
-    spark.sql("DROP TABLE graft_sink_t")
-  }
-
   test("streaming MV maintenance: foreachBatch refreshes the summary, the rewrite serves fresh numbers") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -494,130 +459,6 @@ class StreamingSpec extends SparkSuite {
       val a = agg.filter(col("status") === "A").head().getDouble(3)
       assert(a === 35.0 / 3.0)
     } finally graft.sql.MaterializedAgg.clear()
-  }
-
-  test("upsert state sink: streaming CDC fold equals batch changelog compaction, replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-upsert")
-    val path = s"$root/state"
-    val input = MemoryStream[EventStreams.Event]
-    def ts(min: Int) = new java.sql.Timestamp(1704067200000L + min * 60000L)
-
-    val b1 = Seq(
-      EventStreams.Event(1L, ts(0), "click", 1.0),
-      EventStreams.Event(2L, ts(1), "view", 2.0),
-      EventStreams.Event(3L, ts(2), "view", 3.0))
-    val b2 = Seq(
-      EventStreams.Event(1L, ts(3), "view", 4.0),   // upsert over batch-1 row
-      EventStreams.Event(2L, ts(4), "error", 5.0),  // tombstone: key 2 disappears
-      EventStreams.Event(4L, ts(5), "click", 6.0))  // new key
-
-    input.addData(b1: _*)
-    val q1 = Sinks.upsertStateSink(
-      input.toDS().toDF(), path, s"$root/ckpt",
-      keyCols = Seq("user_id"), versionCol = "event_time", opCol = "event_type",
-      deleteOp = "error")
-    q1.awaitTermination()
-    input.addData(b2: _*)
-    val q2 = Sinks.upsertStateSink(
-      input.toDS().toDF(), path, s"$root/ckpt",
-      keyCols = Seq("user_id"), versionCol = "event_time", opCol = "event_type",
-      deleteOp = "error")
-    q2.awaitTermination()
-
-    val streamed = Sinks.readState(spark, path)
-    val batch = graft.ops.ChangeData.applyChangelog(
-      (b1 ++ b2).toDF(), Seq("user_id"), "event_time", "event_type", deleteOp = "error")
-    assert(streamed.exceptAll(batch).count() === 0 && batch.exceptAll(streamed).count() === 0)
-    assert(streamed.count() === 3) // keys 1 (updated), 3, 4; key 2 deleted
-    assert(streamed.filter(col("user_id") === 1).head().getString(2) === "view")
-
-    // crash-replay of the SECOND batch (state written, checkpoint lost):
-    // rebuilding state_v=1 from the same immutable inputs changes nothing
-    Sinks.applyBatchUpsert(
-      b2.toDF(), 1L, path, Seq("user_id"), "event_time", "event_type", "error")
-    val replayed = Sinks.readState(spark, path)
-    assert(replayed.exceptAll(batch).count() === 0 && batch.exceptAll(replayed).count() === 0)
-
-    // retention GC: keep only the newest version; current state unchanged
-    val deleted = Sinks.vacuumState(spark, path, keep = 1)
-    assert(deleted === Seq(0L), s"deleted $deleted")
-    val afterVacuum = Sinks.readState(spark, path)
-    assert(afterVacuum.exceptAll(batch).count() === 0 && batch.exceptAll(afterVacuum).count() === 0)
-    // idempotent: nothing left to delete at keep=1
-    assert(Sinks.vacuumState(spark, path, keep = 1).isEmpty)
-
-    // stray non-numeric state_v=* entry (e.g. an interrupted write's
-    // temp dir): GC and reads skip it instead of dying on a parse error
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/state_v=_tmp_junk"))
-    assert(Sinks.vacuumState(spark, path, keep = 1).isEmpty)
-    val withStray = Sinks.readState(spark, path)
-    assert(withStray.exceptAll(batch).count() === 0 && batch.exceptAll(withStray).count() === 0)
-  }
-
-  test("sharded upsert state: parity with unsharded fold, untouched shards never rewritten, replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-upsert-sh")
-    val path = s"$root/state"
-    val shards = 8
-    def ts(min: Int) = new java.sql.Timestamp(1704067200000L + min * 60000L)
-    // batch 1: 40 keys spread over all shards
-    val b1 = (1L to 40L).map(u => EventStreams.Event(u, ts(u.toInt), "click", u.toDouble))
-    // batch 2: updates for exactly two keys (+1 delete) -> few shards touched
-    val b2 = Seq(
-      EventStreams.Event(7L, ts(100), "view", 777.0),
-      EventStreams.Event(23L, ts(101), "error", 0.0), // tombstone
-      EventStreams.Event(99L, ts(102), "click", 99.0))
-
-    val t1 = Sinks.applyBatchUpsertSharded(
-      b1.toDF(), 0L, path, Seq("user_id"), "event_time", "event_type", "error", shards)
-    assert(t1.nonEmpty && t1.size <= shards)
-    val t2 = Sinks.applyBatchUpsertSharded(
-      b2.toDF(), 1L, path, Seq("user_id"), "event_time", "event_type", "error", shards)
-    // 3 keys can touch at most 3 shards — the whole point of sharding
-    assert(t2.size <= 3, s"batch 2 touched $t2")
-
-    // parity: sharded state == one-shot changelog compaction of all rows
-    val expected = graft.ops.ChangeData.applyChangelog(
-      (b1 ++ b2).toDF(), Seq("user_id"), "event_time", "event_type", deleteOp = "error")
-    val got = Sinks.readStateSharded(spark, path)
-    assert(got.exceptAll(expected).count() === 0 && expected.exceptAll(got).count() === 0)
-    assert(got.filter(col("user_id") === 23L).isEmpty) // tombstone applied
-    assert(got.filter(col("user_id") === 7L).head().getDouble(3) === 777.0)
-
-    // untouched shards still have ONLY their batch-0 version (no rewrite)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val untouched = t1.filterNot(t2.contains)
-    assert(untouched.nonEmpty)
-    untouched.foreach { s =>
-      val versions = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/shard=$s"))
-        .map(_.getPath.getName).filter(_.startsWith("state_v=")).toSeq
-      assert(versions === Seq("state_v=0"), s"shard $s was rewritten: $versions")
-    }
-
-    // crash replay of batch 2: same immutable inputs -> identical state
-    Sinks.applyBatchUpsertSharded(
-      b2.toDF(), 1L, path, Seq("user_id"), "event_time", "event_type", "error", shards)
-    val replayed = Sinks.readStateSharded(spark, path)
-    assert(replayed.exceptAll(expected).count() === 0 && expected.exceptAll(replayed).count() === 0)
-
-    // the streaming wrapper drives the same fold end-to-end
-    val input = MemoryStream[EventStreams.Event]
-    input.addData(b1: _*)
-    val q = Sinks.upsertStateSinkSharded(
-      input.toDS().toDF(), s"$root/state2", s"$root/ckpt2",
-      keyCols = Seq("user_id"), versionCol = "event_time", opCol = "event_type",
-      deleteOp = "error", shards = shards)
-    q.awaitTermination()
-    val streamed = Sinks.readStateSharded(spark, s"$root/state2")
-    val exp1 = graft.ops.ChangeData.applyChangelog(
-      b1.toDF(), Seq("user_id"), "event_time", "event_type", deleteOp = "error")
-    assert(streamed.exceptAll(exp1).count() === 0 && exp1.exceptAll(streamed).count() === 0)
   }
 
   test("state is bounded: 10x the input rows leaves the state-store row count unchanged") {
