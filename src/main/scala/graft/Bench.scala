@@ -85,16 +85,22 @@ object Bench {
       boot ++ Seq("fixture_setup_sec" -> fixtures, "sf" -> sf))
 
     /** Short enough for the 2000-char tail window: the headline medians
-      * instead of the per-query map. */
-    def line(headline: Seq[String]): ObjectNode = obj(Seq(
+      * instead of the per-query map. `file` names the record this run
+      * wrote ([[recordFile]]). */
+    def line(headline: Seq[String], file: String): ObjectNode = obj(Seq(
       "metric" -> "total", "value" -> total, "unit" -> "sec", "n_queries" -> nQueries,
       "n_errors" -> errors.size,
       "queries" -> headline.flatMap(k => runs.get(k).map(rs => k -> BenchGate.median(rs))),
       "queries_stat" -> "median_of_3", "spread_max" -> spreadMax, "control_sec" -> controlSec,
       "median_ratio_vs_prev" -> gate.medianRatio, "n_regressions" -> regressions.size,
       "corpus_slowdown" -> gate.corpusSlowdown) ++
-      boot ++ Seq("full" -> "BENCH_FULL.json", "sf" -> sf))
+      boot ++ Seq("full" -> file, "sf" -> sf))
   }
+
+  /** The record a run writes: subset runs keep their own file so the
+    * full-corpus BENCH_FULL.json is never clobbered by a partial run. */
+  private[graft] def recordFile(subset: Option[Set[String]]): String =
+    if (subset.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
 
   /** Seconds for one `fn(spark, sfDir).count()`. The query's tracked
     * intermediate caches ([[graft.ops.QueryCaches]]) are released in
@@ -165,7 +171,7 @@ object Bench {
       case "headline" => headline.toSet
       case s          => s.split(",").map(_.trim).filter(_.nonEmpty).toSet
     }
-    val fullOut = if (subset.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
+    val fullOut = recordFile(subset)
     val spark = Sessions.local("graft-bench")
     // steady-state warm-up: exercise codegen, shuffle, and the parquet
     // reader once so the first timed query doesn't absorb JVM/session
@@ -319,7 +325,7 @@ object Bench {
       boot, fixtures, sfDir)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(fullOut), json.writeValueAsBytes(record.full))
-    println(json.writeValueAsString(record.line(headline)))
+    println(json.writeValueAsString(record.line(headline, fullOut)))
     spark.stop()
   }
 }

@@ -4,12 +4,8 @@ import graft.store.SnapshotStore
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -43,8 +39,10 @@ import scala.jdk.CollectionConverters._
   *  - Planning is METADATA-ONLY: the driver lists the snapshot's part
   *    files and reads parquet FOOTERS, never data pages.
   *  - Column pruning is real: the pruned schema becomes the parquet
-  *    read projection, so unrequested columns are never decoded
-  *    ([[SnapshotPartitionReader]]).
+  *    read projection, so unrequested columns are never decoded. Every
+  *    row group decodes through Spark's `VectorizedParquetRecordReader`
+  *    ([[SnapshotColumnarReader]], [[SnapshotVectorRowReader]]), which
+  *    also null-fills columns a file predates and widens narrow types.
   *  - Filter pushdown is used for FILE SKIPPING against footer min/max
   *    statistics; every filter is also returned as a residual, so Spark
   *    re-applies it row-level — skipping can only prune, never corrupt.
@@ -79,7 +77,7 @@ final class SnapshotDataSource extends TableProvider with DataSourceRegister {
     SnapshotDataSource.pinned.set(SnapshotDataSource.optionsKey(options) -> resolved)
     // the manifest-pinned schema when a widening is live; otherwise
     // the footer union (an evolved snapshot's data dir can mix file
-    // generations; absent columns read null in the row path) folded
+    // generations; the decoder reads a column a file lacks as null) folded
     // through the rename/drop mapping to the LOGICAL schema
     val base = graft.store.ColumnMapping.tableSchema(SparkSession.active, resolved._2)
     // change-feed reads carry the two CDC metadata columns
@@ -1498,28 +1496,31 @@ private[sources] object SnapshotScan {
 
   /** DV lookups cache JVM-wide: DV key files are immutable once a
     * marker references them, and rebuilding the lookup is a per-QUERY
-    * driver collect + UnsafeProjection pass over every key otherwise —
-    * the dominant scan-setup cost on a hot table with live DVs.
-    * Bounded like the sidecar caches; vacuumed DV paths simply age out
-    * on the clear. */
-  private val dvLookupCache =
-    scala.collection.concurrent.TrieMap.empty[(Seq[String], Seq[String]), DvLookup]
+    * driver decode + UnsafeProjection pass over every key otherwise —
+    * the dominant scan-setup cost on a hot table with live DVs. Keyed
+    * by the key TYPES too, so a lookup is never probed under another
+    * key type. Bounded like the sidecar caches; vacuumed DV paths
+    * simply age out on the clear. */
+  private val dvLookupCache = scala.collection.concurrent.TrieMap
+    .empty[(Seq[String], Seq[String], Seq[DataType]), DvLookup]
 
   /** Per-class broadcast arrays cache too (keyed by the exact class →
-    * DV-subset layout + the app id, so a restarted session can never
-    * resolve another context's broadcast): a hot table's scans re-send
-    * zero bytes to the executors. Evicted entries unpersist lazily. */
+    * DV-subset layout, the key columns and types, and the app id, so a
+    * restarted session can never resolve another context's broadcast):
+    * a hot table's scans re-send zero bytes to the executors. Evicted
+    * entries unpersist lazily. */
   private val dvBroadcastCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Seq[String]], Seq[String]),
+    .empty[(String, Seq[Seq[String]], Seq[String], Seq[DataType]),
       org.apache.spark.broadcast.Broadcast[Array[DvLookup]]]
 
   def broadcastDvClasses(
       spark: SparkSession,
-      m: SnapshotStore.Manifest,
-      classDeletes: Seq[Seq[String]])
+      classDeletes: Seq[Seq[String]],
+      keyCols: Seq[String],
+      keyTypes: Seq[DataType])
       : org.apache.spark.broadcast.Broadcast[Array[DvLookup]] =
     dvBroadcastCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, classDeletes, m.keyCols), {
+      (spark.sparkContext.applicationId, classDeletes, keyCols, keyTypes), {
         if (dvBroadcastCache.size > 64) {
           dvBroadcastCache.values.foreach(b =>
             scala.util.Try(b.unpersist(blocking = false)))
@@ -1527,65 +1528,22 @@ private[sources] object SnapshotScan {
         }
         spark.sparkContext.broadcast(classDeletes.map { ds =>
           if (ds.isEmpty) null
-          else loadDvLookup(spark, m.copy(deletes = ds))
+          else loadDvLookup(spark, ds, keyCols, keyTypes)
         }.toArray)
       })
 
-  /** Load one manifest's deletion vectors as a ready-to-probe lookup,
-    * values normalized to the readers' JVM-value space (micros for
-    * timestamps, days for dates, UTF8String for strings) — ONE home for
-    * the normalization so the batch scan and the change-feed stream can
-    * never disagree on it. */
-  def loadDvLookup(spark: SparkSession, m: SnapshotStore.Manifest): DvLookup =
-    dvLookupCache.getOrElseUpdate((m.deletes, m.keyCols), {
+  /** Load deletion vectors as a ready-to-probe lookup, decoded on the
+    * driver at the table's key types ([[DvLookup.decode]] — the same
+    * decoder executors use above the byte cap), so the batch scan and
+    * the change-feed stream can never disagree on the value space. */
+  def loadDvLookup(
+      spark: SparkSession, deletes: Seq[String],
+      keyCols: Seq[String], keyTypes: Seq[DataType]): DvLookup =
+    dvLookupCache.getOrElseUpdate((deletes, keyCols, keyTypes), {
       if (dvLookupCache.size > 64) dvLookupCache.clear()
-      buildDvLookup(spark, m)
+      DvLookup.decode(deletes, keyCols, keyTypes,
+        readerHadoopConf(spark, spark.sessionState.newHadoopConf()))
     })
-
-  private def buildDvLookup(spark: SparkSession, m: SnapshotStore.Manifest): DvLookup = {
-    val frame = spark.read.parquet(m.deletes: _*)
-      .select(m.keyCols.map(org.apache.spark.sql.functions.col): _*)
-    // the JVM-value space the readers probe with: timestamps as micros
-    // longs, dates as day ints, strings as UTF8String — the projection
-    // layout must match or byte equality silently never fires
-    val storageTypes: Seq[DataType] = frame.schema.fields.toSeq.map(_.dataType).map {
-      case TimestampType | TimestampNTZType => LongType
-      case DateType                         => IntegerType
-      case other                            => other
-    }
-    val keys = frame
-      .distinct().collect()
-      .map(r => Seq.tabulate(r.length)(i => r.get(i) match {
-        case t: java.sql.Timestamp =>
-          t.getTime * 1000L + t.getNanos / 1000L % 1000L
-        case t: java.time.LocalDateTime =>
-          t.toInstant(java.time.ZoneOffset.UTC).getEpochSecond * 1000000L + t.getNano / 1000L
-        case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-        case d: java.time.LocalDate => d.toEpochDay.toInt
-        case s: String => UTF8String.fromString(s)
-        case v: java.lang.Long => v
-        case v: java.lang.Integer => v
-        case v: java.lang.Short => v
-        case v: java.lang.Byte => v
-        case v: java.lang.Double => v
-        case v: java.lang.Float => v
-        case v: java.lang.Boolean => v
-        // normalized to catalyst Decimal — the probe side reads
-        // `row.get(ord, DecimalType(p, s))`, which yields Decimal too,
-        // and Decimal equality/hashing are numeric-value-based, so a
-        // scale difference between writer generations can't miss
-        case d: java.math.BigDecimal => org.apache.spark.sql.types.Decimal(d)
-        case null => null
-        // binary/struct/etc would compare by the WRONG equality against
-        // the readers' probe values — deleted rows would silently
-        // resurface; refuse instead
-        case other => throw new UnsupportedOperationException(
-          s"graft-snapshot: unsupported deletion-vector key value type " +
-            s"${other.getClass.getName} (supported: integral/floating/boolean/" +
-            "string/timestamp/date/decimal keys)")
-      })).toSet
-    new DvLookup(keys, m.keyCols.size, storageTypes)
-  }
 
   /** Per-file PHYSICAL spelling of a read schema (column rename
     * mapping): renamed columns bind to the alias THIS file carries;
@@ -1594,6 +1552,13 @@ private[sources] object SnapshotScan {
   def physicalNames(s: StructType, renameMap: Map[String, String]): StructType =
     if (renameMap.isEmpty) s
     else StructType(s.fields.map(f => f.copy(name = renameMap.getOrElse(f.name, f.name))))
+
+  /** The table schema's types of its deletion-vector key columns: the
+    * value space lookups are decoded in and probed with. */
+  def keyTypesOf(schema: StructType, keyCols: Seq[String]): Seq[DataType] =
+    keyCols.map(n => schema.find(_.name == n).map(_.dataType).getOrElse(
+      throw new IllegalStateException(
+        s"deletion-vector key column '$n' missing from table schema")))
 
   /** Initialize a VectorizedParquetRecordReader over one row-group byte
     * range with the given requested Spark schema — the split-based path
@@ -1870,6 +1835,7 @@ private[sources] final class SnapshotScan(
         catch { case _: java.io.IOException => Map.empty }
     var allPresent = true
     var total = 0
+    // projected columns plus the DV keys the reader probes
     val wanted = (physical.fieldNames.toSeq ++
       (if (m.deletes.isEmpty) Nil else m.keyCols)).distinct
     // column rename mapping: physical alias → logical name, and the
@@ -1898,8 +1864,7 @@ private[sources] final class SnapshotScan(
       val renameMap: Map[String, String] =
         if (m.renames.isEmpty) Map.empty
         else wanted.flatMap(w => physOf(w).filter(_ != w).map(w -> _)).toMap
-      if (!physical.fieldNames.forall(n => physOf(n).isDefined)) allPresent = false
-      val selfContained = wanted.forall(n => physOf(n).isDefined)
+      if (!wanted.forall(n => physOf(n).isDefined)) allPresent = false
       val bucket = if (m.bucketN > 0) SnapshotScan.bucketIdOf(fstr, m.bucketN) else -1
       total += blocks.size
       blocks
@@ -1916,7 +1881,7 @@ private[sources] final class SnapshotScan(
         }
         .filter(b => skippable.isEmpty ||
           !skippable.exists(f => SnapshotScan.excludes(f, b.stats)))
-        .map(b => (SnapshotInputPartition(fstr, b.start, b.length, b.rows, selfContained,
+        .map(b => (SnapshotInputPartition(fstr, b.start, b.length, b.rows,
           bucketId = bucket,
           dvClass = if (m.deletes.isEmpty) 0 else dvClassOfFile.getOrElse(fstr, 0),
           renameMap = renameMap,
@@ -2005,7 +1970,7 @@ private[sources] final class SnapshotScan(
   private lazy val dvClassLookups: Array[DvLookup] =
     dvClassLayout.map { case (idx, _) =>
       if (idx.isEmpty) null
-      else SnapshotScan.loadDvLookup(spark, m.copy(deletes = idx.map(m.deletes)))
+      else SnapshotScan.loadDvLookup(spark, idx.map(m.deletes), m.keyCols, dvKeyTypes)
     }.toArray
   /** The READY-TO-PROBE lookup, resolved once at planning (O(deleted
     * keys), the same bound as readVersion's broadcast build side) and
@@ -2017,7 +1982,8 @@ private[sources] final class SnapshotScan(
     * made the row path 60x slower than the underlying parquet
     * reader). */
   private lazy val dvKeysBroadcast: org.apache.spark.broadcast.Broadcast[Array[DvLookup]] =
-    SnapshotScan.broadcastDvClasses(spark, m, dvClassLayout.map(_._1.map(m.deletes)))
+    SnapshotScan.broadcastDvClasses(
+      spark, dvClassLayout.map(_._1.map(m.deletes)), m.keyCols, dvKeyTypes)
 
   /** Total bytes of the manifest's DV key files — the driver-vs-task-
     * side routing signal, resolved from file statuses only (no key is
@@ -2039,20 +2005,11 @@ private[sources] final class SnapshotScan(
     * small-delta contract is now enforced in code: a DV past
     * `spark.graft.dv.driverBytesMax` (default 16 MB) can no longer
     * grow the driver heap — and compaction remains the remediation
-    * that removes the per-executor read too.
-    *
-    * The task-side reader probes RAW parquet primitives, so it only
-    * takes key types whose physical encoding lands exactly in the
-    * probe value space (INT64 plain/timestamp-micros, INT32
-    * plain/date, double/float/boolean, BINARY-string). Anything else
-    * — INT96 timestamps, decimals, millis timestamps, narrow ints —
-    * falls back to the BROADCAST resolver (Spark-read, any type)
-    * instead of failing the scan at runtime; the check is one footer
-    * open per delete commit, only paid when the byte cap already
-    * tripped. */
+    * that removes the per-executor read too. Both resolvers decode
+    * the key files with [[DvLookup.decode]], so every key type the
+    * driver resolves also resolves task-side. */
   private lazy val dvTaskSide: Boolean = m.deletes.nonEmpty && dvBytes >
-    spark.conf.get("spark.graft.dv.driverBytesMax", (16L << 20).toString).toLong &&
-    TaskSideDvResolver.supportsKeyTypes(m.deletes, m.keyCols, hadoopConf)
+    spark.conf.get("spark.graft.dv.driverBytesMax", (16L << 20).toString).toLong
 
   /** Per-partition row ordering, reported only for manifests a sorted
     * commit produced (`sortcols=`). Sound because every read unit is
@@ -2179,18 +2136,15 @@ private[sources] final class SnapshotScan(
   override def readSchema(): StructType = required
 
   /** Deletion-vector key types, resolved once from the table schema. */
-  private lazy val dvKeyTypes: Seq[DataType] = m.keyCols.map(n =>
-    fullSchema.find(_.name == n).map(_.dataType).getOrElse(
-      throw new IllegalStateException(
-        s"deletion-vector key column '$n' missing from table schema")))
+  private lazy val dvKeyTypes: Seq[DataType] = SnapshotScan.keyTypesOf(fullSchema, m.keyCols)
 
-  /** Vectorized reading requires every file to carry every requested
-    * column and flat column types. Live deletion vectors stay columnar
-    * too ([[SnapshotDvColumnarReader]]: probe the key vectors per
-    * batch, pass clean batches through untouched, compact only batches
-    * that contain deleted rows) as long as every column and key type is
-    * in the copyable atomic set — anything else falls back to the row
-    * reader (correct for both). */
+  /** Columnar batches require every file to carry every requested
+    * column and DV key, and flat column types. Live deletion vectors
+    * stay columnar too ([[SnapshotDvColumnarReader]]: probe the key
+    * vectors per batch, pass clean batches through untouched, compact
+    * only batches that contain deleted rows) as long as every column and
+    * key type is in the copyable atomic set — anything else is served
+    * row by row ([[SnapshotVectorRowReader]]; correct for both). */
   private lazy val columnar: Boolean =
     allColumnsPresent && !hasFileCol &&
       physical.fields.forall(f => f.dataType match {
@@ -2199,8 +2153,7 @@ private[sources] final class SnapshotScan(
       }) &&
       (m.deletes.isEmpty ||
         (physical.fields.forall(f => SnapshotScan.dvColumnarType(f.dataType)) &&
-          dvKeyTypes.forall(SnapshotScan.dvColumnarType) &&
-          keptGroups.forall(_.selfContained)))
+          dvKeyTypes.forall(SnapshotScan.dvColumnarType)))
 
   override def description(): String = {
     val files = s"files=${keptGroups.map(_.file).distinct.size}/$totalFiles"
@@ -2299,7 +2252,7 @@ private[sources] final class SnapshotScan(
       if (m.deletes.isEmpty) None
       else if (dvTaskSide)
         Some(new TaskSideDvResolver(dvClassLayout.map(_._1.map(m.deletes)),
-          m.keyCols, new SerializableHadoopConf(c)))
+          m.keyCols, dvKeyTypes, new SerializableHadoopConf(c)))
       else Some(new BroadcastDvResolver(dvKeysBroadcast))
     new SnapshotReaderFactory(physical, m.keyCols, dvKeyTypes,
       resolver, columnar,
@@ -2313,9 +2266,7 @@ private[sources] final class SnapshotScan(
 }
 
 /** One row-group read unit: one row group of one part file
-  * (midpoint-convention byte range). `selfContained` = the file carries
-  * every wanted column, so the vectorized decoder can serve it even on
-  * the row (DV) path. `bucketId` (from the part file's name —
+  * (midpoint-convention byte range). `bucketId` (from the part file's name —
   * write task i of a bucketed commit emits `part-<i>-*`) keys
   * storage-partitioned joins; -1 on unbucketed tables. The
   * [[org.apache.spark.sql.connector.read.HasPartitionKey]] value is
@@ -2323,7 +2274,7 @@ private[sources] final class SnapshotScan(
   * it does only for bucketed manifests with every group resolved. */
 private[sources] final case class SnapshotInputPartition(
     file: String, start: Long, length: Long, rows: Long,
-    selfContained: Boolean = true, bucketId: Int = -1, dvClass: Int = 0,
+    bucketId: Int = -1, dvClass: Int = 0,
     /** logical → physical column names for THIS file (rename mapping);
       * empty when the file already carries every logical name. */
     renameMap: Map[String, String] = Map.empty,
@@ -2474,171 +2425,52 @@ private[sources] final class BroadcastDvResolver(
 private[sources] final class TaskSideDvResolver(
     classDeletes: Seq[Seq[String]],
     keyCols: Seq[String],
+    keyTypes: Seq[DataType],
     conf: SerializableHadoopConf) extends DvResolver {
   override def lookup(dvClass: Int): DvLookup = {
     val ds = classDeletes(dvClass)
     if (ds.isEmpty) null
-    else TaskSideDvResolver.cache.getOrElseUpdate((ds, keyCols), {
+    else TaskSideDvResolver.cache.getOrElseUpdate((ds, keyCols, keyTypes), {
       if (TaskSideDvResolver.cache.size > 16) TaskSideDvResolver.cache.clear()
-      TaskSideDvResolver.read(ds, keyCols, conf.conf)
+      TaskSideDvResolver.taskSideBuilds.incrementAndGet()
+      DvLookup.decode(ds, keyCols, keyTypes, conf.conf)
     })
   }
 }
 
 private[sources] object TaskSideDvResolver {
   /** Executor-JVM-local: each executor reads a (DV set, keys) once. */
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(Seq[String], Seq[String]), DvLookup]
+  private val cache = scala.collection.concurrent.TrieMap
+    .empty[(Seq[String], Seq[String], Seq[DataType]), DvLookup]
 
   /** Lookups built executor-side since JVM start (test pin; in local
     * mode the "executor" shares the driver JVM). */
   val taskSideBuilds = new java.util.concurrent.atomic.AtomicLong
-
-  /** Scans that WANTED the task-side path (byte cap tripped) but fell
-    * back to the broadcast resolver because a DV key's physical type
-    * is outside the raw-primitive probe set (test pin). */
-  val typeFallbacks = new java.util.concurrent.atomic.AtomicLong
-
-  /** Whether [[read]] can probe these key columns from raw parquet
-    * primitives with the SAME value space the scan probes with. One
-    * footer open per delete commit (first key file only — a commit's
-    * DV files share their writer's schema); any unreadable/missing
-    * shape answers false, which routes to the broadcast resolver —
-    * conservative, never wrong. Millis-unit INT64 timestamps are
-    * rejected too: the raw long would be millis while probes are
-    * micros, a silent never-matches (deleted rows resurfacing), not an
-    * error. */
-  def supportsKeyTypes(
-      deletes: Seq[String], keyCols: Seq[String], conf: Configuration): Boolean = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val ok = try {
-      deletes.forall { d =>
-        val p = new Path(d)
-        val f = p.getFileSystem(conf)
-        val first: Option[Path] =
-          if (f.getFileStatus(p).isDirectory)
-            f.listStatus(p).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName).headOption.map(_.getPath)
-          else Some(p)
-        first.exists { fp =>
-          val r = ParquetFileReader.open(HadoopInputFile.fromPath(fp, conf))
-          val schema = try r.getFooter.getFileMetaData.getSchema finally r.close()
-          keyCols.forall { c =>
-            schema.containsField(c) && {
-              val t = schema.getType(schema.getFieldIndex(c)).asPrimitiveType()
-              val ann = t.getLogicalTypeAnnotation
-              t.getPrimitiveTypeName match {
-                case INT64 => ann == null || (ann match {
-                  case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                    ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-                  case _ => false
-                })
-                case INT32 => ann == null ||
-                  ann == LogicalTypeAnnotation.dateType() || (ann match {
-                    case it: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                      it.getBitWidth == 32 && it.isSigned
-                    case _ => false
-                  })
-                case DOUBLE | FLOAT | BOOLEAN => true
-                case BINARY => ann == LogicalTypeAnnotation.stringType()
-                case _ => false
-              }
-            }
-          }
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => false }
-    if (!ok) typeFallbacks.incrementAndGet()
-    ok
-  }
-
-  /** Read DV key files with parquet-mr directly (no Spark session in
-    * executors): raw primitive reads land exactly in the probe value
-    * space — INT64 timestamp-micros as longs, INT32 dates as day ints,
-    * BINARY strings as UTF8String. */
-  private[sources] def read(
-      deletes: Seq[String], keyCols: Seq[String], conf: Configuration): DvLookup = {
-    taskSideBuilds.incrementAndGet()
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val parts: Seq[Path] = deletes.flatMap { d =>
-      val p = new Path(d)
-      val f = p.getFileSystem(conf)
-      if (f.getFileStatus(p).isDirectory)
-        f.listStatus(p).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
-      else Seq(p)
-    }
-    require(parts.nonEmpty, s"no DV key files under ${deletes.mkString(", ")}")
-    val schema = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(parts.head, conf))
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    }
-    def primOf(name: String) = schema.getType(schema.getFieldIndex(name)).asPrimitiveType()
-    val storageTypes: Seq[DataType] = keyCols.map(c => primOf(c).getPrimitiveTypeName match {
-      case INT64   => LongType
-      case INT32   => IntegerType
-      case DOUBLE  => DoubleType
-      case FLOAT   => FloatType
-      case BOOLEAN => BooleanType
-      case BINARY
-          if primOf(c).getLogicalTypeAnnotation ==
-            org.apache.parquet.schema.LogicalTypeAnnotation.stringType() => StringType
-      case other => throw new UnsupportedOperationException(
-        s"graft-snapshot: unsupported deletion-vector key physical type $other for '$c'")
-    })
-    val keys = scala.collection.mutable.HashSet.empty[Seq[Any]]
-    parts.foreach { p =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val sch = g.getType
-          keys += keyCols.map { c =>
-            val i = sch.getFieldIndex(c)
-            if (g.getFieldRepetitionCount(i) == 0) null
-            else sch.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-              case INT64   => java.lang.Long.valueOf(g.getLong(i, 0))
-              case INT32   => java.lang.Integer.valueOf(g.getInteger(i, 0))
-              case DOUBLE  => java.lang.Double.valueOf(g.getDouble(i, 0))
-              case FLOAT   => java.lang.Float.valueOf(g.getFloat(i, 0))
-              case BOOLEAN => java.lang.Boolean.valueOf(g.getBoolean(i, 0))
-              case BINARY  => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-              case other => throw new UnsupportedOperationException(
-                s"unsupported DV key physical type $other")
-            }
-          }
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    new DvLookup(keys.toSet, keyCols.size, storageTypes)
-  }
 }
 
-/** Deletion-vector membership structure, built ONCE on the driver and
-  * broadcast whole. Single-key tables (the common case) probe a flat
+/** Deletion-vector membership structure, built ONCE (on the driver and
+  * broadcast whole, or once per executor above the byte cap). Keys are
+  * catalyst values of the table's key types — the value space the
+  * readers probe with. Single-key tables (the common case) probe a flat
   * Set[Any]; composite keys probe a set of UnsafeRow BYTE IMAGES —
   * hashing is murmur3 over the packed row bytes instead of per-field
   * boxed tuple hashing (~2 µs/row → sub-µs; the r10 verdict's ask #5).
   * Probes are per-reader ([[DvProbe]]) because UnsafeProjection output
-  * rows are reused — the broadcast-shared set itself is immutable. */
+  * rows are reused — the shared set itself is immutable. */
 private[sources] final class DvLookup(
-    keys: Set[Seq[Any]], arity: Int, keyStorageTypes: Seq[DataType]) extends Serializable {
+    keys: Set[Seq[Any]], keyTypes: Seq[DataType]) extends Serializable {
   private val single: Set[Any] =
-    if (arity == 1) keys.iterator.map(_.head).toSet else null
+    if (keyTypes.size == 1) keys.iterator.map(_.head).toSet else null
 
   /** No-boxing probe structures for a single integral key (timestamps
-    * and dates land here too — storage types normalize them to
-    * long/int). Null when the key shape isn't integral. */
+    * and dates land here too: their catalyst values are micros longs
+    * and day ints). Null when the key shape isn't integral. */
   val fastLong: LongHashSet = {
-    val eligible = arity == 1 &&
-      (keyStorageTypes.head == LongType || keyStorageTypes.head == IntegerType ||
-        keyStorageTypes.head == ShortType || keyStorageTypes.head == ByteType)
+    val eligible = single != null && (keyTypes.head match {
+      case LongType | IntegerType | ShortType | ByteType |
+          TimestampType | TimestampNTZType | DateType => true
+      case _ => false
+    })
     if (!eligible) null
     else new LongHashSet(single.iterator.collect {
       case n: java.lang.Number => n.longValue
@@ -2648,12 +2480,12 @@ private[sources] final class DvLookup(
     * primitive path never sees nulls). */
   val nullKeyDeleted: Boolean = single != null && single.contains(null)
   private val multi: Set[InternalRow] =
-    if (arity == 1) null
+    if (single != null) null
     else {
-      // driver-side build: project each normalized key tuple into its
-      // UnsafeRow image once; .copy() detaches from the reused buffer
+      // one-time build: project each key tuple into its UnsafeRow image
+      // once; .copy() detaches from the reused buffer
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(keyStorageTypes.toArray)
+        .create(keyTypes.toArray)
       keys.iterator
         .map(k => proj(new GenericInternalRow(k.toArray)).copy(): InternalRow)
         .toSet
@@ -2662,7 +2494,64 @@ private[sources] final class DvLookup(
   def isSingle: Boolean = single != null
   def containsSingle(v: Any): Boolean = single.contains(v)
   /** One probe per reader: owns a reusable input row + projection. */
-  def newProbe(): DvProbe = new DvProbe(keyStorageTypes, multi)
+  def newProbe(): DvProbe = new DvProbe(keyTypes, multi)
+}
+
+private[sources] object DvLookup {
+  /** The one decoder of deletion-vector key files, on the driver and on
+    * executors alike: each DV path (a parquet directory or one file) is
+    * read whole through Spark's vectorized reader at the TABLE's key
+    * types, so an INT96 or millis timestamp, a decimal or a narrow int
+    * lands in exactly the value space the scan probes with. Values are
+    * copied out of the reused batch (strings cloned). `conf` must carry
+    * the reader's SQL settings ([[SnapshotScan.readerHadoopConf]]). */
+  def decode(
+      deletes: Seq[String], keyCols: Seq[String], keyTypes: Seq[DataType],
+      conf: Configuration): DvLookup = {
+    // binary and nested values would compare by the WRONG equality
+    // against the readers' probe values — deleted rows would silently
+    // resurface; refuse instead
+    keyCols.zip(keyTypes).foreach {
+      case (c, t @ (BinaryType | _: StructType | _: ArrayType | _: MapType)) =>
+        throw new UnsupportedOperationException(
+          s"graft-snapshot: unsupported deletion-vector key type ${t.simpleString} " +
+            s"for '$c' (supported: integral/floating/boolean/string/timestamp/date/" +
+            "decimal keys)")
+      case _ =>
+    }
+    val parts: Seq[org.apache.hadoop.fs.FileStatus] = deletes.flatMap { d =>
+      val p = new Path(d)
+      val fs = p.getFileSystem(conf)
+      val st = fs.getFileStatus(p)
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(p).toSeq
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    }
+    require(parts.nonEmpty, s"no DV key files under ${deletes.mkString(", ")}")
+    val schemaJson =
+      StructType(keyCols.zip(keyTypes).map { case (n, t) => StructField(n, t) }).json
+    val keys = scala.collection.mutable.HashSet.empty[Seq[Any]]
+    parts.foreach { st =>
+      val reader =
+        new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
+          /* useOffHeap = */ false, /* capacity = */ 4096)
+      try {
+        SnapshotScan.initVectorizedReader(
+          reader, st.getPath.toString, 0L, st.getLen, schemaJson, conf)
+        while (reader.nextKeyValue()) {
+          val row = reader.getCurrentValue.asInstanceOf[InternalRow]
+          keys += keyTypes.indices.map { i =>
+            if (row.isNullAt(i)) null
+            else row.get(i, keyTypes(i)) match {
+              case u: UTF8String => u.clone() // the batch's buffer is reused
+              case v             => v
+            }
+          }
+        }
+      } finally reader.close()
+    }
+    new DvLookup(keys.toSet, keyTypes)
+  }
 }
 
 /** Reader-local composite-key probe: fills a reused GenericInternalRow,
@@ -2717,16 +2606,10 @@ private[sources] final class SnapshotReaderFactory(
     val dv: DvLookup = dvResolver.map(_.lookup(p.dvClass)).orNull
     val kc = if (dv == null) Nil else keyCols
     val kt = if (dv == null) Nil else keyTypes
-    // self-contained row groups decode through the VECTORIZED reader
-    // even on the row path (DV probe per emitted row — ~10x the
-    // record-assembly reader); only schema-evolution gaps fall back to
-    // the Group reader, which fills absent columns with null
+    // the VECTORIZED decoder serves the row path too (DV probe per
+    // emitted row); it null-fills columns this file predates
     val decoded: PartitionReader[InternalRow] =
-      if (p.selfContained)
-        new SnapshotVectorRowReader(
-          p, required, kc, kt, dv, conf.conf, mx)
-      else
-        new SnapshotPartitionReader(p, required, kc, dv, conf.conf, mx)
+      new SnapshotVectorRowReader(p, required, kc, kt, dv, conf.conf, mx)
     // EXISTS_DEFAULT substitution (`ADD COLUMN ... DEFAULT`): THIS
     // file predates the column, so the decoder's null becomes the
     // recorded default — one codegen'd projection per slice
@@ -2780,10 +2663,10 @@ private[sources] final class SnapshotReaderFactory(
 
 /** Row-emitting reader over the VECTORIZED decoder: batches decode
   * through Spark's parquet kernel, rows stream out one at a time with
-  * the deletion-vector probe applied per row — the DV path at decode
-  * speed instead of parquet-mr record-assembly speed. Used whenever
-  * the row group carries every wanted column; a codegen'd projection
-  * drops the DV key columns the query didn't ask for. */
+  * the deletion-vector probe applied per row. Serves every row-path
+  * read: columns the file lacks (schema evolution) read null, narrow
+  * physical types widen to the requested type, and a codegen'd
+  * projection drops the DV key columns the query didn't ask for. */
 private[sources] final class SnapshotVectorRowReader(
     partition: SnapshotInputPartition,
     required: StructType,
@@ -3082,183 +2965,4 @@ private[sources] final class SnapshotDvColumnarReader(
     reader.close()
     outVecs.foreach(_.close())
   }
-}
-
-/** Row-by-row parquet reader over one part file: projection-pruned at
-  * the parquet layer, deletion-vector keys filtered before the row is
-  * materialized. Columns the file lacks (schema evolution) read null. */
-private[sources] final class SnapshotPartitionReader(
-    partition: SnapshotInputPartition,
-    required: StructType,
-    keyCols: Seq[String],
-    dv: DvLookup, // null = no deletion vectors; pre-built, broadcast-shared
-    conf: Configuration,
-    metrics: ScanTaskMetrics = null)
-    extends PartitionReader[InternalRow] {
-
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    if (metrics == null) Array.empty else metrics.values
-
-  private val path = new Path(partition.file)
-  // projection = required columns ∪ DV key columns, restricted to what
-  // THIS file carries (evolution: absent columns stay null)
-  private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-  private val wantDv = dv != null
-  // logical → this file's physical spelling (rename mapping)
-  private def phys(n: String): String = partition.renameMap.getOrElse(n, n)
-  private val wanted: Seq[String] =
-    (required.fieldNames.toSeq ++ (if (wantDv) keyCols else Nil)).distinct
-  private val present: Seq[String] = wanted.filter(n => fileSchema.containsField(phys(n)))
-  private val projection: MessageType = new MessageType(
-    fileSchema.getName,
-    present.map(n => fileSchema.getType(fileSchema.getFieldIndex(phys(n)))).asJava)
-  // a file carrying NONE of the wanted columns (pure schema evolution)
-  // still contributes this row group's count as all-null rows;
-  // parquet-mr rejects an empty projection group, so that case skips
-  // the reader
-  private val reader: ParquetReader[Group] =
-    if (present.isEmpty) null
-    else {
-      val c = new Configuration(conf)
-      c.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-      ParquetReader.builder(new GroupReadSupport(), path).withConf(c)
-        .withFileRange(partition.start, partition.start + partition.length)
-        .build()
-    }
-  // engine-written TimestampType columns are INT96 by Spark default
-  // (spark.sql.parquet.outputTimestampType); NTZ and rewritten files
-  // carry INT64 micros — decode per the FILE's physical type
-  private val projInt96: Array[Boolean] = present.indices.map { i =>
-    projection.getType(i).isPrimitive &&
-      projection.getType(i).asPrimitiveType().getPrimitiveTypeName ==
-        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96
-  }.toArray
-  // WIDENED columns (ALTER COLUMN TYPE): the requested type is wide
-  // (long/double) but a pre-widen file's primitive is INT32/FLOAT —
-  // read the narrow physical value and upcast
-  private def projPrim(i: Int, p: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName) =
-    projection.getType(i).isPrimitive &&
-      projection.getType(i).asPrimitiveType().getPrimitiveTypeName == p
-  private val projNarrowInt: Array[Boolean] = present.indices.map(i =>
-    projPrim(i, org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32)).toArray
-  private val projNarrowFloat: Array[Boolean] = present.indices.map(i =>
-    projPrim(i, org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT)).toArray
-
-  private def int96Micros(b: org.apache.parquet.io.api.Binary): Long = {
-    val buf = b.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-  }
-
-  // ---- hot-path plumbing, computed ONCE: the projection schema is the
-  // same for every Group this reader yields, so field-index resolution
-  // (a per-name hash lookup) must never happen per row.
-  private val projIndex: Map[String, Int] = present.zipWithIndex.toMap
-  private val typeByName: Map[String, DataType] =
-    required.fields.map(f => f.name -> f.dataType).toMap
-  private def resolvedType(name: String): DataType =
-    // key columns may be pruned out of `required`; fall back to the
-    // physical primitive (snapshot keys are long/int/string in practice)
-    typeByName.getOrElse(name, {
-      val t = fileSchema.getType(fileSchema.getFieldIndex(phys(name))).asPrimitiveType()
-      t.getPrimitiveTypeName match {
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64  => LongType
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32  => IntegerType
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.DOUBLE => DoubleType
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY => StringType
-        case other => throw new UnsupportedOperationException(
-          s"graft-snapshot: unsupported deletion-vector key type $other for '$name'")
-      }
-    })
-  // per output column: projection index (-1 = absent in this file) + type
-  private val outIdx: Array[Int] =
-    required.fields.map(f => projIndex.getOrElse(f.name, -1))
-  private val outType: Array[DataType] = required.fields.map(_.dataType)
-  // per DV key column: projection index + type
-  private val keyIdx: Array[Int] = keyCols.map(k => projIndex.getOrElse(k, -1)).toArray
-  private val keyType: Array[DataType] = keyCols.map(resolvedType).toArray
-  // single-key fast path avoids the per-row allocation; the lookup
-  // structure itself came pre-built through the broadcast
-  private val singleKeyDv = wantDv && dv.isSingle
-  private val multiProbe: DvProbe = if (wantDv && !dv.isSingle) dv.newProbe() else null
-  private val keyScratch = new Array[Any](keyCols.length)
-
-  private def jvmValue(g: Group, idx: Int, dt: DataType): Any =
-    if (g.getFieldRepetitionCount(idx) == 0) null
-    else dt match {
-      case LongType =>
-        if (projNarrowInt(idx)) g.getInteger(idx, 0).toLong else g.getLong(idx, 0)
-      case IntegerType                      => g.getInteger(idx, 0)
-      case DoubleType =>
-        if (projNarrowFloat(idx)) g.getFloat(idx, 0).toDouble else g.getDouble(idx, 0)
-      case FloatType                        => g.getFloat(idx, 0)
-      case BooleanType                      => g.getBoolean(idx, 0)
-      case StringType                       => g.getString(idx, 0)
-      case TimestampType | TimestampNTZType =>
-        if (projInt96(idx)) int96Micros(g.getInt96(idx, 0))
-        else g.getLong(idx, 0) // INT64 micros
-      case DateType                         => g.getInteger(idx, 0) // int32 days
-      case BinaryType                       => g.getBinary(idx, 0).getBytes
-      case other =>
-        throw new UnsupportedOperationException(
-          s"graft-snapshot: unsupported column type $other " +
-            "(nested/array/map columns are not served by this connector)")
-    }
-
-  // DvLookup stores UTF8String for string keys (the vectorized path's
-  // native form); this fallback path converts at probe time
-  private def keyJvm(g: Group, i: Int): Any = {
-    if (keyIdx(i) < 0) return null
-    jvmValue(g, keyIdx(i), keyType(i)) match {
-      case s: String => UTF8String.fromString(s)
-      case v         => v
-    }
-  }
-
-  private def deleted(g: Group): Boolean =
-    if (singleKeyDv) dv.containsSingle(keyJvm(g, 0))
-    else {
-      var i = 0
-      while (i < keyIdx.length) { keyScratch(i) = keyJvm(g, i); i += 1 }
-      multiProbe.contains(keyScratch)
-    }
-
-  private var current: Group = _
-  private var emptyRemaining: Long = partition.rows
-
-  override def next(): Boolean = {
-    if (reader == null) { // all-null rows; no readable DV keys to match
-      emptyRemaining -= 1
-      return emptyRemaining >= 0
-    }
-    current = reader.read()
-    while (current != null && wantDv && deleted(current)) {
-      if (metrics != null) metrics.dvDeletedRows += 1
-      current = reader.read()
-    }
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    val g = current
-    val vals = new Array[Any](outIdx.length)
-    var i = 0
-    while (i < outIdx.length) {
-      if (outIdx(i) >= 0) {
-        vals(i) = jvmValue(g, outIdx(i), outType(i)) match {
-          case s: String => UTF8String.fromString(s)
-          case v         => v
-        }
-      }
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  override def close(): Unit = if (reader != null) reader.close()
 }

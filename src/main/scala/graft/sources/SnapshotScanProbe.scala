@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
   * walks a Dataset's executed plan and reports each graft snapshot scan
   * with its own counts, so concurrent queries never see each other's.
   * The remaining JVM-wide counters only ever increase and count work
-  * across scans (footer opens, Bloom cache misses, executor-side DV
-  * builds); readers diff them around the work they measure. */
+  * across scans (footer opens, Bloom cache misses); readers diff them
+  * around the work they measure. */
 object SnapshotScanProbe {
 
   /** One graft snapshot scan of an executed plan. `exec` carries the
@@ -60,10 +60,6 @@ object SnapshotScanProbe {
   /** Probe values evaluated by the DISTRIBUTED bloom path (column
     * shards above spark.graft.bloom.driverBytesMax). */
   def bloomDistributedProbes: Long = SnapshotScan.bloomDistributedProbes.get()
-
-  /** Deletion-vector lookups built EXECUTOR-side since JVM start (the
-    * task-side path above spark.graft.dv.driverBytesMax). */
-  def dvTaskSideBuilds: Long = TaskSideDvResolver.taskSideBuilds.get()
 
   /** MV-rewrite probe: the `(tablePath, pinned manifest)` of a plain
     * snapshot batch scan (None for change feeds, row-level group scans,

@@ -358,7 +358,7 @@ private[sources] final class SnapshotMicroBatchStream(
             s.isFile && s.getPath.getName.endsWith(".parquet")).map(_.getPath.toString)
         else Seq(d)
       files.map(f => SnapshotStreamPartition(
-        SnapshotInputPartition(f, 0L, Long.MaxValue, 0L, selfContained = false),
+        SnapshotInputPartition(f, 0L, Long.MaxValue, 0L),
         changeType = "delete", version = v))
     }
   }
@@ -385,20 +385,18 @@ private[sources] final class SnapshotMicroBatchStream(
       m: SnapshotStore.Manifest, v: Long, files: Seq[String],
       changeType: String, dvClassOf: String => Int = _ => 0,
       dvVersion: Long = -1L): Seq[SnapshotStreamPartition] = {
-    val wanted = tableSchema.fieldNames.toSeq ++ m.keyCols
     files.flatMap { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
       try {
         val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
           .map(_.getName).toSet
-        val selfContained = wanted.forall(fields)
         val fills = streamDefaults.collect {
           case (n, value) if !fields(n) => tableSchema.fieldIndex(n) -> value
         }
         r.getFooter.getBlocks.asScala.toSeq.map { b =>
           SnapshotStreamPartition(
             SnapshotInputPartition(f, b.getStartingPos,
-              b.getCompressedSize, b.getRowCount, selfContained,
+              b.getCompressedSize, b.getRowCount,
               dvClass = dvClassOf(f), fillDefaults = fills),
             changeType = changeType, version = v, dvVersion = dvVersion)
         }
@@ -410,28 +408,28 @@ private[sources] final class SnapshotMicroBatchStream(
     * version is COMMITTED past — only IMAGE batches need them (delete
     * batches read delta key FILES directly), so only image versions
     * ever build one: a delete micro-batch never pays the O(|DV|)
-    * driver collect. */
-  private val lookupCache =
-    scala.collection.mutable.Map.empty[Long, Option[org.apache.spark.broadcast.Broadcast[Array[DvLookup]]]]
-  private val keyColsCache = scala.collection.mutable.Map.empty[Long, Seq[String]]
-  private def lookupFor(v: Long): Option[org.apache.spark.broadcast.Broadcast[Array[DvLookup]]] =
+    * driver decode. */
+  private val lookupCache = scala.collection.mutable.Map.empty[Long, Option[StreamDv]]
+  private def lookupFor(v: Long): Option[StreamDv] =
     lookupCache.getOrElseUpdate(v, {
       val m = manifestOf(v)
-      keyColsCache(v) = m.keyCols
       if (m.deletes.isEmpty) None
-      else Some(spark.sparkContext.broadcast(
-        classLayoutOf(v).map { case (idx, _) =>
-          if (idx.isEmpty) null
-          else SnapshotScan.loadDvLookup(spark, m.copy(deletes = idx.map(m.deletes)))
-        }.toArray))
+      else {
+        // decoded and probed at the stream's table types
+        val keyTypes = SnapshotScan.keyTypesOf(tableSchema, m.keyCols)
+        Some(StreamDv(m.keyCols, keyTypes, spark.sparkContext.broadcast(
+          classLayoutOf(v).map { case (idx, _) =>
+            if (idx.isEmpty) null
+            else SnapshotScan.loadDvLookup(spark, idx.map(m.deletes), m.keyCols, keyTypes)
+          }.toArray)))
+      }
     })
   @volatile private var plannedDvVersions: Seq[Long] = Nil
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val versions = plannedDvVersions
     val lookups = versions.flatMap(v => lookupFor(v).map(v -> _)).toMap
-    val keyColsByVersion = versions.map(v => v -> keyColsCache.getOrElse(v, Nil)).toMap
-    new SnapshotStreamReaderFactory(tableSchema, keyColsByVersion, lookups,
+    new SnapshotStreamReaderFactory(tableSchema, lookups,
       new SerializableHadoopConf(SnapshotScan.readerHadoopConf(spark, conf)))
   }
 
@@ -442,10 +440,9 @@ private[sources] final class SnapshotMicroBatchStream(
     val upTo = end.asInstanceOf[SnapshotVersionOffset].v
     lookupCache.filterInPlace { (v, b) =>
       val keep = v > upTo
-      if (!keep) b.foreach(_.unpersist(false))
+      if (!keep) b.foreach(_.lookups.unpersist(false))
       keep
     }
-    keyColsCache.filterInPlace((v, _) => v > upTo)
     // manifest/file caches: keep upTo itself — it is the predecessor the
     // next batch's classification reads — and drop everything older
     manifestCache.filterInPlace((v, _) => v >= upTo)
@@ -492,46 +489,40 @@ private[sources] final class SnapshotChangeBatch(
   }
 }
 
+/** One version's deletion vectors as the stream's readers probe them:
+  * the key columns, their table types, and the per-class lookups. */
+private[sources] final case class StreamDv(
+    keyCols: Seq[String], keyTypes: Seq[DataType],
+    lookups: org.apache.spark.broadcast.Broadcast[Array[DvLookup]])
+
 private[sources] final case class SnapshotStreamPartition(
     base: SnapshotInputPartition, changeType: String, version: Long,
     dvVersion: Long = -1L) extends InputPartition
 
-/** Wraps the batch readers and appends (_change_type, _commit_version).
-  * Snapshot batches reuse the vectorized/Group row readers (the same
-  * DV semantics as a batch read of that version); delete batches read
-  * the delta key FILES through the Group reader's schema-evolution
-  * path — key columns populate, everything else reads null. */
+/** Wraps the batch row reader and appends (_change_type,
+  * _commit_version). Snapshot and remove batches apply the same DV
+  * semantics as a batch read of that version; delete batches read the
+  * delta key FILES under the table schema — key columns populate,
+  * every column a key file lacks reads null. */
 private[sources] final class SnapshotStreamReaderFactory(
     tableSchema: StructType,
-    keyColsByVersion: Map[Long, Seq[String]],
-    dvByVersion: Map[Long, org.apache.spark.broadcast.Broadcast[Array[DvLookup]]],
+    dvByVersion: Map[Long, StreamDv],
     conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SnapshotStreamPartition]
-    val inner: PartitionReader[InternalRow] = p.changeType match {
-      case "delete" =>
-        // (remove batches are full-row reads and take the default arm)
-        // delta DV file: whole file, evolution path fills non-keys null
-        new SnapshotPartitionReader(p.base, tableSchema, Nil, null, conf.conf)
-      case _ =>
-        val keyCols = keyColsByVersion.getOrElse(p.dvVersion, Nil)
-        val dv = dvByVersion.get(p.dvVersion)
-          .map(_.value.apply(p.base.dvClass)).orNull
-        if (p.base.selfContained && dv != null) {
-          val keyTypes = keyCols.map(n =>
-            tableSchema.find(_.name == n).map(_.dataType).getOrElse(LongType))
-          new SnapshotVectorRowReader(p.base, tableSchema, keyCols, keyTypes, dv, conf.conf)
-        } else if (p.base.selfContained) {
-          new SnapshotVectorRowReader(p.base, tableSchema, Nil, Nil, null, conf.conf)
-        } else {
-          new SnapshotPartitionReader(p.base, tableSchema, keyCols, dv, conf.conf)
-        }
-    }
+    // delete batches (a delta DV file, read whole) carry dvVersion -1:
+    // no lookup, no probe
+    val d = dvByVersion.get(p.dvVersion)
+    // a class no DV covers carries null: no probe, no key columns
+    val dv: DvLookup = d.map(_.lookups.value.apply(p.base.dvClass)).orNull
+    val inner: PartitionReader[InternalRow] = new SnapshotVectorRowReader(p.base, tableSchema,
+      if (dv == null) Nil else d.get.keyCols, if (dv == null) Nil else d.get.keyTypes,
+      dv, conf.conf)
     // exists-default substitution for files predating an ADD COLUMN
     // ... DEFAULT (no-op for delete batches: their partitions carry no
-    // fills — DV key rows keep the evolution-path null contract)
+    // fills — DV key rows keep null in every non-key column)
     val filled = SnapshotScan.withDefaultFills(inner, tableSchema, p.base.fillDefaults)
     val meta = new GenericInternalRow(
       Array[Any](UTF8String.fromString(p.changeType), p.version))

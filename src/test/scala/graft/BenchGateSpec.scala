@@ -111,32 +111,48 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.readBaseline(record.take(200), "/data/sf0.1") === Bench.noBaseline)
   }
 
+  // the figures of `record`, as a run hands them to Bench.Record
+  private val fixed = Bench.Record(
+    total = 12.345, nQueries = 4,
+    queries = Seq("a1_agg" -> 0.512, "j1_multikey_join" -> 1.25, "tx_bm25" -> 2.0),
+    errors = Seq("x_bad" -> "AnalysisException"),
+    runs = Map("a1_agg" -> Seq(0.512, 0.301, 0.298), "j1_multikey_join" -> Seq(1.25, 0.9, 0.95)),
+    spreadMax = 1.056, controlSec = 3.21, controlScale = 1.0,
+    gate = BenchGate.Verdict(Nil, medianRatio = 1.02, nShared = 3, corpusSlowdown = false),
+    regressions = Seq("tx_bm25" -> ((2.0, 1.1))),
+    cleared = Map.empty, reruns = Map("tx_bm25" -> 1.05),
+    boot = Seq("pipeline_bootstrap_sec" -> 4.0, "materialize_gold_sec" -> 1.0,
+      "catalog_bootstrap_sec" -> 0.5),
+    fixtures = Seq("dt_fixture" -> 0.7), sf = "/data/sf0.1")
+
+  // a full run's printed line for `fixed`
+  private val fullLine =
+    """{"metric":"total","value":12.345,"unit":"sec","n_queries":4,"n_errors":1,""" +
+    """"queries":{"j1_multikey_join":0.950,"a1_agg":0.301},"queries_stat":"median_of_3",""" +
+    """"spread_max":1.056,"control_sec":3.210,"median_ratio_vs_prev":1.020,""" +
+    """"n_regressions":1,"corpus_slowdown":false,"pipeline_bootstrap_sec":4.000,""" +
+    """"materialize_gold_sec":1.000,"catalog_bootstrap_sec":0.500,""" +
+    """"full":"BENCH_FULL.json","sf":"/data/sf0.1"}"""
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val lineQueries = Seq("j1_multikey_join", "a1_agg", "absent")
+
   test("a record written from fixed values keeps every key, order and 3-decimal number") {
-    val r = Bench.Record(
-      total = 12.345, nQueries = 4,
-      queries = Seq("a1_agg" -> 0.512, "j1_multikey_join" -> 1.25, "tx_bm25" -> 2.0),
-      errors = Seq("x_bad" -> "AnalysisException"),
-      runs = Map("a1_agg" -> Seq(0.512, 0.301, 0.298), "j1_multikey_join" -> Seq(1.25, 0.9, 0.95)),
-      spreadMax = 1.056, controlSec = 3.21, controlScale = 1.0,
-      gate = BenchGate.Verdict(Nil, medianRatio = 1.02, nShared = 3, corpusSlowdown = false),
-      regressions = Seq("tx_bm25" -> ((2.0, 1.1))),
-      cleared = Map.empty, reruns = Map("tx_bm25" -> 1.05),
-      boot = Seq("pipeline_bootstrap_sec" -> 4.0, "materialize_gold_sec" -> 1.0,
-        "catalog_bootstrap_sec" -> 0.5),
-      fixtures = Seq("dt_fixture" -> 0.7), sf = "/data/sf0.1")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val text = mapper.writeValueAsString(r.full)
+    val text = mapper.writeValueAsString(fixed.full)
     assert(text === record)
     assert(Bench.readBaseline(text, "/data/sf0.1") === Bench.readBaseline(record, "/data/sf0.1"))
-    assert(mapper.writeValueAsString(r.line(Seq("j1_multikey_join", "a1_agg", "absent"))) ===
-      """{"metric":"total","value":12.345,"unit":"sec","n_queries":4,"n_errors":1,""" +
-      """"queries":{"j1_multikey_join":0.950,"a1_agg":0.301},"queries_stat":"median_of_3",""" +
-      """"spread_max":1.056,"control_sec":3.210,"median_ratio_vs_prev":1.020,""" +
-      """"n_regressions":1,"corpus_slowdown":false,"pipeline_bootstrap_sec":4.000,""" +
-      """"materialize_gold_sec":1.000,"catalog_bootstrap_sec":0.500,""" +
-      """"full":"BENCH_FULL.json","sf":"/data/sf0.1"}""")
+    assert(mapper.writeValueAsString(fixed.line(lineQueries, Bench.recordFile(None))) ===
+      fullLine)
     // every headline query in the printed line still fits the tail window
-    val all = r.copy(runs = Bench.headline.map(_ -> Seq(12.345, 12.345, 12.345)).toMap)
-    assert(mapper.writeValueAsString(all.line(Bench.headline)).length < 2000)
+    val all = fixed.copy(runs = Bench.headline.map(_ -> Seq(12.345, 12.345, 12.345)).toMap)
+    assert(mapper.writeValueAsString(
+      all.line(Bench.headline, Bench.recordFile(None))).length < 2000)
+  }
+
+  test("a subset record's printed line names the file the subset run wrote") {
+    val file = Bench.recordFile(Some(Set("j1_multikey_join", "a1_agg")))
+    assert(file === "BENCH_SUBSET.json")
+    assert(mapper.writeValueAsString(fixed.line(lineQueries, file)) ===
+      fullLine.replace(""""full":"BENCH_FULL.json"""", """"full":"BENCH_SUBSET.json""""))
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSuite
 import graft.store.SnapshotStore
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** BIG-DV planning path: above `spark.graft.dv.driverBytesMax` the
@@ -47,10 +48,9 @@ class DvTaskSideSpec extends SparkSuite {
     }
   }
 
-  test("a DV key type outside the raw-primitive set falls back to broadcast, not a failed scan") {
+  test("a decimal-keyed DV above the byte cap resolves task-side") {
     val table = fresh("dvtask-dec")
-    // decimal(25, 3): FIXED_LEN_BYTE_ARRAY physical — the task-side
-    // raw reader cannot probe it in the right value space
+    // decimal(25, 3): FIXED_LEN_BYTE_ARRAY physical
     val rows = spark.range(0, 500)
       .selectExpr("id", "CAST(CAST(id AS STRING) || '.125' AS DECIMAL(25,3)) AS amt")
     SnapshotStore.commit(rows, table)
@@ -61,57 +61,76 @@ class DvTaskSideSpec extends SparkSuite {
     assert(want.getLong(0) === 400L)
 
     withTaskSideDv {
-      val f0 = TaskSideDvResolver.typeFallbacks.get()
       val b0 = TaskSideDvResolver.taskSideBuilds.get()
       val q = read()
       val desc = SnapshotScanProbe.scans(q.filter(col("id") >= 0)).head.description
-      assert(!desc.contains("dvTaskSide="),
-        "the scan must NOT claim task-side mode for an unsupported key type")
+      assert(desc.contains("dvTaskSide="),
+        "a decimal-keyed DV above the byte cap must resolve task-side")
       assert(q.agg(count(lit(1)), sum("id")).collect()(0) === want,
-        "above the byte cap a decimal-keyed DV must read oracle-exact via broadcast")
-      assert(TaskSideDvResolver.typeFallbacks.get() > f0,
-        "the type-gap fallback counter must move")
-      assert(TaskSideDvResolver.taskSideBuilds.get() === b0,
-        "no executor may attempt the raw-primitive DV read")
+        "task-side and broadcast DV paths must agree on a decimal key")
+      assert(TaskSideDvResolver.taskSideBuilds.get() > b0,
+        "the executor-side build counter must move")
     }
   }
 
-  test("task-side parity across key shapes: string, timestamp, composite") {
-    val table = fresh("dvtask-shapes")
+  test("task-side parity across key shapes: string, timestamp, INT96 timestamp, short, composite") {
+    def dvTable(tag: String, rows: DataFrame, keys: Seq[String], cond: Column): String = {
+      val t = fresh(tag)
+      SnapshotStore.commit(rows, t)
+      SnapshotStore.deleteCommit(spark, t, keys, cond)
+      t
+    }
+    // the store's own anti-join read is the oracle
+    def assertParity(t: String, shape: String, sumCol: String): Unit = {
+      val want = SnapshotStore.read(spark, t).agg(count(lit(1)), sum(sumCol)).collect()(0)
+      withTaskSideDv {
+        val q = spark.read.format("graft-snapshot").option("path", t).load()
+        assert(SnapshotScanProbe.scans(q.filter(col(sumCol).isNotNull)).head.description
+          .contains("dvTaskSide="), s"$shape-key DV must resolve task-side")
+        assert(q.agg(count(lit(1)), sum(sumCol)).collect()(0) === want,
+          s"$shape-key DV must resolve identically task-side")
+      }
+    }
     val orders = graft.sources.Tables.orders(spark, sf())
-    SnapshotStore.commit(orders, table)
-    // string key
-    SnapshotStore.deleteCommit(spark, table, Seq("o_orderpriority"),
-      col("o_orderpriority") === "1-URGENT")
-    val wantStr = SnapshotStore.read(spark, table).count()
-    withTaskSideDv {
-      assert(spark.read.format("graft-snapshot").option("path", table).load().count()
-        === wantStr, "string-key DV must resolve identically task-side")
-    }
 
-    // timestamp key (micros long in both value spaces)
-    val t2 = fresh("dvtask-ts")
-    SnapshotStore.commit(orders, t2)
+    assertParity(dvTable("dvtask-str", orders, Seq("o_orderpriority"),
+      col("o_orderpriority") === "1-URGENT"), "string", "o_orderkey")
+
+    // TimestampNTZ key: INT64 micros
     val cut = orders.select(min("o_orderdate")).head().get(0) // NTZ → LocalDateTime
-    SnapshotStore.deleteCommit(spark, t2, Seq("o_orderdate"),
-      col("o_orderdate") === lit(cut))
-    val wantTs = SnapshotStore.read(spark, t2).count()
-    withTaskSideDv {
-      assert(spark.read.format("graft-snapshot").option("path", t2).load().count()
-        === wantTs, "timestamp-key DV must resolve identically task-side")
-    }
+    assertParity(dvTable("dvtask-ts", orders, Seq("o_orderdate"),
+      col("o_orderdate") === lit(cut)), "timestamp", "o_orderkey")
 
-    // composite key
-    val t3 = fresh("dvtask-comp")
-    SnapshotStore.commit(orders, t3)
-    SnapshotStore.deleteCommit(spark, t3, Seq("o_custkey", "o_orderstatus"),
-      pmod(col("o_custkey"), lit(5)) === 1 && col("o_orderstatus") === "O")
-    val wantComp = SnapshotStore.read(spark, t3)
-      .agg(count(lit(1)), sum("o_custkey")).collect()(0)
-    withTaskSideDv {
-      assert(spark.read.format("graft-snapshot").option("path", t3).load()
-        .agg(count(lit(1)), sum("o_custkey")).collect()(0) === wantComp,
-        "composite-key DV must resolve identically task-side")
+    // TimestampType key written as INT96 (Spark's legacy default)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    val t96 =
+      try dvTable("dvtask-int96",
+        spark.range(0, 500).selectExpr("id", "timestamp_seconds(1700000000 + id * 3600) AS ts"),
+        Seq("ts"), pmod(col("id"), lit(5)) === 2)
+      finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    val dvFile = {
+      val d = new org.apache.hadoop.fs.Path(SnapshotStore.manifest(
+        spark, t96, SnapshotStore.currentVersion(spark, t96).get).deletes.head)
+      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(d).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
     }
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        dvFile, spark.sparkContext.hadoopConfiguration))
+    try {
+      val schema = footer.getFileMetaData.getSchema
+      assert(schema.getType(schema.getFieldIndex("ts")).asPrimitiveType
+        .getPrimitiveTypeName.name === "INT96", "the DV key file must carry INT96")
+    } finally footer.close()
+    assertParity(t96, "INT96 timestamp", "id")
+
+    // ShortType key: INT32 annotated INT(16)
+    assertParity(dvTable("dvtask-short",
+      spark.range(0, 500).selectExpr("id", "CAST(id % 100 AS SMALLINT) AS s"),
+      Seq("s"), pmod(col("s"), lit(7)) === 3), "short", "id")
+
+    assertParity(dvTable("dvtask-comp", orders, Seq("o_custkey", "o_orderstatus"),
+      pmod(col("o_custkey"), lit(5)) === 1 && col("o_orderstatus") === "O"),
+      "composite", "o_custkey")
   }
 }
