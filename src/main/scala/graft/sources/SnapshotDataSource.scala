@@ -16,6 +16,7 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.{Map => JMap}
@@ -41,21 +42,27 @@ import scala.jdk.CollectionConverters._
   *  - Column pruning is real: the pruned schema becomes the parquet
   *    read projection, so unrequested columns are never decoded. Every
   *    row group decodes through Spark's `VectorizedParquetRecordReader`
-  *    ([[SnapshotColumnarReader]], [[SnapshotVectorRowReader]]), which
-  *    also null-fills columns a file predates and widens narrow types.
+  *    ([[SnapshotBatchDecoder]]), which also widens narrow types, fills
+  *    a column a file predates with its EXISTS_DEFAULT (null without
+  *    one), and serves the `_file` metadata column as a constant vector.
   *  - Filter pushdown is used for FILE SKIPPING against footer min/max
   *    statistics; every filter is also returned as a residual, so Spark
   *    re-applies it row-level — skipping can only prune, never corrupt.
-  *  - Deletion vectors apply in the reader against an O(deleted-keys)
+  *  - Deletion vectors apply in the decoder against an O(deleted-keys)
   *    key set resolved at planning (the same bound as `readVersion`'s
   *    broadcast anti join build side).
-  *  - One [[InputPartition]] per ROW GROUP (midpoint-convention byte
-  *    ranges): a snapshot written as few large files still fans out,
-  *    and stats skipping prunes at row-group precision.
+  *  - Scans are columnar ([[SnapshotBatchReader]]) unless a projected
+  *    column is nested, or deletion vectors are live and a projected
+  *    column is outside the types a compacted batch copies; those scans
+  *    read rows ([[SnapshotRowReader]]) from the same decoder.
+  *  - Row groups are bin-packed into task-sized partitions
+  *    ([[SnapshotScan.packPartitions]]): a snapshot written as few large
+  *    files still fans out, and stats skipping prunes at row-group
+  *    precision.
   *
-  * Unsupported (by design, validated): nested/array/map columns in the
-  * pruned projection, and writes — commits go through the store's CAS
-  * publish ([[SnapshotStore.commit]]), not INSERT.
+  * Writes (`INSERT INTO`/`OVERWRITE`, the streaming sink, the row-level
+  * commands) each publish one new manifest through the store's CAS
+  * marker protocol ([[SnapshotWrite]]).
   *
   * Reference analog: the weather warehouse's Athena tables are plain
   * Glue-catalog parquet locations (`create_views.sql:6`); this connector
@@ -809,39 +816,16 @@ private[sources] object SnapshotScan {
     }
   }
 
-  /** EXISTS_DEFAULT substitution around a row reader: each (ordinal,
-    * catalyst value) in `fills` replaces the null the null-filling
-    * decoder emitted for a column THIS file predates — one codegen'd
-    * projection per reader, identity passthrough when empty. Shared by
-    * the batch scan and the change-feed factories (both decode
-    * `required`-shaped rows). */
-  def withDefaultFills(
-      decoded: PartitionReader[InternalRow],
-      required: StructType,
-      fills: Seq[(Int, Any)]): PartitionReader[InternalRow] =
-    if (fills.isEmpty) decoded
-    else {
-      val byOrd = fills.toMap
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-        required.fields.toSeq.zipWithIndex.map { case (f, i) =>
-          byOrd.get(i) match {
-            case Some(v) =>
-              org.apache.spark.sql.catalyst.expressions.Literal(v, f.dataType)
-                : org.apache.spark.sql.catalyst.expressions.Expression
-            case None =>
-              org.apache.spark.sql.catalyst.expressions.BoundReference(
-                i, f.dataType, f.nullable)
-          }
-        })
-      new PartitionReader[InternalRow] {
-        override def next(): Boolean = decoded.next()
-        override def get(): InternalRow = proj(decoded.get())
-        override def close(): Unit = decoded.close()
-        override def currentMetricsValues()
-            : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-          decoded.currentMetricsValues()
-      }
-    }
+  /** `s` with each field's EXISTS_DEFAULT metadata taken from
+    * `defaults` (name → folded-literal SQL) and dropped from every other
+    * field: the decoder reads a column a file lacks as its default if
+    * the field carries one, and as null otherwise. */
+  def withExistsDefaults(s: StructType, defaults: Map[String, String]): StructType =
+    StructType(s.fields.map { f =>
+      val b = new MetadataBuilder().withMetadata(f.metadata).remove("EXISTS_DEFAULT")
+      defaults.get(f.name).foreach(b.putString("EXISTS_DEFAULT", _))
+      f.copy(metadata = b.build())
+    })
 
   /** True iff `m` IS `tablePath`'s current head manifest. Gates
     * constraint-contradiction pruning: the `_constraints` file is
@@ -1563,11 +1547,15 @@ private[sources] object SnapshotScan {
   /** Initialize a VectorizedParquetRecordReader over one row-group byte
     * range with the given requested Spark schema — the split-based path
     * that keeps the session's Hadoop configuration (the (path, columns)
-    * overload builds a bare Configuration internally). */
+    * overload builds a bare Configuration internally). `constants`
+    * columns (valued by `constRow`) follow the decoded ones in every
+    * batch, as constant vectors. */
   def initVectorizedReader(
       reader: org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader,
       file: String, start: Long, length: Long,
-      requestedSchemaJson: String, conf: Configuration): Unit = {
+      requestedSchemaJson: String, conf: Configuration,
+      constants: StructType = new StructType(),
+      constRow: InternalRow = InternalRow.empty): Unit = {
     val c = new Configuration(conf)
     c.set("org.apache.spark.sql.parquet.row.requested_schema", requestedSchemaJson)
     c.set("parquet.read.support.class",
@@ -1580,14 +1568,12 @@ private[sources] object SnapshotScan {
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       c, new org.apache.hadoop.mapreduce.TaskAttemptID())
     reader.initialize(split, ctx)
-    reader.initBatch(new StructType(), InternalRow.empty)
+    reader.initBatch(constants, constRow)
   }
 
-  /** Column types the DV-columnar path can PROBE from a decoded vector
-    * and COPY when compacting a batch with deleted rows — the same
-    * value space [[DvLookup]] stores (timestamps as micros longs, dates
-    * as day ints, strings as UTF8String). Anything else sends the scan
-    * to the row reader instead of risking wrong equality. */
+  /** Column types [[SnapshotBatchReader]] can COPY when compacting a
+    * batch with deleted rows. A DV scan projecting anything else reads
+    * rows instead. */
   def dvColumnarType(dt: DataType): Boolean = dt match {
     case BooleanType | ByteType | ShortType | IntegerType | DateType |
         LongType | TimestampType | TimestampNTZType | FloatType | DoubleType |
@@ -1780,7 +1766,7 @@ private[sources] final class SnapshotScan(
     * partition ships to executors. Also counts the files this scan
     * dropped by CHECK constraint and by partition path. */
   private[sources] lazy val (keptWithStats: Seq[(SnapshotInputPartition, Map[String, (Any, Any)])],
-      totalGroups: Int, totalFiles: Int, allColumnsPresent: Boolean,
+      totalGroups: Int, totalFiles: Int,
       constraintPrunedFiles: Int, partitionPrunedFiles: Int) = {
     // PARTITION-TRANSFORM pruning runs FIRST — pure path arithmetic on
     // the file list, before the Bloom index or the stats sidecar is
@@ -1833,24 +1819,14 @@ private[sources] final class SnapshotScan(
       else
         try graft.store.FileStats.read(spark, m.statsFile).entries
         catch { case _: java.io.IOException => Map.empty }
-    var allPresent = true
     var total = 0
-    // projected columns plus the DV keys the reader probes
+    // projected columns plus the DV keys the decoder probes
     val wanted = (physical.fieldNames.toSeq ++
       (if (m.deletes.isEmpty) Nil else m.keyCols)).distinct
     // column rename mapping: physical alias → logical name, and the
     // per-file reverse binding (a file written before the rename
     // carries the OLD physical name — the reader must request that)
     val aliasOf: Map[String, String] = graft.store.ColumnMapping.aliasOf(m)
-    // EXISTS_DEFAULT columns the projection asks for (`ADD COLUMN ...
-    // DEFAULT`): resolved ONCE to catalyst values; each file missing
-    // the column physically gets a per-ordinal fill its reader applies
-    // (post-ALTER files are physically complete, nulls included)
-    val scanDefaults: Seq[(String, Any)] =
-      graft.store.ColumnMapping.existsDefaults(m).collect {
-        case (n, sql, dt) if physical.fieldNames.contains(n) =>
-          n -> graft.store.ColumnMapping.defaultValueOf(sql, dt)
-      }
     val kept = all.flatMap { fstr =>
       val (blocks, fields) = sidecar.get(fstr) match {
         case Some(e) =>
@@ -1864,7 +1840,6 @@ private[sources] final class SnapshotScan(
       val renameMap: Map[String, String] =
         if (m.renames.isEmpty) Map.empty
         else wanted.flatMap(w => physOf(w).filter(_ != w).map(w -> _)).toMap
-      if (!wanted.forall(n => physOf(n).isDefined)) allPresent = false
       val bucket = if (m.bucketN > 0) SnapshotScan.bucketIdOf(fstr, m.bucketN) else -1
       total += blocks.size
       blocks
@@ -1884,15 +1859,12 @@ private[sources] final class SnapshotScan(
         .map(b => (SnapshotInputPartition(fstr, b.start, b.length, b.rows,
           bucketId = bucket,
           dvClass = if (m.deletes.isEmpty) 0 else dvClassOfFile.getOrElse(fstr, 0),
-          renameMap = renameMap,
-          fillDefaults = scanDefaults.collect {
-            case (n, v) if physOf(n).isEmpty => physical.fieldIndex(n) -> v
-          }),
+          renameMap = renameMap),
           b.stats))
     }
     // totalFiles counts the MANIFEST's files so bloom pruning shows in
     // the files=kept/total description like every other skip
-    (kept, total, allDataFiles.size, allPresent,
+    (kept, total, allDataFiles.size,
       allDataFiles.size - afterChecks.size, afterChecks.size - afterPart.size)
   }
 
@@ -1918,7 +1890,7 @@ private[sources] final class SnapshotScan(
 
   /** Per-ROW-GROUP (start, length, rows, per-column min/max) plus the
     * file's top-level field names — one footer read serves skipping,
-    * splitting, AND the columnar-eligibility check. Stats stay exact:
+    * splitting, AND the per-file rename binding. Stats stay exact:
     * no cross-row-group merge exists anymore (skipping is per group),
     * so there is no lossy envelope to get wrong. */
   private def footerInfo(p: Path): (Seq[SnapshotScan.RowGroupInfo], Set[String]) = {
@@ -1988,16 +1960,8 @@ private[sources] final class SnapshotScan(
   /** Total bytes of the manifest's DV key files — the driver-vs-task-
     * side routing signal, resolved from file statuses only (no key is
     * read to decide). */
-  private lazy val dvBytes: Long = m.deletes.map { d =>
-    val p = new org.apache.hadoop.fs.Path(d)
-    val f = p.getFileSystem(hadoopConf)
-    if (!f.exists(p)) 0L
-    else if (f.getFileStatus(p).isDirectory)
-      f.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum
-    else f.getFileStatus(p).getLen
-  }.sum
+  private lazy val dvBytes: Long =
+    m.deletes.iterator.flatMap(DvLookup.partFiles(_, hadoopConf)).map(_.getLen).sum
 
   /** Whether this scan resolves DVs on the DRIVER (collect+broadcast —
     * the small-delta hot path) or TASK-SIDE (executors read the DV
@@ -2138,22 +2102,19 @@ private[sources] final class SnapshotScan(
   /** Deletion-vector key types, resolved once from the table schema. */
   private lazy val dvKeyTypes: Seq[DataType] = SnapshotScan.keyTypesOf(fullSchema, m.keyCols)
 
-  /** Columnar batches require every file to carry every requested
-    * column and DV key, and flat column types. Live deletion vectors
-    * stay columnar too ([[SnapshotDvColumnarReader]]: probe the key
-    * vectors per batch, pass clean batches through untouched, compact
-    * only batches that contain deleted rows) as long as every column and
-    * key type is in the copyable atomic set — anything else is served
-    * row by row ([[SnapshotVectorRowReader]]; correct for both). */
+  /** Columnar batches ([[SnapshotBatchReader]]) require flat column
+    * types. With live deletion vectors, a batch with deleted rows is
+    * compacted, so every projected column must also be a type the
+    * compaction copies ([[SnapshotScan.dvColumnarType]]). Anything else
+    * reads rows ([[SnapshotRowReader]]) from the same decoder. Missing
+    * columns, exists-defaults and `_file` are the decoder's work and
+    * never decide the mode. */
   private lazy val columnar: Boolean =
-    allColumnsPresent && !hasFileCol &&
-      physical.fields.forall(f => f.dataType match {
-        case _: StructType | _: ArrayType | _: MapType => false
-        case _                                         => true
-      }) &&
-      (m.deletes.isEmpty ||
-        (physical.fields.forall(f => SnapshotScan.dvColumnarType(f.dataType)) &&
-          dvKeyTypes.forall(SnapshotScan.dvColumnarType)))
+    physical.fields.forall(f => f.dataType match {
+      case _: StructType | _: ArrayType | _: MapType => false
+      case _                                         => true
+    }) &&
+      (m.deletes.isEmpty || physical.fields.forall(f => SnapshotScan.dvColumnarType(f.dataType)))
 
   override def description(): String = {
     val files = s"files=${keptGroups.map(_.file).distinct.size}/$totalFiles"
@@ -2254,9 +2215,15 @@ private[sources] final class SnapshotScan(
         Some(new TaskSideDvResolver(dvClassLayout.map(_._1.map(m.deletes)),
           m.keyCols, dvKeyTypes, new SerializableHadoopConf(c)))
       else Some(new BroadcastDvResolver(dvKeysBroadcast))
-    new SnapshotReaderFactory(physical, m.keyCols, dvKeyTypes,
-      resolver, columnar,
-      new SerializableHadoopConf(c), appendFileCol = hasFileCol)
+    // exists-defaults ride the decode schema as field metadata: the
+    // decoder fills them into files that predate the column
+    val defaults = graft.store.ColumnMapping.existsDefaults(m).map(d => d._1 -> d._2).toMap
+    new SnapshotReaderFactory(
+      SnapshotScan.withExistsDefaults(physical, defaults),
+      SnapshotScan.withExistsDefaults(
+        StructType(m.keyCols.zip(dvKeyTypes).map { case (n, t) => StructField(n, t) }), defaults),
+      resolver, columnar, new SerializableHadoopConf(c),
+      constants = if (hasFileCol) StructType(Array(required.fields.last)) else new StructType())
   }
 
   /** SQL-UI observability: how much merge-on-read work the DVs caused. */
@@ -2266,23 +2233,22 @@ private[sources] final class SnapshotScan(
 }
 
 /** One row-group read unit: one row group of one part file
-  * (midpoint-convention byte range). `bucketId` (from the part file's name —
+  * (midpoint-convention byte range), decoded by one
+  * [[SnapshotBatchDecoder]]. `bucketId` (from the part file's name —
   * write task i of a bucketed commit emits `part-<i>-*`) keys
   * storage-partitioned joins; -1 on unbucketed tables. The
   * [[org.apache.spark.sql.connector.read.HasPartitionKey]] value is
   * only consulted when the scan REPORTS KeyGroupedPartitioning, which
-  * it does only for bucketed manifests with every group resolved. */
+  * it does only for bucketed manifests with every group resolved.
+  * `dvClass` picks the partition's deletion-vector lookup. Nothing here
+  * is per-file schema work beyond the rename binding: columns the file
+  * lacks are filled by the decoder from the decode schema. */
 private[sources] final case class SnapshotInputPartition(
     file: String, start: Long, length: Long, rows: Long,
     bucketId: Int = -1, dvClass: Int = 0,
     /** logical → physical column names for THIS file (rename mapping);
       * empty when the file already carries every logical name. */
-    renameMap: Map[String, String] = Map.empty,
-    /** EXISTS_DEFAULT fills for THIS file: (output ordinal, catalyst
-      * value) for each projected column the file predates (`ADD COLUMN
-      * ... DEFAULT`) — the reader substitutes the value where the
-      * null-filling decoder would emit null. */
-    fillDefaults: Seq[(Int, Any)] = Nil)
+    renameMap: Map[String, String] = Map.empty)
     extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](bucketId))
 }
@@ -2344,11 +2310,10 @@ private[sources] final case class SnapshotPackedPartition(
 private[sources] final class SnapshotChainedReader[T](
     slices: Array[SnapshotInputPartition],
     mk: SnapshotInputPartition => PartitionReader[T],
-    metrics: ScanTaskMetrics = null)
+    metrics: ScanTaskMetrics)
     extends PartitionReader[T] {
   override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    if (metrics == null) Array.empty else metrics.values
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = metrics.values
   private var i = 0
   private var cur: PartitionReader[T] = null
   override def next(): Boolean = {
@@ -2502,31 +2467,16 @@ private[sources] object DvLookup {
     * executors alike: each DV path (a parquet directory or one file) is
     * read whole through Spark's vectorized reader at the TABLE's key
     * types, so an INT96 or millis timestamp, a decimal or a narrow int
-    * lands in exactly the value space the scan probes with. Values are
-    * copied out of the reused batch (strings cloned). `conf` must carry
-    * the reader's SQL settings ([[SnapshotScan.readerHadoopConf]]). */
+    * lands in the value space the scan probes with. Values are taken by
+    * the probe's own [[keyGetter]]s, which also refuse a key type the
+    * probe cannot read before a byte is read; strings are cloned out of
+    * the reused batch. `conf` must carry the reader's SQL settings
+    * ([[SnapshotScan.readerHadoopConf]]). */
   def decode(
       deletes: Seq[String], keyCols: Seq[String], keyTypes: Seq[DataType],
       conf: Configuration): DvLookup = {
-    // binary and nested values would compare by the WRONG equality
-    // against the readers' probe values — deleted rows would silently
-    // resurface; refuse instead
-    keyCols.zip(keyTypes).foreach {
-      case (c, t @ (BinaryType | _: StructType | _: ArrayType | _: MapType)) =>
-        throw new UnsupportedOperationException(
-          s"graft-snapshot: unsupported deletion-vector key type ${t.simpleString} " +
-            s"for '$c' (supported: integral/floating/boolean/string/timestamp/date/" +
-            "decimal keys)")
-      case _ =>
-    }
-    val parts: Seq[org.apache.hadoop.fs.FileStatus] = deletes.flatMap { d =>
-      val p = new Path(d)
-      val fs = p.getFileSystem(conf)
-      val st = fs.getFileStatus(p)
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
+    val getters = keyCols.zip(keyTypes).map { case (c, t) => keyGetter(c, t) }.toArray
+    val parts = deletes.flatMap(partFiles(_, conf))
     require(parts.nonEmpty, s"no DV key files under ${deletes.mkString(", ")}")
     val schemaJson =
       StructType(keyCols.zip(keyTypes).map { case (n, t) => StructField(n, t) }).json
@@ -2534,23 +2484,70 @@ private[sources] object DvLookup {
     parts.foreach { st =>
       val reader =
         new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-          /* useOffHeap = */ false, /* capacity = */ 4096)
+          /* useOffHeap = */ false, SnapshotBatchDecoder.Capacity)
       try {
         SnapshotScan.initVectorizedReader(
           reader, st.getPath.toString, 0L, st.getLen, schemaJson, conf)
-        while (reader.nextKeyValue()) {
-          val row = reader.getCurrentValue.asInstanceOf[InternalRow]
-          keys += keyTypes.indices.map { i =>
-            if (row.isNullAt(i)) null
-            else row.get(i, keyTypes(i)) match {
-              case u: UTF8String => u.clone() // the batch's buffer is reused
-              case v             => v
+        reader.enableReturningBatches()
+        while (reader.nextBatch()) {
+          val b = reader.resultBatch()
+          var r = 0
+          while (r < b.numRows()) {
+            keys += getters.indices.map { i =>
+              val c = b.column(i)
+              if (c.isNullAt(r)) null
+              else getters(i)(c, r) match {
+                case u: UTF8String => u.clone()
+                case v             => v
+              }
             }
+            r += 1
           }
         }
       } finally reader.close()
     }
     new DvLookup(keys.toSet, keyTypes)
+  }
+
+  /** The parquet part files of one DV path (a parquet directory or one
+    * file) — the one listing the scan's byte count, the decoder and the
+    * change feed share. A missing path fails naming it: skipping it
+    * would bring its deleted rows back. */
+  def partFiles(d: String, conf: Configuration): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val p = new Path(d)
+    val fs = p.getFileSystem(conf)
+    val st =
+      try fs.getFileStatus(p)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new java.io.FileNotFoundException(s"graft-snapshot: deletion-vector path $d is missing")
+      }
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** Reads key column `c` of type `t` out of a decoded vector: the one
+    * definition of the key value space, for building the set
+    * ([[DvLookup.decode]]) and for probing it alike (`InternalRow.get`'s:
+    * timestamps as micros longs, dates as day ints, strings as
+    * UTF8String). Binary and nested keys are refused: they would compare
+    * by the wrong equality and deleted rows would come back. */
+  def keyGetter(c: String, t: DataType): (ColumnVector, Int) => Any = t match {
+    case BooleanType => (v, i) => v.getBoolean(i)
+    case ByteType => (v, i) => v.getByte(i)
+    case ShortType => (v, i) => v.getShort(i)
+    case IntegerType | DateType | _: YearMonthIntervalType => (v, i) => v.getInt(i)
+    case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType =>
+      (v, i) => v.getLong(i)
+    case FloatType => (v, i) => v.getFloat(i)
+    case DoubleType => (v, i) => v.getDouble(i)
+    case _: StringType => (v, i) => v.getUTF8String(i)
+    case d: DecimalType => (v, i) => v.getDecimal(i, d.precision, d.scale)
+    case _ => throw new UnsupportedOperationException(
+      s"graft-snapshot: unsupported deletion-vector key type ${t.simpleString} " +
+        s"for '$c' (supported: integral/floating/boolean/string/timestamp/date/" +
+        "decimal keys)")
   }
 }
 
@@ -2580,55 +2577,25 @@ private[sources] final class SerializableHadoopConf(@transient var conf: Configu
   }
 }
 
+/** Builds each task's readers over [[SnapshotBatchDecoder]]: columnar
+  * batches when planning allowed them, rows otherwise. `data` is the
+  * decode schema of the projected data columns (exists-defaults as field
+  * metadata), `keys` the deletion-vector key fields, and `constants`
+  * the `_file` metadata column when the query asked for it. */
 private[sources] final class SnapshotReaderFactory(
-    required: StructType,
-    keyCols: Seq[String],
-    keyTypes: Seq[DataType],
+    data: StructType,
+    keys: StructType,
     dvResolver: Option[DvResolver],
     columnar: Boolean,
     conf: SerializableHadoopConf,
-    appendFileCol: Boolean = false)
+    constants: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val mx = new ScanTaskMetrics
     partition match {
       case SnapshotPackedPartition(slices) =>
-        new SnapshotChainedReader[InternalRow](slices, sliceRowReader(_, mx), mx)
-      case p: SnapshotInputPartition => sliceRowReader(p, mx)
-    }
-  }
-
-  private def sliceRowReader(
-      p: SnapshotInputPartition, mx: ScanTaskMetrics): PartitionReader[InternalRow] = {
-    // the partition's class index picks its scoped lookup; a class no
-    // DV covers (appended-after-delete files) carries null = no probe,
-    // and the readers must then not decode the key columns either
-    val dv: DvLookup = dvResolver.map(_.lookup(p.dvClass)).orNull
-    val kc = if (dv == null) Nil else keyCols
-    val kt = if (dv == null) Nil else keyTypes
-    // the VECTORIZED decoder serves the row path too (DV probe per
-    // emitted row); it null-fills columns this file predates
-    val decoded: PartitionReader[InternalRow] =
-      new SnapshotVectorRowReader(p, required, kc, kt, dv, conf.conf, mx)
-    // EXISTS_DEFAULT substitution (`ADD COLUMN ... DEFAULT`): THIS
-    // file predates the column, so the decoder's null becomes the
-    // recorded default — one codegen'd projection per slice
-    val inner: PartitionReader[InternalRow] =
-      SnapshotScan.withDefaultFills(decoded, required, p.fillDefaults)
-    if (!appendFileCol) inner
-    else {
-      // `_file` metadata column: a per-partition constant appended as
-      // the scan's last field (Spark places metadata after data cols)
-      val meta = new GenericInternalRow(Array[Any](UTF8String.fromString(p.file)))
-      new PartitionReader[InternalRow] {
-        private val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow()
-        override def next(): Boolean = inner.next()
-        override def get(): InternalRow = joined(inner.get(), meta)
-        override def close(): Unit = inner.close()
-        override def currentMetricsValues()
-            : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-          inner.currentMetricsValues()
-      }
+        new SnapshotChainedReader[InternalRow](slices, p => new SnapshotRowReader(decoder(p, mx)), mx)
+      case p: SnapshotInputPartition => new SnapshotRowReader(decoder(p, mx))
     }
   }
 
@@ -2637,245 +2604,219 @@ private[sources] final class SnapshotReaderFactory(
   // is deliberately unused
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
 
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val mx = new ScanTaskMetrics
     partition match {
       case SnapshotPackedPartition(slices) =>
-        new SnapshotChainedReader[org.apache.spark.sql.vectorized.ColumnarBatch](
-          slices, sliceColumnarReader(_, mx), mx)
-      case p: SnapshotInputPartition => sliceColumnarReader(p, mx)
+        new SnapshotChainedReader[ColumnarBatch](slices, p => new SnapshotBatchReader(decoder(p, mx)), mx)
+      case p: SnapshotInputPartition => new SnapshotBatchReader(decoder(p, mx))
     }
   }
 
-  private def sliceColumnarReader(p: SnapshotInputPartition, mx: ScanTaskMetrics)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    // a class no DV covers (appended-after-delete files) decodes clean;
-    // covered classes probe + compact per batch, still columnar
-    require(p.fillDefaults.isEmpty,
-      "columnar read planned for a file needing an exists-default fill — planning " +
-        "must have disabled columnar (allColumnsPresent) for this scan")
-    val dv: DvLookup = dvResolver.map(_.lookup(p.dvClass)).orNull
-    if (dv == null) new SnapshotColumnarReader(p, required, conf.conf)
-    else new SnapshotDvColumnarReader(p, required, keyCols, keyTypes, dv, conf.conf, mx)
+  private def decoder(p: SnapshotInputPartition, mx: ScanTaskMetrics): SnapshotBatchDecoder = {
+    // the partition's class index picks its scoped lookup; a class no
+    // DV covers (appended-after-delete files) carries null = no probe
+    val dv = dvResolver.map(_.lookup(p.dvClass)).orNull
+    val constRow =
+      if (constants.isEmpty) InternalRow.empty else InternalRow(UTF8String.fromString(p.file))
+    new SnapshotBatchDecoder(p, data, keys, dv, constants, constRow, conf.conf, mx)
   }
 }
 
-/** Row-emitting reader over the VECTORIZED decoder: batches decode
-  * through Spark's parquet kernel, rows stream out one at a time with
-  * the deletion-vector probe applied per row. Serves every row-path
-  * read: columns the file lacks (schema evolution) read null, narrow
-  * physical types widen to the requested type, and a codegen'd
-  * projection drops the DV key columns the query didn't ask for. */
-private[sources] final class SnapshotVectorRowReader(
+/** One row-group slice decoded by Spark's `VectorizedParquetRecordReader`
+  * with the deletion-vector probe applied per batch: the one decoder
+  * behind [[SnapshotBatchReader]] and [[SnapshotRowReader]]. Spark's
+  * reader does the per-file constant work: a column the file lacks reads
+  * its EXISTS_DEFAULT when its `data` field carries one and null
+  * otherwise, narrow physical types widen, and `constants` (valued by
+  * `constRow`) come back as constant vectors. A decoded batch holds the
+  * data columns, then the DV keys `data` lacks, then the constants;
+  * [[outOrds]] picks the output columns by ordinal. */
+private[sources] final class SnapshotBatchDecoder(
     partition: SnapshotInputPartition,
-    required: StructType,
-    keyCols: Seq[String],
-    keyTypes: Seq[DataType],
+    data: StructType,
+    keys: StructType,
     dv: DvLookup,
+    constants: StructType,
+    constRow: InternalRow,
     conf: Configuration,
-    metrics: ScanTaskMetrics = null)
-    extends PartitionReader[InternalRow] {
+    val metrics: ScanTaskMetrics) {
 
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    if (metrics == null) Array.empty else metrics.values
+  private val decoded: StructType =
+    if (dv == null) data
+    else StructType(data.fields ++ keys.fields.filterNot(k => data.fieldNames.contains(k.name)))
 
-  private val wantDv = dv != null
-  // decode projection = required ∪ DV keys (keys may be pruned out of
-  // the query's projection but are still needed for the probe)
-  private val requested: StructType = {
-    val extra = if (wantDv) {
-      keyCols.zip(keyTypes).filterNot { case (n, _) => required.fieldNames.contains(n) }
-    } else Nil
-    StructType(required.fields ++ extra.map { case (n, t) => StructField(n, t) })
-  }
+  /** The output columns: the data columns, then the constants. */
+  val outSchema: StructType = StructType(data.fields ++ constants.fields)
+  /** Each output column's ordinal in a decoded batch. */
+  val outOrds: Array[Int] =
+    (data.indices ++ (decoded.length until decoded.length + constants.length)).toArray
+  /** Whether a decoded batch is the output as it stands (no DV key was
+    * decoded that the output drops). */
+  val servesWhole: Boolean = decoded.length == data.length
+  /** How many leading output columns are decoded data, not constants. */
+  def dataWidth: Int = data.length
+  def probes: Boolean = dv != null
 
   private val reader =
     new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-      /* useOffHeap = */ false, /* capacity = */ 4096)
-  // NO enableReturningBatches: nextKeyValue()/getCurrentValue yield
-  // InternalRows backed by the current batch
+      /* useOffHeap = */ false, SnapshotBatchDecoder.Capacity)
   SnapshotScan.initVectorizedReader(
     reader, partition.file, partition.start, partition.length,
-    SnapshotScan.physicalNames(requested, partition.renameMap).json, conf)
+    SnapshotScan.physicalNames(decoded, partition.renameMap).json, conf, constants, constRow)
+  reader.enableReturningBatches()
 
-  private val keyOrds: Array[Int] = keyCols.map(requested.fieldIndex).toArray
-  private val keyTs: Array[DataType] = keyTypes.toArray
-  private val singleKey = wantDv && dv.isSingle
-  private val multiProbe: DvProbe = if (wantDv && !dv.isSingle) dv.newProbe() else null
-  // codegen'd projection down to the query's columns (identity-cheap
-  // when no extra key columns were decoded)
-  private val project =
-    if (requested.length == required.length) null
-    else org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-      required.fields.map(f =>
-        org.apache.spark.sql.catalyst.expressions.BoundReference(
-          requested.fieldIndex(f.name), f.dataType, nullable = true)
-          : org.apache.spark.sql.catalyst.expressions.Expression))
-
-  private def keyVal(row: InternalRow, i: Int): Any =
-    if (row.isNullAt(keyOrds(i))) null
-    else row.get(keyOrds(i), keyTs(i)) // UTF8String for strings — matches DvLookup
-
-  private val keyScratch = new Array[Any](keyOrds.length)
-  // no-boxing probe for single integral keys (see SnapshotDvColumnarReader)
-  private val fastLong: LongHashSet = if (singleKey) dv.fastLong else null
-  private val fastGetter: (InternalRow, Int) => Long =
+  // ---- the key probe: single integral keys take the no-boxing
+  // LongHashSet (the dominant shape; a per-row box + generic hash is the
+  // merge-on-read CPU tax at scan width), other single keys the flat
+  // set, composite keys the UnsafeRow-image set
+  private val keyOrds: Array[Int] =
+    if (dv == null) Array.empty else keys.fieldNames.map(decoded.fieldIndex)
+  private val keyGetters: Array[(ColumnVector, Int) => Any] =
+    if (dv == null) Array.empty else keys.fields.map(f => DvLookup.keyGetter(f.name, f.dataType))
+  private val fastLong: LongHashSet = if (dv == null) null else dv.fastLong
+  private val fastGetter: (ColumnVector, Int) => Long =
     if (fastLong == null) null
-    else keyTs(0) match {
-      case LongType | TimestampType | TimestampNTZType => (r, o) => r.getLong(o)
-      case IntegerType | DateType                      => (r, o) => r.getInt(o).toLong
-      case ShortType                                   => (r, o) => r.getShort(o).toLong
-      case ByteType                                    => (r, o) => r.getByte(o).toLong
-      case _ => null
+    else keys.head.dataType match {
+      case IntegerType | DateType => (c, i) => c.getInt(i).toLong
+      case ShortType              => (c, i) => c.getShort(i).toLong
+      case ByteType               => (c, i) => c.getByte(i).toLong
+      case _                      => (c, i) => c.getLong(i) // long, timestamp(_ntz)
     }
-  private def deleted(row: InternalRow): Boolean =
-    if (fastLong != null && fastGetter != null) {
-      if (row.isNullAt(keyOrds(0))) dv.nullKeyDeleted
-      else fastLong.contains(fastGetter(row, keyOrds(0)))
-    } else if (singleKey) dv.containsSingle(keyVal(row, 0))
-    else {
+  private val multiProbe: DvProbe = if (dv == null || dv.isSingle) null else dv.newProbe()
+  private val keyScratch = new Array[Any](keyOrds.length)
+
+  private def deletedAt(b: ColumnarBatch, row: Int): Boolean =
+    if (fastLong != null) {
+      val c = b.column(keyOrds(0))
+      if (c.isNullAt(row)) dv.nullKeyDeleted else fastLong.contains(fastGetter(c, row))
+    } else if (multiProbe == null) {
+      val c = b.column(keyOrds(0))
+      dv.containsSingle(if (c.isNullAt(row)) null else keyGetters(0)(c, row))
+    } else {
       var i = 0
-      while (i < keyOrds.length) { keyScratch(i) = keyVal(row, i); i += 1 }
+      while (i < keyOrds.length) {
+        val c = b.column(keyOrds(i))
+        keyScratch(i) = if (c.isNullAt(row)) null else keyGetters(i)(c, row)
+        i += 1
+      }
       multiProbe.contains(keyScratch)
     }
 
-  private var current: InternalRow = _
+  private val survivors = new Array[Int](SnapshotBatchDecoder.Capacity)
+  /** The current decoded batch (its vectors are reused batch to batch). */
+  var batch: ColumnarBatch = _
+  /** How many rows of [[batch]] survive the deletion vectors (> 0). */
+  var live: Int = 0
 
-  override def next(): Boolean = {
-    var has = reader.nextKeyValue()
-    while (has && wantDv && deleted(reader.getCurrentValue.asInstanceOf[InternalRow])) {
-      if (metrics != null) metrics.dvDeletedRows += 1
-      has = reader.nextKeyValue()
+  /** Advance to the next batch with at least one surviving row. */
+  def nextBatch(): Boolean = {
+    while (reader.nextBatch()) {
+      val b = reader.resultBatch()
+      val n = b.numRows()
+      var s = n
+      if (dv != null) {
+        s = 0
+        var i = 0
+        while (i < n) {
+          if (!deletedAt(b, i)) { survivors(s) = i; s += 1 }
+          i += 1
+        }
+        metrics.dvDeletedRows += n - s
+      }
+      if (s > 0) { batch = b; live = s; return true }
     }
-    if (has) current = reader.getCurrentValue.asInstanceOf[InternalRow]
-    has
+    false
   }
 
-  override def get(): InternalRow =
-    if (project == null) current else project(current)
+  /** Row id in [[batch]] of its `j`-th surviving row (source order). */
+  def rowId(j: Int): Int = if (live == batch.numRows()) j else survivors(j)
 
-  override def close(): Unit = reader.close()
+  def close(): Unit = reader.close()
 }
 
-/** Vectorized path: Spark's own VectorizedParquetRecordReader serves
-  * ColumnarBatches straight from the parquet pages — the same decode
-  * kernel the built-in parquet source uses, so the connector pays no
-  * row-materialization tax on the scan side when no deletion vectors
-  * apply. Column pruning is by name through the reader's projection. */
-private[sources] final class SnapshotColumnarReader(
-    partition: SnapshotInputPartition, required: StructType, conf: Configuration)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  private val reader =
-    new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-      /* useOffHeap = */ false, /* capacity = */ 4096)
-  SnapshotScan.initVectorizedReader(
-    reader, partition.file, partition.start, partition.length,
-    SnapshotScan.physicalNames(required, partition.renameMap).json, conf)
-  reader.enableReturningBatches()
-
-  override def next(): Boolean = reader.nextBatch()
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = reader.resultBatch()
-  override def close(): Unit = reader.close()
+private[sources] object SnapshotBatchDecoder {
+  val Capacity = 4096
 }
 
-/** Columnar MERGE-ON-READ: serves ColumnarBatches with deletion
-  * vectors applied, so a table with live DVs keeps whole-stage
-  * columnar processing instead of paying the row-path tax. Per batch:
-  * probe the decoded key vector(s) against the broadcast [[DvLookup]];
-  * a batch with NO deleted rows passes through untouched (the common
-  * case — DVs are small by contract, so almost every 4k-row batch is
-  * clean); a batch with survivors compacts them into reused on-heap
-  * vectors (order-preserving, so reported sort orders stay true); an
-  * all-deleted batch is skipped. Key columns the query didn't project
-  * ride the decode schema after the query's columns and are dropped by
-  * serving only the leading vectors. Gated at planning by
-  * [[SnapshotScan.dvColumnarType]] on every column AND key type —
-  * the copy/probe dispatch below covers exactly that set. */
-private[sources] final class SnapshotDvColumnarReader(
-    partition: SnapshotInputPartition,
-    required: StructType,
-    keyCols: Seq[String],
-    keyTypes: Seq[DataType],
-    dv: DvLookup,
-    conf: Configuration,
-    metrics: ScanTaskMetrics = null)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+/** Columnar output of a [[SnapshotBatchDecoder]], so a table with live
+  * deletion vectors keeps whole-stage columnar processing. A batch whose
+  * rows all survive passes through untouched (the common case — DVs are
+  * small by contract), behind a column-picking shell when the decoder
+  * read a DV key the output drops. A batch with deleted rows compacts
+  * its survivors into reused on-heap vectors, source order kept, so
+  * reported sort orders stay true; constant columns are shared, never
+  * copied. Planning gates the copied types with
+  * [[SnapshotScan.dvColumnarType]]. */
+private[sources] final class SnapshotBatchReader(dec: SnapshotBatchDecoder)
+    extends PartitionReader[ColumnarBatch] {
+  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 
   override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    if (metrics == null) Array.empty else metrics.values
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = dec.metrics.values
 
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val capacity = 4096
-  // decode projection = query columns FIRST, then any key column the
-  // query pruned out (probe still needs it; serving drops it)
-  private val requested: StructType = {
-    val extra = keyCols.zip(keyTypes)
-      .filterNot { case (n, _) => required.fieldNames.contains(n) }
-    StructType(required.fields ++ extra.map { case (n, t) => StructField(n, t) })
-  }
-
-  private val reader =
-    new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-      /* useOffHeap = */ false, capacity)
-  SnapshotScan.initVectorizedReader(
-    reader, partition.file, partition.start, partition.length,
-    SnapshotScan.physicalNames(requested, partition.renameMap).json, conf)
-  reader.enableReturningBatches()
-
-  private val keyOrds: Array[Int] = keyCols.map(requested.fieldIndex).toArray
-  private val keyGetters: Array[(ColumnVector, Int) => Any] =
-    keyTypes.map(getterOf).toArray
-  private val singleKey = dv.isSingle
-  private val multiProbe: DvProbe = if (!singleKey) dv.newProbe() else null
-  private val keyScratch = new Array[Any](keyOrds.length)
-  // no-boxing probe for single integral keys — the dominant shape; the
-  // per-row box+generic-hash of Set[Any] is the scan-width CPU tax
-  private val fastLong: LongHashSet = if (singleKey) dv.fastLong else null
-  private val fastGetter: (ColumnVector, Int) => Long =
-    if (fastLong == null) null
-    else keyTypes.head match {
-      case LongType | TimestampType | TimestampNTZType => (c, i) => c.getLong(i)
-      case IntegerType | DateType                      => (c, i) => c.getInt(i).toLong
-      case ShortType                                   => (c, i) => c.getShort(i).toLong
-      case ByteType                                    => (c, i) => c.getByte(i).toLong
-      case _ => null // width mismatch: fall back to the boxed probe
-    }
-
-  // survivors of the current batch, by source row id (order-preserving)
-  private val survivors = new Array[Int](capacity)
-
-  // compacted output: reused on-heap vectors + one reused batch shell
-  private val outVecs =
-    org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-      .allocateColumns(capacity, StructType(required.fields))
-  private val outBatch = new ColumnarBatch(outVecs.map(v => v: ColumnVector), 0)
-  private val copiers = required.fields.map(f => copierOf(f.dataType))
-  // pass-through shell over the leading (query) vectors of the decoder's
-  // batch — the decoder reuses its vectors, so ONE shell serves all
-  // batches; null until the first batch exists
+  // both shells are built once: the decoder reuses its vectors
   private var passBatch: ColumnarBatch = null
+  private var outVecs: Array[OnHeapColumnVector] = null
+  private var outBatch: ColumnarBatch = null
+  private var copiers: Array[SnapshotBatchReader.Copier] = null
+  private var current: ColumnarBatch = _
 
-  private def getterOf(t: DataType): (ColumnVector, Int) => Any = t match {
-    case LongType | TimestampType | TimestampNTZType => (c, i) => c.getLong(i)
-    case IntegerType | DateType                      => (c, i) => c.getInt(i)
-    case ShortType                                   => (c, i) => c.getShort(i)
-    case ByteType                                    => (c, i) => c.getByte(i)
-    case DoubleType                                  => (c, i) => c.getDouble(i)
-    case FloatType                                   => (c, i) => c.getFloat(i)
-    case BooleanType                                 => (c, i) => c.getBoolean(i)
-    case StringType                                  => (c, i) => c.getUTF8String(i)
-    case other => throw new IllegalStateException(
-      s"unreachable: $other is gated by SnapshotScan.dvColumnarType at planning")
+  override def next(): Boolean = {
+    if (!dec.nextBatch()) return false
+    val src = dec.batch
+    val n = src.numRows()
+    if (dec.live == n) { // clean batch: zero copies
+      if (dec.probes) dec.metrics.dvPassthroughBatches += 1
+      current =
+        if (dec.servesWhole) src
+        else {
+          if (passBatch == null) passBatch = new ColumnarBatch(dec.outOrds.map(src.column))
+          passBatch.setNumRows(n)
+          passBatch
+        }
+    } else { // mixed batch: compact survivors, source order kept
+      dec.metrics.dvCompactedBatches += 1
+      if (outBatch == null) {
+        val copied = StructType(dec.outSchema.fields.take(dec.dataWidth))
+        outVecs = OnHeapColumnVector.allocateColumns(SnapshotBatchDecoder.Capacity, copied)
+        copiers = copied.fields.map(f => SnapshotBatchReader.copierOf(f.dataType))
+        outBatch = new ColumnarBatch(Array.tabulate[ColumnVector](dec.outOrds.length)(c =>
+          if (c < dec.dataWidth) outVecs(c) else src.column(dec.outOrds(c))))
+      }
+      var c = 0
+      while (c < outVecs.length) {
+        val dst = outVecs(c)
+        dst.reset()
+        val srcV = src.column(c)
+        val cp = copiers(c)
+        var j = 0
+        while (j < dec.live) {
+          val r = dec.rowId(j)
+          if (srcV.isNullAt(r)) dst.putNull(j) else cp(srcV, r, dst, j)
+          j += 1
+        }
+        c += 1
+      }
+      outBatch.setNumRows(dec.live)
+      current = outBatch
+    }
+    true
   }
 
-  private type Copier =
-    (ColumnVector, Int, org.apache.spark.sql.execution.vectorized.OnHeapColumnVector, Int) => Unit
-  private def copierOf(t: DataType): Copier = t match {
+  override def get(): ColumnarBatch = current
+
+  override def close(): Unit = {
+    dec.close()
+    if (outVecs != null) outVecs.foreach(_.close())
+  }
+}
+
+private[sources] object SnapshotBatchReader {
+  type Copier = (ColumnVector, Int,
+    org.apache.spark.sql.execution.vectorized.OnHeapColumnVector, Int) => Unit
+
+  def copierOf(t: DataType): Copier = t match {
     case LongType | TimestampType | TimestampNTZType =>
       (s, i, d, j) => d.putLong(j, s.getLong(i))
     case IntegerType | DateType => (s, i, d, j) => d.putInt(j, s.getInt(i))
@@ -2891,78 +2832,37 @@ private[sources] final class SnapshotDvColumnarReader(
     case other => throw new IllegalStateException(
       s"unreachable: $other is gated by SnapshotScan.dvColumnarType at planning")
   }
+}
 
-  private def deletedAt(src: ColumnarBatch, row: Int): Boolean =
-    if (fastLong != null && fastGetter != null) {
-      val c = src.column(keyOrds(0))
-      if (c.isNullAt(row)) dv.nullKeyDeleted else fastLong.contains(fastGetter(c, row))
-    } else if (singleKey) {
-      val c = src.column(keyOrds(0))
-      dv.containsSingle(if (c.isNullAt(row)) null else keyGetters(0)(c, row))
-    } else {
-      var i = 0
-      while (i < keyOrds.length) {
-        val c = src.column(keyOrds(i))
-        keyScratch(i) = if (c.isNullAt(row)) null else keyGetters(i)(c, row)
-        i += 1
-      }
-      multiProbe.contains(keyScratch)
-    }
+/** Row output of a [[SnapshotBatchDecoder]]: each surviving row of each
+  * batch, projected by ordinal when the decoder read a DV key the output
+  * drops. Serves scans with nested columns, DV scans projecting a type
+  * [[SnapshotBatchReader]] does not copy, and the change feed. */
+private[sources] final class SnapshotRowReader(dec: SnapshotBatchDecoder)
+    extends PartitionReader[InternalRow] {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 
-  private var current: ColumnarBatch = _
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = dec.metrics.values
+
+  private val project: UnsafeProjection =
+    if (dec.servesWhole) null
+    else UnsafeProjection.create(dec.outOrds.toSeq.zip(dec.outSchema.fields).map {
+      case (o, f) => BoundReference(o, f.dataType, nullable = true): Expression
+    })
+  private var j = 0
 
   override def next(): Boolean = {
-    while (reader.nextBatch()) {
-      val src = reader.resultBatch()
-      val n = src.numRows()
-      var s = 0
-      var i = 0
-      while (i < n) {
-        if (!deletedAt(src, i)) { survivors(s) = i; s += 1 }
-        i += 1
-      }
-      if (metrics != null && s < n) metrics.dvDeletedRows += n - s
-      if (s == n && n > 0) { // clean batch: zero copies
-        if (metrics != null) metrics.dvPassthroughBatches += 1
-        if (requested.length == required.length) current = src
-        else {
-          if (passBatch == null)
-            passBatch =
-              new ColumnarBatch(Array.tabulate[ColumnVector](required.length)(src.column), n)
-          passBatch.setNumRows(n)
-          current = passBatch
-        }
-        return true
-      }
-      if (s > 0) { // mixed batch: compact survivors, source order kept
-        if (metrics != null) metrics.dvCompactedBatches += 1
-        var c = 0
-        while (c < outVecs.length) {
-          val dst = outVecs(c)
-          dst.reset()
-          val srcV = src.column(c)
-          val cp = copiers(c)
-          var j = 0
-          while (j < s) {
-            val r = survivors(j)
-            if (srcV.isNullAt(r)) dst.putNull(j) else cp(srcV, r, dst, j)
-            j += 1
-          }
-          c += 1
-        }
-        outBatch.setNumRows(s)
-        current = outBatch
-        return true
-      }
-      // s == 0: every row deleted (or empty batch) — read on
-    }
-    false
+    j += 1
+    if (dec.batch != null && j < dec.live) true
+    else if (dec.nextBatch()) { j = 0; true }
+    else false
   }
 
-  override def get(): ColumnarBatch = current
-
-  override def close(): Unit = {
-    reader.close()
-    outVecs.foreach(_.close())
+  override def get(): InternalRow = {
+    val row = dec.batch.getRow(dec.rowId(j))
+    if (project == null) row else project(row)
   }
+
+  override def close(): Unit = dec.close()
 }

@@ -7,7 +7,6 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
@@ -350,31 +349,11 @@ private[sources] final class SnapshotMicroBatchStream(
       m: SnapshotStore.Manifest, v: Long): Seq[SnapshotStreamPartition] = {
     val prev = manifestOf(v - 1)
     m.deletes.filterNot(prev.deletes.toSet).flatMap { d =>
-      val dp = new Path(d)
-      val fs = dp.getFileSystem(conf)
-      val files =
-        if (fs.getFileStatus(dp).isDirectory)
-          fs.listStatus(dp).toSeq.filter(s =>
-            s.isFile && s.getPath.getName.endsWith(".parquet")).map(_.getPath.toString)
-        else Seq(d)
-      files.map(f => SnapshotStreamPartition(
-        SnapshotInputPartition(f, 0L, Long.MaxValue, 0L),
+      DvLookup.partFiles(d, conf).map(f => SnapshotStreamPartition(
+        SnapshotInputPartition(f.getPath.toString, 0L, Long.MaxValue, 0L),
         changeType = "delete", version = v))
     }
   }
-
-  /** EXISTS_DEFAULT fills for the feed (`ADD COLUMN ... DEFAULT`): the
-    * feed presents every batch under the stream's table schema, so a
-    * file predating a defaulted column fills the SAME value current
-    * table reads report — a consumer replaying the feed reconstructs
-    * exactly what it would read from the table. Resolved once from the
-    * schema's own metadata. */
-  private lazy val streamDefaults: Seq[(String, Any)] =
-    tableSchema.fields.toSeq.collect {
-      case f if f.metadata.contains("EXISTS_DEFAULT") =>
-        f.name -> graft.store.ColumnMapping.defaultValueOf(
-          f.metadata.getString("EXISTS_DEFAULT"), f.dataType)
-    }
 
   /** Row-group partitions over the given data files (no skipping — a
     * change feed emits everything), tagged with the batch kind.
@@ -388,16 +367,10 @@ private[sources] final class SnapshotMicroBatchStream(
     files.flatMap { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
       try {
-        val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .map(_.getName).toSet
-        val fills = streamDefaults.collect {
-          case (n, value) if !fields(n) => tableSchema.fieldIndex(n) -> value
-        }
         r.getFooter.getBlocks.asScala.toSeq.map { b =>
           SnapshotStreamPartition(
             SnapshotInputPartition(f, b.getStartingPos,
-              b.getCompressedSize, b.getRowCount,
-              dvClass = dvClassOf(f), fillDefaults = fills),
+              b.getCompressedSize, b.getRowCount, dvClass = dvClassOf(f)),
             changeType = changeType, version = v, dvVersion = dvVersion)
         }
       } finally r.close()
@@ -499,16 +472,25 @@ private[sources] final case class SnapshotStreamPartition(
     base: SnapshotInputPartition, changeType: String, version: Long,
     dvVersion: Long = -1L) extends InputPartition
 
-/** Wraps the batch row reader and appends (_change_type,
-  * _commit_version). Snapshot and remove batches apply the same DV
-  * semantics as a batch read of that version; delete batches read the
-  * delta key FILES under the table schema — key columns populate,
-  * every column a key file lacks reads null. */
+/** Reads every change batch as rows of the table schema followed by
+  * (_change_type, _commit_version), which the decoder serves as
+  * constant columns ([[SnapshotRowReader]] over
+  * [[SnapshotBatchDecoder]]). Snapshot, insert and remove batches apply
+  * the same DV semantics and exists-defaults as a batch read of that
+  * version, so replaying the feed reconstructs what a table read
+  * reports. Delete batches read the delta key FILES under the table
+  * schema with its exists-defaults stripped: key columns populate and
+  * every other column reads null. */
 private[sources] final class SnapshotStreamReaderFactory(
     tableSchema: StructType,
     dvByVersion: Map[Long, StreamDv],
     conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
+
+  private val keyFileSchema = SnapshotScan.withExistsDefaults(tableSchema, Map.empty)
+  private val meta = StructType(Seq(
+    StructField("_change_type", StringType, nullable = false),
+    StructField("_commit_version", LongType, nullable = false)))
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SnapshotStreamPartition]
@@ -517,20 +499,11 @@ private[sources] final class SnapshotStreamReaderFactory(
     val d = dvByVersion.get(p.dvVersion)
     // a class no DV covers carries null: no probe, no key columns
     val dv: DvLookup = d.map(_.lookups.value.apply(p.base.dvClass)).orNull
-    val inner: PartitionReader[InternalRow] = new SnapshotVectorRowReader(p.base, tableSchema,
-      if (dv == null) Nil else d.get.keyCols, if (dv == null) Nil else d.get.keyTypes,
-      dv, conf.conf)
-    // exists-default substitution for files predating an ADD COLUMN
-    // ... DEFAULT (no-op for delete batches: their partitions carry no
-    // fills — DV key rows keep null in every non-key column)
-    val filled = SnapshotScan.withDefaultFills(inner, tableSchema, p.base.fillDefaults)
-    val meta = new GenericInternalRow(
-      Array[Any](UTF8String.fromString(p.changeType), p.version))
-    new PartitionReader[InternalRow] {
-      private val joined = new JoinedRow()
-      override def next(): Boolean = filled.next()
-      override def get(): InternalRow = joined(filled.get(), meta)
-      override def close(): Unit = filled.close()
-    }
+    val keys = d.fold(new StructType())(x =>
+      StructType(x.keyCols.zip(x.keyTypes).map { case (n, t) => StructField(n, t) }))
+    new SnapshotRowReader(new SnapshotBatchDecoder(p.base,
+      if (p.changeType == "delete") keyFileSchema else tableSchema, keys, dv,
+      meta, InternalRow(UTF8String.fromString(p.changeType), p.version),
+      conf.conf, new ScanTaskMetrics))
   }
 }

@@ -51,23 +51,6 @@ object ColumnMapping {
       else None
     }).getOrElse(Nil)
 
-  /** The CATALYST value of a stored exists-default (driver-side, plan
-    * time): the stored SQL is a folded literal by construction (the
-    * ALTER path folds through the connector literal), so this is a
-    * parse + optional cast, never an analysis. */
-  def defaultValueOf(sql: String, dt: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    val e = org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(sql)
-    val lit = e match {
-      case l: Literal => l
-      case other =>
-        require(other.foldable, s"exists-default '$sql' is not a foldable literal")
-        Literal(other.eval(null), other.dataType)
-    }
-    if (lit.dataType == dt) lit.value
-    else Cast(lit, dt, Some("UTC")).eval(null)
-  }
-
   /** The manifest-pinned LOGICAL schema (present iff a widening is
     * live — footer merge cannot reconcile narrow and wide file
     * generations, so the widen commit pinned the declared schema). */

@@ -61,7 +61,10 @@ class ColumnDefaultsSpec extends SparkSuite {
     // explicit NULL after the ALTER must STAY null (a coalesce-style
     // fill would wrongly resurrect the default here)
     spark.sql(s"INSERT INTO $cat.facts.t3 VALUES (4, NULL, NULL)")
-    val got = spark.sql(s"SELECT id, c, tag FROM $cat.facts.t3 ORDER BY id").collect()
+    val q = spark.sql(s"SELECT id, c, tag FROM $cat.facts.t3 ORDER BY id")
+    val desc = SnapshotScanProbe.scans(q).head.description
+    assert(desc.contains("vectorized"), s"the decoder fills exists-defaults in batches: $desc")
+    val got = q.collect()
     assert(got.map(r => if (r.isNullAt(1)) null else r.getInt(1)).toSeq === Seq(7, 7, 7, null),
       s"pre-ALTER rows report the exists-default; explicit NULL stays null: ${got.toSeq}")
     assert(got.map(_.getString(2)).toSeq === Seq("z", "z", "z", null))
@@ -158,6 +161,16 @@ class ColumnDefaultsSpec extends SparkSuite {
     assert(feed.map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getInt(1))).toSeq ===
       Seq((1L, 7), (2L, 7), (3L, 9)),
       "feed rows must report exactly what a table read reports — defaults included")
+
+    // a merge-on-read delete (a deletion vector) streams its keys as
+    // 'delete' rows: the key file holds no 'c', and a key row must not
+    // report the default
+    graft.store.SnapshotStore.deleteCommit(spark, t, Seq("id"), col("id") === 1L)
+    val deletes = spark.read.format("graft-snapshot").option("path", t)
+      .option("changeFeed", "true").option("startingVersion", 0).load()
+      .filter(col("_change_type") === "delete").select("id", "c").collect()
+    assert(deletes.map(r => (r.getLong(0), r.isNullAt(1))).toSeq === Seq((1L, true)),
+      s"a delete row carries its key and null elsewhere: ${deletes.toSeq}")
   }
 
   test("a full INSERT OVERWRITE keeps the column defaults working") {

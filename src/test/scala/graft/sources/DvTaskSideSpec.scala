@@ -133,4 +133,24 @@ class DvTaskSideSpec extends SparkSuite {
       pmod(col("o_custkey"), lit(5)) === 1 && col("o_orderstatus") === "O"),
       "composite", "o_custkey")
   }
+
+  test("a missing deletion-vector path fails naming it, below and above the byte cap") {
+    val table = fresh("dvtask-gone")
+    SnapshotStore.commit(spark.range(0, 100).toDF("id"), table)
+    SnapshotStore.deleteCommit(spark, table, Seq("id"), col("id") < 10)
+    val dv = SnapshotStore.manifest(spark, table,
+      SnapshotStore.currentVersion(spark, table).get).deletes.head
+    val dvPath = new org.apache.hadoop.fs.Path(dv)
+    assert(dvPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dvPath, true))
+    // skipping the path would bring its ten deleted rows back
+    def assertNamedFailure(mode: String): Unit = {
+      val e = intercept[Throwable](
+        spark.read.format("graft-snapshot").option("path", table).load().collect())
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
+        c.isInstanceOf[java.io.FileNotFoundException] && c.getMessage.contains(dv)),
+        s"$mode: expected a FileNotFoundException naming $dv, got $e")
+    }
+    assertNamedFailure("default cap")
+    withTaskSideDv(assertNamedFailure("cap = 1 byte"))
+  }
 }

@@ -191,6 +191,8 @@ class SnapshotDsv2Spec extends SparkSuite {
     val got = names.collect().map(r => Option(r.getString(0)))
     assert(got.count(_.isEmpty) === 25, s"gen-1 rows should be null: ${got.toSeq.take(5)}")
     assert(got.count(_.isDefined) === 25, "gen-2 rows lost")
+    val desc = SnapshotScanProbe.scans(names).head.description
+    assert(desc.contains("vectorized"), s"the decoder null-fills in batches: $desc")
   }
 
   test("COUNT/MIN/MAX push down to parquet footers — metadata-only aggregates") {
@@ -731,6 +733,9 @@ class SnapshotDsv2Spec extends SparkSuite {
     val arr = load(arrTable)
     assert(SnapshotScanProbe.scans(arr).head.description.contains("row"),
       s"array column must fall back to the row reader: ${SnapshotScanProbe.scans(arr).head.description}")
+    // `contains("row")` also matches the `rowGroups=` every description prints
+    assert(!SnapshotScanProbe.scans(arr).head.description.contains("vectorized"),
+      s"array column with DVs must not read columnar: ${SnapshotScanProbe.scans(arr).head.description}")
     assert(arr.count() === 500)
   }
 

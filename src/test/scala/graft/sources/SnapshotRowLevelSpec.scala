@@ -41,6 +41,38 @@ class SnapshotRowLevelSpec extends SparkSuite {
     }
     assert(got.map(_.getString(1)).distinct.length === files.size,
       "every part file should appear in _file")
+    val desc = SnapshotScanProbe.scans(spark.read.format("graft-snapshot")
+      .option("path", table).load().select(col("n_nationkey"), col("_file"))).head.description
+    assert(desc.contains("vectorized"), s"a _file scan should stay columnar: $desc")
+
+    // merge-on-read deletes, key column not projected: the decoder reads
+    // the key behind the payload and serves _file after it, for batches
+    // passed through whole and batches compacted around deleted rows
+    val dvTable = java.nio.file.Files.createTempDirectory("rl-file-dv").toString + "/t"
+    SnapshotStore.commit(spark.range(0, 20000)
+      .selectExpr("id", "concat('p-', id) AS payload")
+      .repartitionByRange(4, col("id")), dvTable)
+    SnapshotStore.deleteCommit(spark, dvTable, Seq("id"),
+      col("id") < 5000 && pmod(col("id"), lit(3)) === 0)
+    val dvRead = spark.read.format("graft-snapshot").option("path", dvTable).load()
+      .select(col("payload"), col("_file"))
+    // collect() runs THIS queryExecution, whose scan metrics are read below
+    val gotDv = dvRead.collect().map(r => (r.getString(0), fileOf(r.getString(1)).getName)).toSet
+    val dvScan = SnapshotScanProbe.scans(dvRead).head
+    assert(dvScan.description.contains("vectorized") && dvScan.description.contains("dvKeys="),
+      s"a DV scan with _file should stay columnar: ${dvScan.description}")
+    val live = SnapshotStore.read(spark, dvTable).select("payload")
+    val dvFiles = SnapshotStore.dataFiles(spark,
+      SnapshotStore.manifest(spark, dvTable, SnapshotStore.currentVersion(spark, dvTable).get))
+    val want = dvFiles.flatMap { f =>
+      spark.read.parquet(f).join(live, Seq("payload")).select("payload").collect()
+        .map(r => (r.getString(0), fileOf(f).getName))
+    }.toSet
+    assert(live.count() === 20000 - 1667)
+    assert(gotDv === want, "payload and _file must match the snapshot's live rows and their files")
+    Seq("dvPassthroughBatches", "dvCompactedBatches").foreach { k =>
+      assert(dvScan.exec.metrics(k).value > 0, s"$k should count batches of this read")
+    }
   }
 
   test("MERGE INTO: copy-on-write over touched files only; untouched bytes never move") {
