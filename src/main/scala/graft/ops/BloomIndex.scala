@@ -192,12 +192,8 @@ object BloomIndex {
     // genuinely huge shards route to the distributed probe. Explicit
     // sizes still win; a missing sidecar falls back to the old flat
     // sizing (over-allocation is a cost, never a correctness risk).
-    val maxFileRows: Long =
-      if (m.statsFile.isEmpty) -1L
-      else
-        try graft.store.FileStats.read(spark, m.statsFile).entries.values
-          .map(_.groups.map(_.rows).sum).foldLeft(0L)(math.max)
-        catch { case scala.util.control.NonFatal(_) => -1L }
+    val maxFileRows: Long = graft.store.FileStats.sidecar(spark, m).entries.values
+      .map(_.groups.map(_.rows).sum).foldLeft(-1L)(math.max)
     val items =
       if (expectedItems > 0) expectedItems
       else if (maxFileRows > 0) maxFileRows

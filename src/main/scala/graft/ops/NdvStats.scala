@@ -68,14 +68,11 @@ object NdvStats {
     // column): empty HLL + empty KLL merge as identities, nulls = 0.
     // Zero-row-ness is PROVEN from the stats sidecar; a file the
     // sidecar doesn't cover stays unpadded (conservative as before).
-    val zeroRowKeys: Seq[String] =
-      if (m.statsFile.isEmpty) Nil
-      else
-        try {
-          val sc = graft.store.FileStats.read(spark, m.statsFile)
-          files.filter(f => sc.entries.get(f).exists(_.groups.map(_.rows).sum == 0L))
-            .map(SnapshotStore.relFileKey)
-        } catch { case scala.util.control.NonFatal(_) => Nil }
+    val zeroRowKeys: Seq[String] = {
+      val entries = graft.store.FileStats.sidecar(spark, m).entries
+      files.filter(f => entries.get(f).exists(_.groups.map(_.rows).sum == 0L))
+        .map(SnapshotStore.relFileKey)
+    }
     val pad: Seq[org.apache.spark.sql.DataFrame] =
       if (zeroRowKeys.isEmpty) Nil
       else {

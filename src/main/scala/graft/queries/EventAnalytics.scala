@@ -772,8 +772,10 @@ object EventAnalytics {
     * null counts when groups mix), and MIN/MAX over DATE/TIMESTAMP
     * answer typed from the epoch-domain stats. The fixture pins the
     * metadata plan (description names count(opt_key) and
-    * min(o_orderdate), zero footer opens); oracle replays over raw
-    * orders with the same derived nullable column. */
+    * min(o_orderdate)) and zero footer opens across planning and
+    * execution, counted from before the plan is built (the pushdown
+    * reads statistics while planning); oracle replays over raw orders
+    * with the same derived nullable column. */
   val dtAggNullaware: Q = (s, d) => {
     val wh = Fixtures.dir("aggnull", d) { root =>
       val t = s"$root/facts/orders"
@@ -786,10 +788,11 @@ object EventAnalytics {
       graft.ops.NdvStats.analyzeCommit(s, t, Seq("opt_key"))
       val read = s.read.format("graft-snapshot").option("path", t).load()
       val q = read.agg(count(col("opt_key")), min("o_orderdate"), max("o_orderdate"))
+      // planning runs the aggregate pushdown, so the count starts first
+      val footers0 = graft.sources.SnapshotScanProbe.plannerFooterReads
       val desc = graft.sources.SnapshotScanProbe.scans(q).map(_.description).mkString("; ")
       require(desc.contains("count(opt_key)") && desc.contains("min(o_orderdate)"),
         s"dt_agg_nullaware: count(col)+temporal min/max must plan metadata-only, got: $desc")
-      val footers0 = graft.sources.SnapshotScanProbe.plannerFooterReads
       q.collect()
       require(graft.sources.SnapshotScanProbe.plannerFooterReads == footers0,
         "dt_agg_nullaware: the metadata aggregate must not open data-file footers")
@@ -877,11 +880,12 @@ object EventAnalytics {
     * read: zero data pages, zero footer opens, O(files) driver
     * arithmetic. At 100 TB this is the difference between a rollup
     * scanning the fact table and reading ~KBs of metadata. The fixture
-    * pins the plan (FOOTER AGGREGATE description + footer counter);
-    * anything unprovable (filters, strings, unrouted files, DVs)
-    * declines to the ordinary distributed plan — pinned by
-    * `GroupByPushdownSpec`. Oracle replays the rollup over raw
-    * lineitem. */
+    * pins the plan (FOOTER AGGREGATE description) and zero footer
+    * opens, counted from before the plan is built (the pushdown reads
+    * statistics while planning); anything unprovable (filters,
+    * strings, unrouted files, DVs) declines to the ordinary
+    * distributed plan — pinned by `GroupByPushdownSpec`. Oracle
+    * replays the rollup over raw lineitem. */
   val dtGroupbyRollup: Q = (s, d) => {
     val wh = Fixtures.dir("gbroll", d) { root =>
       val t = s"$root/facts/lineitem"
@@ -890,10 +894,11 @@ object EventAnalytics {
       val read = s.read.format("graft-snapshot").option("path", t).load()
       val q = read.groupBy("l_linenumber")
         .agg(count(lit(1)), min("l_quantity"), max("l_quantity"), max("l_orderkey"))
+      // planning runs the aggregate pushdown, so the count starts first
+      val footers0 = graft.sources.SnapshotScanProbe.plannerFooterReads
       val desc = graft.sources.SnapshotScanProbe.scans(q).map(_.description).mkString("; ")
       require(desc.contains("FOOTER AGGREGATE [group by l_linenumber"),
         s"dt_groupby_rollup: the rollup must plan metadata-only, got: $desc")
-      val footers0 = graft.sources.SnapshotScanProbe.plannerFooterReads
       q.collect()
       require(graft.sources.SnapshotScanProbe.plannerFooterReads == footers0,
         "dt_groupby_rollup: the grouped rollup must not open data-file footers")

@@ -52,12 +52,8 @@ private[sources] object MetaTables {
       val m = SnapshotStore.manifest(spark, root, cur)
       // per-file row counts from the stats sidecar (one cached read) —
       // absent entries report -1, never a footer open
-      val sidecarRows: Map[String, Long] =
-        if (m.statsFile.isEmpty) Map.empty
-        else
-          try graft.store.FileStats.read(spark, m.statsFile).entries
-            .map { case (f, e) => f -> e.groups.map(_.rows).sum }
-          catch { case scala.util.control.NonFatal(_) => Map.empty }
+      val sidecarRows: Map[String, Long] = graft.store.FileStats.sidecar(spark, m).entries
+        .map { case (f, e) => f -> e.groups.map(_.rows).sum }
       Some(new MetaFilesTable(s"$root$$files", spark,
         SnapshotStore.dataFiles(spark, m), sidecarRows))
     case "tags" =>
@@ -77,14 +73,7 @@ private[sources] object MetaTables {
       // retention/compaction decisions.
       val cur = SnapshotStore.currentVersion(spark, root).get
       val m = SnapshotStore.manifest(spark, root, cur)
-      val sidecar: Map[String, (Long, Long)] = // file → (rows, bytes)
-        if (m.statsFile.isEmpty) Map.empty
-        else
-          try graft.store.FileStats.read(spark, m.statsFile).entries
-            .map { case (f, e) =>
-              f -> (e.groups.map(_.rows).sum, e.groups.map(_.length).sum)
-            }
-          catch { case scala.util.control.NonFatal(_) => Map.empty }
+      val sidecar = rowsAndBytes(spark, m) // file → (rows, bytes)
       val gens: Seq[(Seq[graft.store.PartitionSpec.PartField], Int)] =
         (m.partSpec, m.partGen) +: m.partHist.map { case (g, sp) => (sp, g) }
       def labelOf(path: String): String = {
@@ -125,14 +114,7 @@ private[sources] object MetaTables {
       val cur = SnapshotStore.currentVersion(spark, root).get
       val m = SnapshotStore.manifest(spark, root, cur)
       val files = SnapshotStore.dataFiles(spark, m)
-      val sidecar: Map[String, (Long, Long)] =
-        if (m.statsFile.isEmpty) Map.empty
-        else
-          try graft.store.FileStats.read(spark, m.statsFile).entries
-            .map { case (f, e) =>
-              f -> (e.groups.map(_.rows).sum, e.groups.map(_.length).sum)
-            }
-          catch { case scala.util.control.NonFatal(_) => Map.empty }
+      val sidecar = rowsAndBytes(spark, m)
       val known = files.flatMap(sidecar.get)
       val totalRows = if (known.size == files.size) known.map(_._1).sum else -1L
       val totalBytes = if (known.size == files.size) known.map(_._2).sum else -1L
@@ -199,6 +181,13 @@ private[sources] object MetaTables {
         Seq(row)))
     case _ => None
   }
+
+  /** Per-file (rows, data bytes) from the stats sidecar alone — a file
+    * it lacks is absent, never a footer open. */
+  private def rowsAndBytes(spark: SparkSession, m: SnapshotStore.Manifest): Map[String, (Long, Long)] =
+    graft.store.FileStats.sidecar(spark, m).entries.map { case (f, e) =>
+      f -> (e.groups.map(_.rows).sum, e.groups.map(_.length).sum)
+    }
 }
 
 /** A tiny read-only table over driver-materialized rows (metadata

@@ -4,8 +4,6 @@ import graft.store.SnapshotStore
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -20,7 +18,6 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector for [[graft.store.SnapshotStore]] tables:
   *
@@ -38,23 +35,25 @@ import scala.jdk.CollectionConverters._
   *
   * Scale design (100 TB):
   *  - Planning is METADATA-ONLY: the driver lists the snapshot's part
-  *    files and reads parquet FOOTERS, never data pages.
+  *    files and reads their statistics from the stats sidecar
+  *    ([[graft.store.FileStats.entries]]), harvesting a parquet footer
+  *    only for a file the sidecar lacks — never data pages.
   *  - Column pruning is real: the pruned schema becomes the parquet
   *    read projection, so unrequested columns are never decoded. Every
   *    row group decodes through Spark's `VectorizedParquetRecordReader`
   *    ([[SnapshotBatchDecoder]]), which also widens narrow types, fills
   *    a column a file predates with its EXISTS_DEFAULT (null without
   *    one), and serves the `_file` metadata column as a constant vector.
-  *  - Filter pushdown is used for FILE SKIPPING against footer min/max
+  *  - Filter pushdown is used for FILE SKIPPING against those min/max
   *    statistics; every filter is also returned as a residual, so Spark
   *    re-applies it row-level — skipping can only prune, never corrupt.
   *  - Deletion vectors apply in the decoder against an O(deleted-keys)
   *    key set resolved at planning (the same bound as `readVersion`'s
   *    broadcast anti join build side).
-  *  - Scans are columnar ([[SnapshotBatchReader]]) unless a projected
-  *    column is nested, or deletion vectors are live and a projected
-  *    column is outside the types a compacted batch copies; those scans
-  *    read rows ([[SnapshotRowReader]]) from the same decoder.
+  *  - Scans are columnar ([[SnapshotBatchReader]]), nested columns
+  *    included, unless deletion vectors are live and a projected column
+  *    is outside the types a compacted batch copies; those scans read
+  *    rows ([[SnapshotRowReader]]) from the same decoder.
   *  - Row groups are bin-packed into task-sized partitions
   *    ([[SnapshotScan.packPartitions]]): a snapshot written as few large
   *    files still fans out, and stats skipping prunes at row-group
@@ -372,11 +371,8 @@ private[sources] object SnapshotTable {
   def provablyNullFree(m: SnapshotStore.Manifest, keys: Set[String]): Boolean =
     keys.nonEmpty && m.statsFile.nonEmpty && {
       val spark = SparkSession.active
-      val entries =
-        try graft.store.FileStats.read(spark, m.statsFile).entries
-        catch { case scala.util.control.NonFatal(_) => return false }
-      val files = SnapshotStore.dataFiles(spark, m)
-      files.forall(f => entries.get(f).exists(_.groups.forall(g =>
+      val entries = graft.store.FileStats.sidecar(spark, m).entries
+      SnapshotStore.dataFiles(spark, m).forall(f => entries.get(f).exists(_.groups.forall(g =>
         keys.subsetOf(g.noNulls))))
     }
 }
@@ -419,16 +415,17 @@ private[sources] final class SnapshotScanBuilder(
     // would desynchronize readSchema from the stream's output
     if (!changeFeed) required = requiredSchema
 
-  /** COUNT(*) / MIN / MAX answered from parquet FOOTERS — a metadata-
-    * only aggregate: no data page is ever read. Complete pushdown only,
-    * and only when it is provably exact: no residual filters, no
-    * deletion vectors, numeric columns whose every row group carries
-    * stats (string stats can be writer-truncated), and no NaN in any
-    * float/double bound (a NaN bound means the column holds NaN, whose
-    * Spark ordering footer stats can't reproduce). GROUP BY pushes down
-    * too when every group column is an identity partition source and
-    * every file is routed — the rollup folds from directory names plus
-    * the stats sidecar ([[computeGroupedAgg]]). */
+  /** COUNT(*) / COUNT(col) / MIN / MAX answered from file statistics
+    * ([[graft.store.FileStats.entries]]: the stats sidecar, plus a
+    * footer harvest for any file it lacks) — a metadata-only
+    * aggregate: no data page is ever read. Complete pushdown only, and
+    * only when it is provably exact: no residual filters, no deletion
+    * vectors, no renames or widenings, every row group carrying stats
+    * for each MIN/MAX column (NaN-poisoned bounds are never recorded),
+    * and string bounds only from an exact (untruncated) source. GROUP
+    * BY pushes down too when every group column is an identity
+    * partition source and every file is routed — the rollup folds from
+    * directory names plus the same statistics ([[computeAgg]]). */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
     tryComputeAgg(agg).isDefined
@@ -440,33 +437,11 @@ private[sources] final class SnapshotScanBuilder(
   }
 
   // Spark calls supportCompletePushDown then pushAggregation with the
-  // SAME Aggregation — memoized so the driver-side footer sweep runs
-  // once, not twice, per pushed aggregate
+  // SAME Aggregation — memoized so the driver-side fold runs once, not
+  // twice, per pushed aggregate
   private var aggMemo: Option[
     (org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
       Option[(StructType, Seq[Seq[Any]], String)])] = None
-
-  /** EXISTS_DEFAULT columns some referenced file does NOT carry
-    * physically (`ADD COLUMN ... DEFAULT` predecessors): footer stats
-    * for them describe the null the decoder would emit, not the
-    * default the rows legally report — any metadata aggregate touching
-    * one must decline. Empty (and costs nothing) unless the pinned
-    * schema records a default; a file absent from the sidecar counts
-    * as lacking (decline-side conservative). */
-  private lazy val unfilledDefaultCols: Set[String] = {
-    val defs = graft.store.ColumnMapping.existsDefaults(m).map(_._1).toSet
-    if (defs.isEmpty) Set.empty
-    else {
-      val spark = SparkSession.active
-      val files = SnapshotStore.dataFiles(spark, m)
-      val entries: Map[String, graft.store.FileStats.Entry] =
-        if (m.statsFile.isEmpty) Map.empty
-        else
-          try graft.store.FileStats.read(spark, m.statsFile).entries
-          catch { case _: java.io.IOException => Map.empty }
-      defs.filter(c => files.exists(f => entries.get(f).forall(e => !e.fields(c))))
-    }
-  }
 
   private def tryComputeAgg(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -475,103 +450,15 @@ private[sources] final class SnapshotScanBuilder(
       case Some((prev, res)) if prev == agg => return res
       case _ => ()
     }
-    val touchesUnfilledDefault = unfilledDefaultCols.nonEmpty &&
-      (agg.aggregateExpressions.toSeq ++ agg.groupByExpressions.toSeq)
-        .flatMap(_.references.toSeq.map(_.fieldNames.head))
-        .exists(unfilledDefaultCols)
-    val res =
-      if (touchesUnfilledDefault) None
-      else if (agg.groupByExpressions.isEmpty) computeAgg(agg)
-      else computeGroupedAgg(agg)
+    val res = computeAgg(agg)
     aggMemo = Some((agg, res))
     res
   }
 
-  private def computeAgg(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Option[(StructType, Seq[Seq[Any]], String)] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    // changeFeed scans must stay streamable (SnapshotAggScan has no
-    // micro-batch form); a filtered/DV/grouped aggregate can't be
-    // answered from footers exactly
-    // renamed columns live under per-file physical names the footer
-    // stats key by — decline the metadata aggregate rather than bind
-    // names per file here; widened columns' footer min/max carry the
-    // NARROW boxing, which would corrupt the typed result row — same
-    // decline (a compaction materializes either away and restores the
-    // pushdown)
-    import org.apache.spark.sql.connector.expressions.aggregate.Count
-    if (changeFeed || rowLevel || sawFilters || m.deletes.nonEmpty ||
-        m.renames.nonEmpty || m.widens.nonEmpty ||
-        agg.groupByExpressions.nonEmpty) return None
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case f: NamedReference if f.fieldNames.length == 1 => Some(f.fieldNames.head)
-        case _                                             => None
-      }
-    // strings are accepted too: footerAggregates PROVES their stats
-    // untruncated via the thrift is_min/max_value_exact flags before
-    // answering (truncated binary stats are bounds, not values);
-    // temporal stats live in the epoch domain (day ints/micros longs) —
-    // exactly the catalyst-internal representation of the result row
-    def aggregatable(n: String): Boolean = schema.find(_.name == n).map(_.dataType).exists {
-      case LongType | IntegerType | DoubleType | FloatType | StringType => true
-      case DateType | TimestampType | TimestampNTZType                  => true
-      case _                                                            => false
-    }
-    // any non-null-typed column works for COUNT(c): only row counts and
-    // null proofs are consulted, never value stats
-    def countable(n: String): Boolean = schema.exists(_.name == n)
-    val wanted: Option[Seq[SnapshotScan.AggSpec]] =
-      agg.aggregateExpressions.toSeq.foldLeft(Option(Seq.empty[SnapshotScan.AggSpec])) {
-        case (None, _) => None
-        case (Some(acc), _: CountStar) => Some(acc :+ SnapshotScan.CountStarSpec)
-        case (Some(acc), ct: Count) if !ct.isDistinct =>
-          colOf(ct.column).filter(countable).map(c => acc :+ SnapshotScan.CountColSpec(c))
-        case (Some(acc), mn: Min) =>
-          colOf(mn.column).filter(aggregatable).map(c =>
-            acc :+ SnapshotScan.MinMaxSpec(c, isMin = true))
-        case (Some(acc), mx: Max) =>
-          colOf(mx.column).filter(aggregatable).map(c =>
-            acc :+ SnapshotScan.MinMaxSpec(c, isMin = false))
-        case _ => None
-      }
-    wanted.flatMap { specs =>
-      val minMaxCols = specs.collect { case SnapshotScan.MinMaxSpec(c, _) => c }.distinct
-      SnapshotScan.footerAggregates(m, minMaxCols).flatMap { case (rows, minMax) =>
-        // COUNT(c) = rows − nulls(c): nulls proven from the sidecar's
-        // per-group noNulls/allNull lines, or the NDV sidecar's EXACT
-        // per-file null counts — unknowable nulls decline the pushdown
-        val countCols = specs.collect { case SnapshotScan.CountColSpec(c) => c }.distinct
-        val nullsOf: Map[String, Long] = countCols.flatMap { c =>
-          SnapshotScan.provenNullCount(m, c).map(c -> _)
-        }.toMap
-        if (!countCols.forall(nullsOf.contains)) return None
-        val fields = specs.zipWithIndex.map {
-          case (SnapshotScan.CountStarSpec, i) =>
-            StructField(s"agg_$i", LongType, nullable = false)
-          case (SnapshotScan.CountColSpec(_), i) =>
-            StructField(s"agg_$i", LongType, nullable = false)
-          case (SnapshotScan.MinMaxSpec(c, _), i) =>
-            StructField(s"agg_$i", schema.find(_.name == c).get.dataType)
-        }
-        val values = specs.map {
-          case SnapshotScan.CountStarSpec   => rows: Any
-          case SnapshotScan.CountColSpec(c) => (rows - nullsOf(c)): Any
-          case SnapshotScan.MinMaxSpec(c, isMn) =>
-            val dt = schema.find(_.name == c).get.dataType
-            minMax.get(c).map(b => if (isMn) b._1 else b._2)
-              .map(v => SnapshotScan.toInternal(v, dt)).orNull
-        }
-        Some((StructType(fields), Seq(values), specs.map(_.describe).mkString(",")))
-      }
-    }
-  }
-
-  /** GROUP BY rollup answered from PARTITION DIRECTORY NAMES + the
-    * stats sidecar — zero data pages, zero footer opens. Sound only
-    * when the metadata carries the whole answer exactly:
+  /** One fold for global and grouped aggregates: a global aggregate is
+    * a grouped one with no group columns, and always yields exactly one
+    * row (an empty table included). Grouped rollups are sound only when
+    * the metadata carries the whole answer exactly:
     *  - every group column is an IDENTITY partition source in the spec
     *    generation that wrote each file, and every file's directory
     *    value parses — one unrouted file (compaction rewrite, foreign
@@ -579,27 +466,35 @@ private[sources] final class SnapshotScanBuilder(
     *  - group columns are integral/date/boolean — a STRING identity
     *    partition declines, because `df.write.partitionBy` routes both
     *    null and `''` to the hive default directory, so the path proves
-    *    "null or empty", not a groupable value;
-    *  - no residual filters, DVs, renames, or widenings (same decline
-    *    set as the global fold), and the sidecar covers every file so
-    *    per-group COUNT/MIN/MAX fold from one small-file read.
-    * At the 100 TB day-appended shape this answers the classic
-    * dashboard rollup (`GROUP BY site_id` / `GROUP BY event_date`) in
-    * O(files) driver arithmetic instead of a full table scan. */
-  private def computeGroupedAgg(
+    *    "null or empty", not a groupable value.
+    * COUNT(c) = rows − nulls(c), nulls proven per row group (`noNulls`
+    * → 0, `allNull` → the whole group); a global aggregate may instead
+    * take the NDV sidecar's exact per-file null counts. Every decline
+    * that needs no statistics is checked before any are read. At the
+    * 100 TB day-appended shape this answers the classic dashboard
+    * rollup (`GROUP BY site_id` / `GROUP BY event_date`) in O(files)
+    * driver arithmetic instead of a full table scan. */
+  private def computeAgg(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[(StructType, Seq[Seq[Any]], String)] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
+    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     import org.apache.spark.sql.connector.expressions.NamedReference
+    // changeFeed scans must stay streamable (SnapshotAggScan has no
+    // micro-batch form); filters and DVs change which rows count;
+    // renamed columns live under per-file physical names the stats key
+    // by, and widened columns' stats carry the NARROW boxing, which
+    // would corrupt the typed result row (a compaction materializes
+    // either away and restores the pushdown)
     if (changeFeed || rowLevel || sawFilters || m.deletes.nonEmpty ||
-        m.renames.nonEmpty || m.widens.nonEmpty ||
-        m.partSpec.isEmpty || m.statsFile.isEmpty) return None
-    val spark = SparkSession.active
-    // group columns: single references over groupable types
-    val groupCols: Seq[String] = agg.groupByExpressions.toSeq.map {
-      case f: NamedReference if f.fieldNames.length == 1 => f.fieldNames.head
-      case _                                             => return None
-    }
+        m.renames.nonEmpty || m.widens.nonEmpty) return None
+    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
+      e match {
+        case f: NamedReference if f.fieldNames.length == 1 => Some(f.fieldNames.head)
+        case _                                             => None
+      }
+    val groupCols: Seq[String] =
+      agg.groupByExpressions.toSeq.map(e => colOf(e).getOrElse(return None))
+    if (groupCols.nonEmpty && m.partSpec.isEmpty) return None
     if (groupCols.distinct.size != groupCols.size) return None
     val groupFields: Seq[StructField] =
       groupCols.map(c => schema.find(_.name == c).getOrElse(return None))
@@ -607,18 +502,15 @@ private[sources] final class SnapshotScanBuilder(
       case IntegerType | LongType | ShortType | ByteType | DateType | BooleanType => true
       case _ => false // strings: hive default dir = "null or ''" — unprovable
     })) return None
-    // aggregate list: same shapes as the global fold
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case f: NamedReference if f.fieldNames.length == 1 => Some(f.fieldNames.head)
-        case _                                             => None
-      }
-    import org.apache.spark.sql.connector.expressions.aggregate.Count
+    // temporal stats live in the epoch domain (day ints/micros longs) —
+    // exactly the catalyst-internal representation of the result row
     def aggregatable(n: String): Boolean = schema.find(_.name == n).map(_.dataType).exists {
       case LongType | IntegerType | DoubleType | FloatType | StringType => true
       case DateType | TimestampType | TimestampNTZType                  => true
       case _                                                            => false
     }
+    // any column works for COUNT(c): only row counts and null proofs
+    // are consulted, never value stats
     val specs: Seq[SnapshotScan.AggSpec] =
       agg.aggregateExpressions.toSeq.map {
         case _: CountStar => SnapshotScan.CountStarSpec
@@ -633,13 +525,15 @@ private[sources] final class SnapshotScanBuilder(
       }
     val measureCols = specs.collect { case SnapshotScan.MinMaxSpec(c, _) => c }.distinct
     val countCols = specs.collect { case SnapshotScan.CountColSpec(c) => c }.distinct
-    // sidecar must cover every file (COUNT needs per-file rows even
-    // with no min/max measures)
-    val sc =
-      try graft.store.FileStats.read(spark, m.statsFile)
-      catch { case scala.util.control.NonFatal(_) => return None }
+    val spark = SparkSession.active
     val files = SnapshotStore.dataFiles(spark, m)
-    if (!files.forall(sc.entries.contains)) return None
+    val sc = graft.store.FileStats.entries(spark, m, files)
+    // EXISTS_DEFAULT columns (`ADD COLUMN ... DEFAULT`) a file does NOT
+    // carry physically: its stats describe the null the decoder would
+    // emit, not the default the rows legally report — decline
+    val defaults = graft.store.ColumnMapping.existsDefaults(m).map(_._1).toSet
+      .intersect((groupCols ++ measureCols ++ countCols).toSet)
+    if (defaults.exists(c => files.exists(f => !sc.entries(f).fields(c)))) return None
     // per-file group key from the directory names, under the spec
     // generation that wrote the file (generation-tagged dir names make
     // the match unambiguous across partition-spec evolution)
@@ -671,70 +565,74 @@ private[sources] final class SnapshotScanBuilder(
         }
       }
     }
-    // fold: group key → (rows, per-measure (min, max), per-count nulls)
-    val groups = scala.collection.mutable.LinkedHashMap.empty[Seq[Any],
-      (Long, scala.collection.mutable.Map[String, (Any, Any)],
-        scala.collection.mutable.Map[String, Long])]
+    // fold: group key → rows, per-measure (min, max), per-count nulls
+    final class Acc {
+      var rows = 0L
+      val minMax = scala.collection.mutable.Map.empty[String, (Any, Any)]
+      val nulls = scala.collection.mutable.Map.empty[String, Long]
+    }
+    val groups = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Acc]
+    if (groupCols.isEmpty) groups(Nil) = new Acc
+    val unprovenNulls = scala.collection.mutable.Set.empty[String]
     files.foreach { f =>
       val key: Seq[Any] =
         groupFields.map(gf => keyPart(f, gf.name, gf.dataType).getOrElse(return None))
-      val (rows0, acc, nullsAcc) = groups.getOrElseUpdate(key,
-        (0L, scala.collection.mutable.Map.empty, scala.collection.mutable.Map.empty))
-      var rows = rows0
+      val acc = groups.getOrElseUpdate(key, new Acc)
       sc.entries(f).groups.foreach { g =>
-        rows += g.rows
-        // COUNT(c): per-group null proofs only (noNulls → 0, allNull →
-        // the whole group; anything unproven declines — the grouped
-        // fold has no per-file NDV fallback by design)
+        acc.rows += g.rows
         countCols.foreach { c =>
           if (g.noNulls.contains(c)) ()
-          else if (g.allNull.contains(c))
-            nullsAcc(c) = nullsAcc.getOrElse(c, 0L) + g.rows
-          else return None
+          else if (g.allNull.contains(c)) acc.nulls(c) = acc.nulls.getOrElse(c, 0L) + g.rows
+          else unprovenNulls += c
         }
         measureCols.foreach { c =>
-          if (!g.allNull.contains(c)) {
+          if (!g.allNull.contains(c)) { // provably all-null groups contribute nothing
             g.stats.get(c) match {
               case None => return None // no provable bound → decline
               case Some((mn, _)) if mn.isInstanceOf[String] && !sc.exact =>
-                return None // possibly truncated string stats
+                return None // possibly truncated string stats are bounds, not values
               case Some(v) =>
-                acc.get(c) match {
-                  case None => acc(c) = v
-                  case Some((curMn, curMx)) =>
-                    val newMn = if (SnapshotScan.cmpAny(v._1, curMn).exists(_ < 0)) v._1 else curMn
-                    val newMx = if (SnapshotScan.cmpAny(v._2, curMx).exists(_ > 0)) v._2 else curMx
-                    acc(c) = (newMn, newMx)
+                acc.minMax(c) = acc.minMax.get(c) match {
+                  case None => v
+                  case Some((curMn, curMx)) => (
+                    if (SnapshotScan.cmpAny(v._1, curMn).exists(_ < 0)) v._1 else curMn,
+                    if (SnapshotScan.cmpAny(v._2, curMx).exists(_ > 0)) v._2 else curMx)
                 }
             }
           }
         }
       }
-      groups(key) = (rows, acc, nullsAcc)
+    }
+    // nulls the row groups cannot prove: a global aggregate takes the
+    // NDV sidecar's EXACT per-file null counts (analyze-time, coverage-
+    // gated to the full file set); a grouped one declines
+    if (unprovenNulls.nonEmpty) {
+      if (groupCols.nonEmpty || m.ndvFile.isEmpty) return None
+      val est = graft.ops.NdvStats.estimates(spark, m.ndvFile, files)
+      unprovenNulls.foreach(c =>
+        groups(Nil).nulls(c) = est.get(c).map(_._2).getOrElse(return None))
     }
     val outFields =
       groupFields.map(gf => StructField(gf.name, gf.dataType)) ++
         specs.zipWithIndex.map {
-          case (SnapshotScan.CountStarSpec, i) =>
-            StructField(s"agg_$i", LongType, nullable = false)
-          case (SnapshotScan.CountColSpec(_), i) =>
-            StructField(s"agg_$i", LongType, nullable = false)
           case (SnapshotScan.MinMaxSpec(c, _), i) =>
             StructField(s"agg_$i", schema.find(_.name == c).get.dataType)
+          case (_, i) => StructField(s"agg_$i", LongType, nullable = false)
         }
     val rowsOut: Seq[Seq[Any]] = groups.toSeq.collect {
-      case (key, (n, acc, nullsAcc)) if n > 0 =>
+      case (key, acc) if groupCols.isEmpty || acc.rows > 0 =>
         key.map { case NullKey => null; case v => v } ++ specs.map {
-          case SnapshotScan.CountStarSpec   => n: Any
-          case SnapshotScan.CountColSpec(c) => (n - nullsAcc.getOrElse(c, 0L)): Any
-          case SnapshotScan.MinMaxSpec(c, mn2) =>
+          case SnapshotScan.CountStarSpec   => acc.rows: Any
+          case SnapshotScan.CountColSpec(c) => (acc.rows - acc.nulls.getOrElse(c, 0L)): Any
+          case SnapshotScan.MinMaxSpec(c, isMin) =>
             val dt = schema.find(_.name == c).get.dataType
-            acc.get(c).map(b => if (mn2) b._1 else b._2)
+            acc.minMax.get(c).map(b => if (isMin) b._1 else b._2)
               .map(v => SnapshotScan.toInternal(v, dt)).orNull
         }
     }
-    val desc = s"group by ${groupCols.mkString(",")}: " +
-      specs.map(_.describe).mkString(",")
+    val desc =
+      (if (groupCols.isEmpty) "" else s"group by ${groupCols.mkString(",")}: ") +
+        specs.map(_.describe).mkString(",")
     Some((StructType(outFields), rowsOut, desc))
   }
 
@@ -783,11 +681,6 @@ private[sources] final case class SnapshotAggPartition(rows: Seq[Seq[Any]]) exte
 private[sources] object SnapshotScan {
   /** Name of the file-path metadata column. */
   val FileCol = "_file"
-
-  /** Diagnostic: data-file FOOTER opens performed during driver-side
-    * planning (row-group resolution or aggregate folds). Sidecar-covered
-    * tables plan with ZERO footer opens — tests pin that invariant. */
-  val plannerFooterReads = new java.util.concurrent.atomic.AtomicLong
 
   /** Parse a runtime group-filter predicate into the `_file` value set
     * it admits: `IN(_file, v...)` or `=(_file, v)`. None for anything
@@ -1005,11 +898,6 @@ private[sources] object SnapshotScan {
   def dataLabel(m: SnapshotStore.Manifest): String =
     if (m.files.nonEmpty) s"[${m.files.size} manifest files]" else m.data
 
-  /** One parquet row group: byte range (midpoint-convention split
-    * boundaries), row count, and exact per-column (min, max). */
-  final case class RowGroupInfo(
-      start: Long, length: Long, rows: Long, stats: Map[String, (Any, Any)])
-
   /** One pushed aggregate expression the metadata fold can answer. */
   sealed trait AggSpec { def describe: String }
   case object CountStarSpec extends AggSpec { def describe = "count(*)" }
@@ -1028,212 +916,6 @@ private[sources] object SnapshotScan {
     case (n: Number, TimestampType | TimestampNTZType)   => java.lang.Long.valueOf(n.longValue())
     case (n: Number, IntegerType)                        => java.lang.Integer.valueOf(n.intValue())
     case (other, _)                                      => other
-  }
-
-  /** PROVEN total null count of `col` across every file of the
-    * manifest, or None. Two proof sources, in order:
-    *  1. the stats sidecar's per-group lines — `noNulls` proves 0,
-    *     `allNull` proves the whole group;
-    *  2. the NDV sidecar's EXACT per-file null counts (analyze-time
-    *     exact aggregation, coverage-gated to the full file set).
-    * A group in neither set with no NDV coverage → None (decline). */
-  def provenNullCount(m: SnapshotStore.Manifest, col: String): Option[Long] = {
-    val spark = SparkSession.active
-    val fromSidecar: Option[Long] =
-      if (m.statsFile.isEmpty) None
-      else try {
-        val sc = graft.store.FileStats.read(spark, m.statsFile)
-        val files = SnapshotStore.dataFiles(spark, m)
-        if (!files.forall(sc.entries.contains)) None
-        else {
-          var nulls = 0L
-          val ok = files.forall { f =>
-            sc.entries(f).groups.forall { g =>
-              if (g.noNulls.contains(col)) true
-              else if (g.allNull.contains(col)) { nulls += g.rows; true }
-              else false
-            }
-          }
-          if (ok) Some(nulls) else None
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    fromSidecar.orElse {
-      if (m.ndvFile.isEmpty) None
-      else graft.ops.NdvStats
-        .estimates(spark, m.ndvFile, SnapshotStore.dataFiles(spark, m))
-        .get(col).map(_._2)
-    }
-  }
-
-  /** Driver-side footer fold for pushed aggregates: total row count +
-    * exact (min, max) per requested column. None when exactness can't
-    * be PROVEN (a row group missing stats for a requested column, or
-    * non-numeric stats) — the caller then declines the pushdown and
-    * Spark runs the ordinary plan. Row groups whose column is entirely
-    * null contribute nothing (SQL min/max ignore nulls). */
-  def footerAggregates(
-      m: SnapshotStore.Manifest, cols: Seq[String]): Option[(Long, Map[String, (Any, Any)])] = {
-    val spark = SparkSession.active
-    // manifest-level fast path: when the sidecar covers every file, the
-    // whole aggregate folds from ONE small-file read — including the
-    // DECLINE decision (a sidecar gap on a requested column implies the
-    // footer sweep would decline for the same reason: no stats, NaN
-    // bounds, unsupported type, or unproven string exactness)
-    if (m.statsFile.nonEmpty) sidecarAggregates(spark, m, cols) match {
-      case Some(resolved) => return resolved
-      case None           => () // sidecar incomplete → footer sweep below
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = SnapshotStore.dataFiles(spark, m).map(new Path(_))
-    // per-file raw THRIFT footer parse, done lazily and only when a
-    // string aggregate needs the is_min/max_value_exact proof (the
-    // high-level parquet-mr Statistics API drops those flags)
-    val exactCache = scala.collection.mutable.Map.empty[Path, Map[(Int, String), (Boolean, Boolean)]]
-    def exactFlags(p: Path): Map[(Int, String), (Boolean, Boolean)] =
-      exactCache.getOrElseUpdate(p, readExactnessFlags(p, conf))
-    var rows = 0L
-    val acc = scala.collection.mutable.Map.empty[String, (Any, Any)]
-    files.foreach { f =>
-      plannerFooterReads.incrementAndGet()
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
-        rows += r.getRecordCount
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        cols.foreach { c =>
-          blocks.zipWithIndex.foreach { case (b, bIdx) =>
-            val cc = b.getColumns.asScala
-              .find(x => x.getPath.size == 1 && x.getPath.iterator().next() == c)
-              .getOrElse(return None)
-            val s = cc.getStatistics
-            if (s == null) return None
-            if (!s.hasNonNullValue) {
-              // provably all-null row group is fine; unknown is not
-              if (!(s.isNumNullsSet && s.getNumNulls == b.getRowCount)) return None
-            } else {
-              val v: (Any, Any) = (s.genericGetMin, s.genericGetMax) match {
-                case (mn: Number, mx: Number) =>
-                  // parquet-mr builds float/double stats via Math.min/max,
-                  // so a NaN anywhere in the row group poisons its bounds:
-                  // NaN-free bounds PROVE a NaN-free group, and a NaN bound
-                  // means footer min/max can't reproduce Spark's NaN
-                  // ordering — decline
-                  def isNaN(x: Number): Boolean = x match {
-                    case d: java.lang.Double => d.isNaN
-                    case f: java.lang.Float  => f.isNaN
-                    case _                   => false
-                  }
-                  if (isNaN(mn) || isNaN(mx)) return None
-                  (mn, mx)
-                case (mn: org.apache.parquet.io.api.Binary, mx: org.apache.parquet.io.api.Binary)
-                    if cc.getPrimitiveType.getLogicalTypeAnnotation != null &&
-                      cc.getPrimitiveType.getLogicalTypeAnnotation.toString == "STRING" =>
-                  // string stats may be writer-TRUNCATED (then min is a
-                  // lower bound and max an incremented upper bound, not
-                  // actual values). Two proofs of exactness: the
-                  // MANIFEST's stats=exact tag (recorded by the store's
-                  // own writers, which never truncate), or the thrift
-                  // footer's is_min/max_value_exact flags (written by
-                  // parquet-cpp; parquet-mr ≤1.16 never writes them).
-                  // Neither → decline and let the real plan run.
-                  if (m.statsExact) (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
-                  else exactFlags(f).get((bIdx, c)) match {
-                    case Some((true, true)) => (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
-                    case _                  => return None
-                  }
-                case _ => return None
-              }
-              acc.get(c) match {
-                case None => acc(c) = v
-                case Some((curMn, curMx)) =>
-                  val newMn = if (cmpAny(v._1, curMn).exists(_ < 0)) v._1 else curMn
-                  val newMx = if (cmpAny(v._2, curMx).exists(_ > 0)) v._2 else curMx
-                  acc(c) = (newMn, newMx)
-              }
-            }
-          }
-        }
-      } finally r.close()
-    }
-    Some((rows, acc.toMap))
-  }
-
-  /** Aggregate fold over the manifest's stats SIDECAR. Outer None =
-    * the sidecar doesn't cover every manifest file (fall back to the
-    * footer sweep); inner Option is the answer-or-decline, final. */
-  private def sidecarAggregates(
-      spark: SparkSession, m: SnapshotStore.Manifest, cols: Seq[String])
-      : Option[Option[(Long, Map[String, (Any, Any)])]] = {
-    val sc =
-      try graft.store.FileStats.read(spark, m.statsFile)
-      catch { case _: java.io.IOException => return None }
-    val files = SnapshotStore.dataFiles(spark, m)
-    if (files.isEmpty || !files.forall(sc.entries.contains)) return None
-    var rows = 0L
-    val acc = scala.collection.mutable.Map.empty[String, (Any, Any)]
-    files.foreach { f =>
-      sc.entries(f).groups.foreach { g =>
-        rows += g.rows
-        cols.foreach { c =>
-          if (!g.allNull.contains(c)) { // provably all-null groups contribute nothing
-            g.stats.get(c) match {
-              case None => return Some(None) // no provable bound → decline
-              case Some((mn, _)) if mn.isInstanceOf[String] && !sc.exact =>
-                return Some(None) // possibly truncated string stats are bounds, not values
-              case Some(v) =>
-                acc.get(c) match {
-                  case None => acc(c) = v
-                  case Some((curMn, curMx)) =>
-                    val newMn = if (cmpAny(v._1, curMn).exists(_ < 0)) v._1 else curMn
-                    val newMx = if (cmpAny(v._2, curMx).exists(_ > 0)) v._2 else curMx
-                    acc(c) = (newMn, newMx)
-                }
-            }
-          }
-        }
-      }
-    }
-    Some(Some((rows, acc.toMap)))
-  }
-
-  /** Raw thrift footer parse: per (row-group index, column name), the
-    * parquet-format `is_min_value_exact` / `is_max_value_exact` flags
-    * (absent → (false, false)). parquet-mr's converted Statistics drops
-    * these, so proving a string stat untruncated needs the wire form. */
-  private def readExactnessFlags(
-      p: Path, conf: Configuration): Map[(Int, String), (Boolean, Boolean)] = {
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    try {
-      in.seek(len - 8)
-      val tail = new Array[Byte](8)
-      in.readFully(tail)
-      require(tail(4) == 'P' && tail(5) == 'A' && tail(6) == 'R' && tail(7) == '1',
-        s"not a parquet file: $p")
-      val metaLen = java.nio.ByteBuffer.wrap(tail, 0, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-      in.seek(len - 8 - metaLen)
-      val fmd = org.apache.parquet.format.Util.readFileMetaData(in)
-      val out = scala.collection.mutable.Map.empty[(Int, String), (Boolean, Boolean)]
-      val rgs = fmd.getRow_groups
-      var i = 0
-      while (i < rgs.size()) {
-        val colIt = rgs.get(i).getColumns.iterator()
-        while (colIt.hasNext) {
-          val cc = colIt.next()
-          val md = cc.getMeta_data
-          if (md != null && md.getPath_in_schema != null && md.getPath_in_schema.size == 1 &&
-              md.getStatistics != null) {
-            val st = md.getStatistics
-            out((i, md.getPath_in_schema.get(0))) = (
-              st.isSetIs_min_value_exact && st.isIs_min_value_exact,
-              st.isSetIs_max_value_exact && st.isIs_max_value_exact)
-          }
-        }
-        i += 1
-      }
-      out.toMap
-    } finally in.close()
   }
 
   /** Filters usable for footer min/max file skipping: flat comparisons
@@ -1814,11 +1496,7 @@ private[sources] final class SnapshotScan(
     // file's footer unless the sidecar is missing that file (legacy
     // commits, foreign data). At the 100 TB shape this is the
     // difference between O(1) and O(files) remote round-trips per query.
-    val sidecar: Map[String, graft.store.FileStats.Entry] =
-      if (m.statsFile.isEmpty) Map.empty
-      else
-        try graft.store.FileStats.read(spark, m.statsFile).entries
-        catch { case _: java.io.IOException => Map.empty }
+    val stats = graft.store.FileStats.entries(spark, m, all).entries
     var total = 0
     // projected columns plus the DV keys the decoder probes
     val wanted = (physical.fieldNames.toSeq ++
@@ -1828,12 +1506,7 @@ private[sources] final class SnapshotScan(
     // carries the OLD physical name — the reader must request that)
     val aliasOf: Map[String, String] = graft.store.ColumnMapping.aliasOf(m)
     val kept = all.flatMap { fstr =>
-      val (blocks, fields) = sidecar.get(fstr) match {
-        case Some(e) =>
-          (e.groups.map(g => SnapshotScan.RowGroupInfo(g.start, g.length, g.rows, g.stats)),
-            e.fields)
-        case None => footerInfo(new Path(fstr))
-      }
+      val graft.store.FileStats.Entry(fields, blocks) = stats(fstr)
       def physOf(logical: String): Option[String] =
         if (fields(logical)) Some(logical)
         else m.renames.find(_._1 == logical).flatMap(_._2.find(fields))
@@ -1887,48 +1560,6 @@ private[sources] final class SnapshotScan(
         keptGroups.map(_.bucketId).distinct.size)
     else
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(keptGroups.size)
-
-  /** Per-ROW-GROUP (start, length, rows, per-column min/max) plus the
-    * file's top-level field names — one footer read serves skipping,
-    * splitting, AND the per-file rename binding. Stats stay exact:
-    * no cross-row-group merge exists anymore (skipping is per group),
-    * so there is no lossy envelope to get wrong. */
-  private def footerInfo(p: Path): (Seq[SnapshotScan.RowGroupInfo], Set[String]) = {
-    SnapshotScan.plannerFooterReads.incrementAndGet()
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, hadoopConf))
-    try {
-      val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
-        .map(_.getName).toSet
-      val blocks = r.getFooter.getBlocks.asScala.toSeq.map { b =>
-        val stats = b.getColumns.asScala.flatMap { c =>
-          val s = c.getStatistics
-          if (s == null || !s.hasNonNullValue || c.getPath.size != 1) None
-          else {
-            val col = c.getPath.iterator().next()
-            (s.genericGetMin, s.genericGetMax) match {
-              // NaN-poisoned float/double bounds (parquet-mr folds NaN
-              // through Math.min/max) would make EqualTo/LessThan wrongly
-              // exclude row groups holding matching real values — drop
-              // the column's stats for this group instead (keep = safe)
-              case (mn: java.lang.Double, _) if mn.isNaN => None
-              case (_, mx: java.lang.Double) if mx.isNaN => None
-              case (mn: java.lang.Float, _) if mn.isNaN => None
-              case (_, mx: java.lang.Float) if mx.isNaN => None
-              case (mn: Number, mx: Number) => Some(col -> (mn: Any, mx: Any))
-              case (mn: org.apache.parquet.io.api.Binary, mx: org.apache.parquet.io.api.Binary)
-                  if c.getPrimitiveType.getLogicalTypeAnnotation != null &&
-                    c.getPrimitiveType.getLogicalTypeAnnotation.toString == "STRING" =>
-                Some(col -> (mn.toStringUsingUTF8: Any, mx.toStringUsingUTF8: Any))
-              case _ => None
-            }
-          }
-        }.toMap
-        SnapshotScan.RowGroupInfo(
-          b.getStartingPos, b.getCompressedSize, b.getRowCount, stats)
-      }
-      (blocks, fields)
-    } finally r.close()
-  }
 
   /** DV application is per FILE SCOPE (see `SnapshotStore.dvClasses`):
     * files group into classes by which DVs cover them — one class (the
@@ -2102,19 +1733,15 @@ private[sources] final class SnapshotScan(
   /** Deletion-vector key types, resolved once from the table schema. */
   private lazy val dvKeyTypes: Seq[DataType] = SnapshotScan.keyTypesOf(fullSchema, m.keyCols)
 
-  /** Columnar batches ([[SnapshotBatchReader]]) require flat column
-    * types. With live deletion vectors, a batch with deleted rows is
-    * compacted, so every projected column must also be a type the
-    * compaction copies ([[SnapshotScan.dvColumnarType]]). Anything else
-    * reads rows ([[SnapshotRowReader]]) from the same decoder. Missing
-    * columns, exists-defaults and `_file` are the decoder's work and
-    * never decide the mode. */
+  /** Scans read columnar batches ([[SnapshotBatchReader]]), nested
+    * columns included, unless deletion vectors are live: a batch with
+    * deleted rows is compacted, so every projected column must then be
+    * a type the compaction copies ([[SnapshotScan.dvColumnarType]]).
+    * Such DV scans read rows ([[SnapshotRowReader]]) from the same
+    * decoder. Missing columns, exists-defaults and `_file` are the
+    * decoder's work and never decide the mode. */
   private lazy val columnar: Boolean =
-    physical.fields.forall(f => f.dataType match {
-      case _: StructType | _: ArrayType | _: MapType => false
-      case _                                         => true
-    }) &&
-      (m.deletes.isEmpty || physical.fields.forall(f => SnapshotScan.dvColumnarType(f.dataType)))
+    m.deletes.isEmpty || physical.fields.forall(f => SnapshotScan.dvColumnarType(f.dataType))
 
   override def description(): String = {
     val files = s"files=${keptGroups.map(_.file).distinct.size}/$totalFiles"

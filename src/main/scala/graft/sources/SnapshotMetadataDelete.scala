@@ -77,13 +77,10 @@ private[sources] object SnapshotMetadataDelete {
       m: SnapshotStore.Manifest,
       rawV1: Seq[Filter]): Option[(Seq[String], Seq[String], Seq[String])] = {
     val v1 = rawV1.map(normalizeDates)
-    if (m.statsFile.isEmpty) return None
-    val sc =
-      // ANY sidecar trouble (unreadable, corrupt, malformed lines)
-      // declines to the always-correct row-level plan — stats are an
-      // optimization, never a correctness gate
-      try FileStats.read(spark, m.statsFile)
-      catch { case scala.util.control.NonFatal(_) => return None }
+    // ANY sidecar trouble (absent, unreadable, corrupt) leaves it empty
+    // and declines to the always-correct row-level plan — stats are an
+    // optimization, never a correctness gate
+    val sc = FileStats.sidecar(spark, m)
     val files = SnapshotStore.dataFiles(spark, m)
     if (files.isEmpty || !files.forall(sc.entries.contains)) return None
     // EXISTS_DEFAULT columns (`ADD COLUMN ... DEFAULT`, round 15): the

@@ -175,9 +175,9 @@ private[sources] final class SnapshotRowLevelBatchWrite(
     // O(changed rows) for the commonest write shape (a few-row MERGE
     // into big files) instead of replaying each touched file twice.
     // Diff cost is O(touched files) at write time, charged once, here —
-    // never per consumer. Opt out with spark.graft.changes.rowLevel=false.
-    // map columns are not comparable (no exceptAll) — decline to the
-    // file-granular cow feed rather than fail the write
+    // never per consumer. Map columns are not comparable (no
+    // exceptAll) — decline to the file-granular cow feed rather than
+    // fail the write
     def comparable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case _: org.apache.spark.sql.types.MapType => false
       case s: StructType => s.fields.forall(f => comparable(f.dataType))
@@ -185,9 +185,7 @@ private[sources] final class SnapshotRowLevelBatchWrite(
       case _ => true
     }
     val rowChanges: String =
-      if (replaced.isEmpty ||
-          !spark.conf.get("spark.graft.changes.rowLevel", "true").toBoolean ||
-          !schema.fields.forall(f => comparable(f.dataType))) ""
+      if (replaced.isEmpty || !schema.fields.forall(f => comparable(f.dataType))) ""
       else {
         val rc = s"$tablePath/_rowchanges/c_${java.util.UUID.randomUUID.toString.take(8)}"
         val cols = schema.fieldNames.toSeq.map(org.apache.spark.sql.functions.col)

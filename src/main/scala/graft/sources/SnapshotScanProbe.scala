@@ -49,8 +49,10 @@ object SnapshotScanProbe {
       }
 
   /** Cumulative data-file footer opens performed by driver-side
-    * planning since JVM start (0 delta per query = sidecar-planned). */
-  def plannerFooterReads: Long = SnapshotScan.plannerFooterReads.get()
+    * planning since JVM start (0 delta per query = sidecar-planned);
+    * counted where [[graft.store.FileStats.entries]] harvests a file its
+    * sidecar lacks. */
+  def plannerFooterReads: Long = graft.store.FileStats.plannerFooterReads.get()
 
   /** Bloom filters deserialized on the DRIVER since JVM start (per
     * probed column, once — LRU-cached); the distributed probe path

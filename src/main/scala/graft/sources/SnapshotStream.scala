@@ -3,16 +3,12 @@ package graft.sources
 import graft.store.SnapshotStore
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-import scala.jdk.CollectionConverters._
 
 /** Change-feed streaming source over a [[SnapshotStore]] table — each
   * committed VERSION is one atomic micro-batch:
@@ -364,16 +360,13 @@ private[sources] final class SnapshotMicroBatchStream(
       m: SnapshotStore.Manifest, v: Long, files: Seq[String],
       changeType: String, dvClassOf: String => Int = _ => 0,
       dvVersion: Long = -1L): Seq[SnapshotStreamPartition] = {
+    val stats = graft.store.FileStats.entries(spark, m, files).entries
     files.flatMap { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-      try {
-        r.getFooter.getBlocks.asScala.toSeq.map { b =>
-          SnapshotStreamPartition(
-            SnapshotInputPartition(f, b.getStartingPos,
-              b.getCompressedSize, b.getRowCount, dvClass = dvClassOf(f)),
-            changeType = changeType, version = v, dvVersion = dvVersion)
-        }
-      } finally r.close()
+      stats(f).groups.map { g =>
+        SnapshotStreamPartition(
+          SnapshotInputPartition(f, g.start, g.length, g.rows, dvClass = dvClassOf(f)),
+          changeType = changeType, version = v, dvVersion = dvVersion)
+      }
     }
   }
 

@@ -31,9 +31,15 @@ import org.apache.spark.sql.SparkSession
   * predecessor sidecar's entries for inherited files at the TEXT level
   * (no re-parse, no footer re-read) and harvests only the newly staged
   * files; copy-on-write MERGE likewise harvests only its replacement
-  * files. A file missing from the sidecar is not an error — the
-  * planner falls back to that file's footer — so legacy commits and
-  * foreign-published data degrade gracefully instead of refusing.
+  * files. A file missing from the sidecar is not an error — [[entries]]
+  * harvests that file's footer at planning time — so legacy commits
+  * and foreign-published data degrade gracefully instead of refusing.
+  *
+  * This object is the only code that turns parquet footers into
+  * planning statistics: scan planning, the change feed's row-group
+  * listing, the exists-default presence check and the pushed
+  * aggregates all read [[Entry]] values from [[entries]], and callers
+  * that must never open a footer read [[sidecar]].
   *
   * Format (plain `k=v` lines like the commit markers — readable with
   * `cat`, no JSON dependency):
@@ -105,10 +111,14 @@ object FileStats {
 
   // ---- harvest: footer → serialized block, once per file, at commit --
 
-  /** Serialize one file's footer into its sidecar block. Mirrors the
-    * planner's own footer extraction exactly (same types, same NaN
-    * drop) so sidecar-planned and footer-planned scans can never
-    * disagree on a skipping decision. */
+  /** Serialize one file's footer into its sidecar block — the one
+    * trust rule for footer statistics: NaN-poisoned float/double
+    * bounds are dropped, binaries count only under the STRING
+    * annotation, all-null (`z=`) and null-free (`n=`) need the null
+    * count, and string bounds are values only when the sidecar is
+    * `exact`. Commits serialize it once; [[entries]] parses the same
+    * text for files a sidecar lacks, so sidecar-planned and
+    * footer-planned scans can never disagree. */
   private def harvestOne(conf: Configuration, file: String): String = {
     val sb = new StringBuilder()
     sb.append(s"f=$file\n")
@@ -161,17 +171,50 @@ object FileStats {
     math.min(8, Runtime.getRuntime.availableProcessors()),
     (r: Runnable) => { val t = new Thread(r, "stats-harvest"); t.setDaemon(true); t })
 
-  /** Harvest sidecar blocks for `files` in parallel; preserves order. */
-  def harvest(conf: Configuration, files: Seq[String]): Seq[String] = {
+  /** Harvest sidecar blocks for `files` in parallel; preserves order.
+    * A footer that cannot be read throws its own exception. */
+  private def harvest(conf: Configuration, files: Seq[String]): Seq[String] = {
     if (files.isEmpty) return Nil
     val futs = files.map(f =>
       harvestPool.submit(new java.util.concurrent.Callable[String] {
         override def call(): String = harvestOne(conf, f)
       }))
-    futs.map(_.get())
+    try futs.map(_.get())
+    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
   }
 
   // ---- sidecar IO -----------------------------------------------------
+
+  /** Data-file footer opens made by [[entries]] while planning (files
+    * no sidecar covers). Sidecar-covered tables plan with zero. */
+  val plannerFooterReads = new java.util.concurrent.atomic.AtomicLong
+
+  private val NoEntries = Sidecar(exact = true, Map.empty)
+
+  /** The manifest's stats sidecar, parsed; empty when the manifest has
+    * none or reading it fails in any way. Never opens a data-file
+    * footer — for callers that must prove from metadata alone. */
+  def sidecar(spark: SparkSession, m: SnapshotStore.Manifest): Sidecar =
+    if (m.statsFile.isEmpty) NoEntries
+    else
+      try read(spark, m.statsFile)
+      catch { case scala.util.control.NonFatal(_) => NoEntries }
+
+  /** Statistics for every file of `files`: the sidecar's entry where it
+    * covers the file, a footer harvest (on the commit-time pool) for
+    * the rest. String bounds stay exact only if the sidecar was and,
+    * when any footer was harvested, the manifest's writers were. */
+  def entries(spark: SparkSession, m: SnapshotStore.Manifest, files: Seq[String]): Sidecar = {
+    if (files.isEmpty) return NoEntries
+    val sc = sidecar(spark, m)
+    val missing = files.distinct.filterNot(sc.entries.contains)
+    if (missing.isEmpty) sc
+    else {
+      plannerFooterReads.addAndGet(missing.size.toLong)
+      val harvested = parse(harvest(spark.sparkContext.hadoopConfiguration, missing).mkString)
+      Sidecar(sc.exact && m.statsExact, sc.entries ++ harvested.entries)
+    }
+  }
 
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -220,7 +263,7 @@ object FileStats {
     * 256 entries (sidecars are per-version; vacuum retires old ones). */
   private val parseCache = TrieMap.empty[String, Sidecar]
 
-  def read(spark: SparkSession, sidecar: String): Sidecar =
+  private[graft] def read(spark: SparkSession, sidecar: String): Sidecar =
     parseCache.getOrElseUpdate(sidecar, {
       if (parseCache.size > 256) parseCache.clear()
       parse(readBlocksText(spark, sidecar))

@@ -392,19 +392,13 @@ object SnapshotStore {
     * (`ALTER TABLE ... ADD COLUMN ... DEFAULT`): files lacking the
     * column PHYSICALLY (written before the ALTER) read the recorded
     * default; files carrying it read stored values, explicit nulls
-    * included. Presence classification is sidecar-metadata only — a
-    * file absent from the sidecar opens one footer (legacy commits). */
+    * included. Presence classification reads [[FileStats.entries]] —
+    * the sidecar, or one footer for a file it lacks (legacy commits). */
   private def boundParquet(spark: SparkSession, m: Manifest, files: Seq[String]): DataFrame = {
     val reader = versionReader(spark, m)
     val defs = ColumnMapping.existsDefaults(m)
     if (defs.isEmpty || files.isEmpty) return reader.parquet(files: _*)
-    val sidecar: Map[String, FileStats.Entry] =
-      if (m.statsFile.isEmpty) Map.empty
-      else
-        try FileStats.read(spark, m.statsFile).entries
-        catch { case _: java.io.IOException => Map.empty }
-    def fieldsOf(f: String): Set[String] = sidecar.get(f).map(_.fields)
-      .getOrElse(spark.read.parquet(f).schema.fieldNames.toSet)
+    val stats = FileStats.entries(spark, m, files).entries
     // A file "carries" a defaulted column when it holds the logical
     // name OR any rename alias of it (ADD COLUMN c DEFAULT, inserts,
     // then RENAME c TO c2: the values live under the OLD physical
@@ -415,7 +409,7 @@ object SnapshotStore {
       have(n) || m.renames.collectFirst { case (l, as) if l == n => as }
         .exists(_.exists(have))
     val groups: Map[Set[String], Seq[String]] = files.groupBy { f =>
-      val have = fieldsOf(f)
+      val have = stats(f).fields
       defs.collect { case (n, _, _) if !carries(have, n) => n }.toSet
     }
     groups.map { case (missing, fs2) =>

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * footers (one sidecar read per version instead of one remote round
   * trip per file — the O(1)-vs-O(files) planning difference at the
   * 100 TB file count). Pins: sidecar coverage and copy-forward, the
-  * zero-footer planning invariant, skip parity with footer planning,
-  * sidecar-served pushed aggregates, vacuum lifecycle, mirroring. */
+  * zero-footer planning invariant, skip and pushed-aggregate parity
+  * with footer planning, sidecar-served pushed aggregates, vacuum
+  * lifecycle, and that FileStats is the only footer reader. */
 class FileStatsSpec extends SparkSuite {
 
   import spark.implicits._
@@ -22,11 +23,24 @@ class FileStatsSpec extends SparkSuite {
   private def load(table: String): DataFrame =
     spark.read.format("graft-snapshot").option("path", table).load()
 
+  /** Drop the `statsfile=` line from version `v`'s commit marker, so
+    * that version plans from data-file footers. */
+  private def stripStats(table: String, v: Long): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$table/_commits/$v")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(marker)
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val out = fs.create(marker, true) // through the fs API so checksums stay valid
+    try out.write(text.linesIterator.filterNot(_.startsWith("statsfile="))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
   /** Footer opens performed while `body` plans + runs. */
   private def footerOpens(body: => Unit): Long = {
-    val before = SnapshotScan.plannerFooterReads.get()
+    val before = SnapshotScanProbe.plannerFooterReads
     body
-    SnapshotScan.plannerFooterReads.get() - before
+    SnapshotScanProbe.plannerFooterReads - before
   }
 
   test("commit writes a sidecar covering every file; delete carries it forward") {
@@ -68,8 +82,28 @@ class FileStatsSpec extends SparkSuite {
 
   test("sidecar-covered planning opens ZERO footers; skipping parity with footer planning") {
     val t = freshTable("fstats-plan")
-    SnapshotStore.commit(spark.range(0, 10).toDF("id").coalesce(1), t)
-    SnapshotStore.appendCommit(spark.range(1000, 1010).toDF("id").coalesce(1), t)
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+      .selectExpr("id", "concat('n', id) AS name", "IF(id % 3 = 0, NULL, id) AS opt")
+      .coalesce(1)
+    SnapshotStore.commit(rows(0, 10), t)
+    SnapshotStore.appendCommit(rows(1000, 1010), t)
+    // global COUNT(*), COUNT(col) and numeric and string MIN/MAX: one
+    // pushed aggregate, its answer, and the footers it opened
+    def pushedAgg(): (String, org.apache.spark.sql.Row, Long) = {
+      var desc: String = null
+      var row: org.apache.spark.sql.Row = null
+      val opens = footerOpens {
+        val q = load(t).agg(count(lit(1)), count(col("id")), min("id"), max("id"),
+          min("name"), max("name"))
+        desc = SnapshotScanProbe.scans(q).head.description
+        row = q.collect().head
+      }
+      (desc, row, opens)
+    }
+    val (aggDesc, aggRow, aggOpens) = pushedAgg()
+    assert(aggDesc.contains("FOOTER AGGREGATE"), s"aggregate not pushed: $aggDesc")
+    assert(aggOpens === 0L, s"sidecar aggregate opened $aggOpens footers")
+    assert(aggRow === org.apache.spark.sql.Row(20L, 20L, 0L, 1009L, "n0", "n9"))
 
     var got: Array[Long] = null
     var desc: String = null
@@ -84,14 +118,7 @@ class FileStatsSpec extends SparkSuite {
 
     // strip the statsfile line from the head marker → same query plans
     // from footers, pays one open per file, and skips IDENTICALLY
-    val marker = new org.apache.hadoop.fs.Path(s"$t/_commits/1")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(marker)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val out = fs.create(marker, true) // through the fs API so checksums stay valid
-    try out.write(text.linesIterator.filterNot(_.startsWith("statsfile="))
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+    stripStats(t, 1L)
     var got2: Array[Long] = null
     var desc2: String = null
     val opens2 = footerOpens {
@@ -102,6 +129,61 @@ class FileStatsSpec extends SparkSuite {
     assert(opens2 === 2L, s"footer fallback should open one footer per file, got $opens2")
     assert(got2.toSeq === got.toSeq)
     assert(desc2.contains("rowGroups=1/2"), s"footer planning skipped differently: $desc2")
+
+    // the pushed aggregate folds the harvested footers to the same answer
+    val (aggDesc2, aggRow2, aggOpens2) = pushedAgg()
+    assert(aggDesc2.contains("FOOTER AGGREGATE"), s"footer aggregate not pushed: $aggDesc2")
+    assert(aggOpens2 === 2L, s"footer aggregate should open one footer per file, got $aggOpens2")
+    assert(aggRow2 === aggRow)
+    // COUNT(col) over mixed-null groups has no null proof either way
+    val mixed = load(t).agg(count(col("opt")))
+    assert(!SnapshotScanProbe.scans(mixed).head.description.contains("FOOTER AGGREGATE"))
+    assert(mixed.collect().head.getLong(0) === 13L)
+  }
+
+  test("a GROUP BY rollup folds from harvested footers like from the sidecar") {
+    val t = freshTable("fstats-groupby")
+    val nation = graft.sources.Tables.nation(spark, sf())
+    SnapshotStore.partitionedCommit(
+      nation, t, Seq(graft.store.PartitionSpec.PartField("identity", "n_regionkey")))
+    def rollup(): (String, Seq[String], Long) = {
+      var desc: String = null
+      var got: Seq[String] = null
+      val opens = footerOpens {
+        val q = load(t).groupBy("n_regionkey").agg(count(lit(1)), count(col("n_name")),
+          min("n_nationkey"), max("n_nationkey"), min("n_name"), max("n_name"))
+        desc = SnapshotScanProbe.scans(q).head.description
+        got = q.collect().map(_.toString).sorted.toSeq
+      }
+      (desc, got, opens)
+    }
+    val (desc, got, opens) = rollup()
+    assert(desc.contains("FOOTER AGGREGATE [group by n_regionkey"), s"rollup not pushed: $desc")
+    assert(opens === 0L, s"sidecar rollup opened $opens footers")
+    assert(got === nation.groupBy("n_regionkey").agg(count(lit(1)), count(col("n_name")),
+      min("n_nationkey"), max("n_nationkey"), min("n_name"), max("n_name"))
+      .collect().map(_.toString).sorted.toSeq)
+
+    stripStats(t, 0L)
+    val nFiles = SnapshotStore.dataFiles(spark, SnapshotStore.manifest(spark, t, 0L)).size
+    val (desc2, got2, opens2) = rollup()
+    assert(desc2.contains("FOOTER AGGREGATE [group by n_regionkey"),
+      s"footer rollup not pushed: $desc2")
+    assert(opens2 === nFiles.toLong, s"footer rollup should open one footer per file, got $opens2")
+    assert(got2 === got)
+  }
+
+  test("only graft/store/FileStats.scala reads parquet footers in src/main") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val offenders = scalaFiles(root).filterNot(_.getPath.endsWith("graft/store/FileStats.scala"))
+      .filter { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        text.contains("ParquetFileReader") || text.contains("org.apache.parquet.format")
+      }
+    assert(offenders.isEmpty, s"footer readers outside FileStats: ${offenders.mkString(", ")}")
   }
 
   test("pushed aggregates fold from the sidecar: numeric and string, zero footer opens") {

@@ -226,8 +226,8 @@ class SnapshotDsv2Spec extends SparkSuite {
 
   test("string MIN/MAX pushes down only when footer stats are provably exact") {
     val orders = graft.sources.Tables.orders(spark, sf())
-    // engine-written snapshot: parquet-mr writes untruncated stats and
-    // SETS is_min/max_value_exact — the aggregate answers from footers
+    // engine-written snapshot: its sidecar records untruncated stats
+    // (`x=1`) — the aggregate answers from metadata
     val table = freshTable("dsv2-stragg")
     SnapshotStore.commit(orders.repartition(3), table)
     val q = load(table).agg(
@@ -241,8 +241,9 @@ class SnapshotDsv2Spec extends SparkSuite {
       min(col("o_orderpriority")), max(col("o_orderpriority")), count(lit(1))).collect()(0)
     assert(r === expect, s"string footer aggregate diverged: $r vs $expect")
 
-    // TRUNCATED stats (writer configured a truncate length): the flags
-    // read false/absent → decline, real plan answers
+    // TRUNCATED stats (writer configured a truncate length), published
+    // without a sidecar or the manifest's stats=exact tag: nothing
+    // proves the bounds are values → decline, real plan answers
     val tTrunc = freshTable("dsv2-strtrunc")
     val dataDir = s"$tTrunc/v=0"
     orders.select(col("o_orderkey"), col("o_orderpriority"))
@@ -725,7 +726,16 @@ class SnapshotDsv2Spec extends SparkSuite {
     assert(got.collect().toSet === expect.collect().toSet,
       "compacted batches must carry exact values, null strings included")
 
-    // a non-atomic column (array) keeps the scan correct on the row path
+    // without DVs, nested columns (array, struct) read as batches too
+    val nested = freshTable("dsv2-nested")
+    SnapshotStore.commit(spark.range(0, 1000).selectExpr("id",
+      "array(id, id + 1) AS xs", "named_struct('a', id, 'b', concat('s-', id)) AS st"), nested)
+    val nestedRead = load(nested)
+    assert(SnapshotScanProbe.scans(nestedRead).head.description.contains("vectorized"),
+      s"a no-DV nested scan should read batches: ${SnapshotScanProbe.scans(nestedRead).head.description}")
+    assert(nestedRead.collect().toSet === SnapshotStore.read(spark, nested).collect().toSet)
+
+    // with DVs, a non-atomic column (array) keeps the scan correct on the row path
     val arrTable = freshTable("dsv2-dvarr")
     SnapshotStore.commit(
       spark.range(0, 1000).selectExpr("id", "array(id, id + 1) AS xs"), arrTable)

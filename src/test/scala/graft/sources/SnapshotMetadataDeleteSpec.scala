@@ -38,7 +38,7 @@ class SnapshotMetadataDeleteSpec extends SparkSuite {
       val before = headManifest(table)
       assert(before.files.size === 4)
 
-      val footers0 = SnapshotScan.plannerFooterReads.get()
+      val footers0 = SnapshotScanProbe.plannerFooterReads
       spark.sql(s"DELETE FROM $cat.facts.orders WHERE o_orderkey >= $cut")
 
       val after = headManifest(table)
@@ -47,7 +47,7 @@ class SnapshotMetadataDeleteSpec extends SparkSuite {
       assert(after.files.toSet.subsetOf(before.files.toSet),
         "a metadata delete must only DROP files, never stage new ones")
       assert(after.files.size === 2)
-      assert(SnapshotScan.plannerFooterReads.get() === footers0,
+      assert(SnapshotScanProbe.plannerFooterReads === footers0,
         "metadata delete must not open any data-file footer")
 
       val got = spark.sql(s"SELECT count(*) c, sum(o_orderkey) s FROM $cat.facts.orders").head()

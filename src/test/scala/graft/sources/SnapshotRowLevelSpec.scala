@@ -275,16 +275,6 @@ class SnapshotRowLevelSpec extends SparkSuite {
         .option("changeFeed", "true").option("startingVersion", "2").load().collect()
       assert(feed2.isEmpty,
         s"a no-op rewrite changed zero rows — the feed must say so: ${feed2.length} rows")
-
-      // opt-out restores the file-granular replay
-      spark.conf.set("spark.graft.changes.rowLevel", "false")
-      try {
-        spark.sql(s"UPDATE $cat.facts.kv SET v = v + 1 WHERE k = 3")
-        assert(SnapshotStore.manifest(spark, t, 3L).rowChanges.isEmpty)
-        val feed3 = spark.read.format("graft-snapshot").option("path", t)
-          .option("changeFeed", "true").option("startingVersion", "3").load().collect()
-        assert(feed3.length > 2, "file-granular fallback replays the touched file both ways")
-      } finally spark.conf.unset("spark.graft.changes.rowLevel")
     }
   }
 
